@@ -107,7 +107,7 @@ def cusum(
         # the recursion is data-dependent (clamp at 0, reset on alarm)
         # so it stays a scalar loop — but over raw float64s, which is
         # several times faster than Series iteration at 100 TB row
-        # counts (tools/scale_probe.py)
+        # counts (docs/scale.md "Re-measuring")
         out_p = np.empty(n)
         out_m = np.empty(n)
         out_a = np.empty(n, dtype="int32")

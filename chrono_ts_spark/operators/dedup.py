@@ -27,6 +27,8 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..planinfo import analyzed_plan
+
 MERSENNE = (1 << 61) - 1
 
 
@@ -71,12 +73,12 @@ _SCAN_ONLY_NODES = ("Project", "Filter", "Relation", "SubqueryAlias")
 def _is_scan_only(df: DataFrame) -> bool:
     """True iff the analyzed logical plan is a pure scan pipeline
     (projections/filters over a relation). String-walks the ANALYZED
-    plan — analysis runs no optimizer and launches no jobs."""
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
+    plan as EXPLAIN prints it, which plans but launches no jobs."""
+    # the section opens with the output schema line; the tree follows
+    plan = analyzed_plan(df).strip().splitlines()[1:]
+    if not plan:
         return False
-    for line in plan.splitlines():
+    for line in plan:
         node = line.lstrip(" +-:").split(" ", 1)[0].split("[", 1)[0]
         if node and not any(node.startswith(p) for p in _SCAN_ONLY_NODES):
             return False
@@ -242,7 +244,6 @@ def minhash_lsh_candidates(
     bands: int = 16,
     shingle_k: int = 5,
     seed: int = 42,
-    materialize: bool = False,
     portable: bool = False,
     size_hint: int | None = None,
     max_shingle_df: int | None = None,
@@ -265,17 +266,6 @@ def minhash_lsh_candidates(
     exact SQL equivalent, so the whole candidate set (and est_jaccard)
     is DuckDB-oracle-able (doc_minhash_md5). Same algorithm, same
     affine family, same banding; only the base hash differs.
-
-    materialize: since the r7 alias-self-join rewrite, both join
-    branches read ONE explicitly-repartitioned child plan and AQE's
-    runtime exchange reuse already computes the signature pipeline
-    once. materialize=True additionally persists that banded table
-    (MEMORY_AND_DISK) — belt over AQE's braces for very large corpora
-    or engines without adaptive execution; it defaults to False
-    because at bench scale cache write + scheduling overhead exceed
-    the saving (BASELINE.md crossover guidance). The persisted table
-    lives until the caller's session drops it
-    (spark.catalog.clearCache() or .unpersist()).
 
     size_hint: approximate row count of ``df``, used only to decide
     whether to pin the self-join strategy (see the spill-safety gate
@@ -316,8 +306,8 @@ def minhash_lsh_candidates(
       probe GCLocker-failed an 8g JVM under MEMORY_AND_DISK; the
       table is read once, sequentially, so disk costs only seconds)
       across the df pass and the signature pass so that scan is paid
-      once, not twice; like ``materialize``, the cached table lives
-      until the caller's session drops it (``.unpersist()`` /
+      once, not twice; the cached table lives until the caller's
+      session drops it (``.unpersist()`` /
       ``spark.catalog.clearCache()``).
     - The cap applies in BOTH hash modes, portable included — the
       capped shingle universe is what est_jaccard is estimated over,
@@ -449,14 +439,8 @@ def minhash_lsh_candidates(
     # sides already share the band partitioning). Same shuffle count
     # as the old differently-projected form, half the signature
     # compute; measured ~7% on the sf0.1 solo number and strictly
-    # better at cluster scale. materialize=True additionally pins the
-    # banded table across retries/stage reuse (belt over AQE's
-    # braces) for very large corpora.
+    # better at cluster scale.
     banded = banded.repartition("band_id", "band_hash")
-    if materialize:
-        from pyspark import StorageLevel
-
-        banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
     a = banded.alias("a")
     # Spill-safety gate for LARGE corpora only: Catalyst has no size
     # statistics for the Arrow signature node, and left alone at 200k

@@ -68,8 +68,9 @@ def _pq_partial_sums_fn(codebook: np.ndarray, dims: int, vec_col: str):
     (m, c, pos, val) triples. Quantization/ulp contract and the
     decimal(38,0)+Fraction driver merge are shared with the IVF
     rewrite — see _ivf_partial_sums_fn's docstring; the 8M IVF probe
-    hashed bit-identical to the decimal(18,9) path, and
-    tools/ann_scale_probe.py pqfit records the same check here.
+    hashed bit-identical to the decimal(18,9) path, and the r14 PQ
+    fit probe recorded the same check here (docs/scale.md
+    "Re-measuring").
     """
     cb = codebook.copy()
     m_sub, k, sub = cb.shape

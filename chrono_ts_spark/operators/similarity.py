@@ -183,7 +183,7 @@ def _collect_probes(
     last via a NULL cosine. Duplicate probe ids (which would merge
     distinct probes' candidate sets) raise here with a clear error.
 
-    r14 bench_ab find: the first fix rebuilt the probe DataFrame from
+    r14 interleaved-A/B find: the first fix rebuilt the probe DataFrame from
     the collected rows and kept the bucket pandas UDF on it — but
     createDataFrame spreads even 10 rows across defaultParallelism
     partitions, so the probe-side UDF cold-started one Python worker
@@ -287,7 +287,7 @@ def lsh_bucket_topk(
     # math (same planes/weights arrays; float32@float64 promotes to
     # float64 before BLAS, so signs match the corpus-side fused pass
     # bit-for-bit) and shipped as a literal int table — see
-    # _collect_probes for why no probe-side UDF (r14 bench_ab find).
+    # _collect_probes for why no probe-side UDF (r14 A/B find).
     planes = np.vstack(
         [_hyperplanes(dims, n_planes, seed + 1000 * t) for t in range(n_tables)]
     ).astype(np.float64)
@@ -415,7 +415,8 @@ def _ivf_partial_sums_fn(centroids: np.ndarray, dims: int, vec_col: str):
     The two disagree only for doubles whose shortest repr and binary
     value round differently at the 9th decimal — no hit observed
     across the 2×512M-coordinate 8M fit probe (centroid md5s match
-    the legacy path bit-for-bit; tools/ann_scale_probe.py fit). The
+    the legacy path bit-for-bit; re-measure with tools/probe.py, see
+    docs/scale.md "Re-measuring"). The
     driver-side merge keeps the summed partials as decimal(38,0) and
     converts via Fraction — int64→double→/1e9 would round twice once
     cluster sums pass 2^53 (~8M rows/cluster), which moved 3 of 1024
@@ -592,7 +593,7 @@ def ivf_topk(
     # Probe cell routing computed DRIVER-SIDE with the exact
     # _assign_udf math (same normalization/argsort ops on the same
     # float64 values) and shipped as a literal int table — see
-    # _collect_probes for why no probe-side UDF (r14 bench_ab find).
+    # _collect_probes for why no probe-side UDF (r14 A/B find).
     cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
     unit = probe_mat / np.maximum(
         np.linalg.norm(probe_mat, axis=1, keepdims=True), 1e-12

@@ -103,7 +103,7 @@ _MODULES = [
 # 800x probe caught the thrice-run shared subtree — same-commit
 # front-load); and emb_ann_lsh + emb_recall_eval (r13 witnesses, but
 # late-r14 moved the LSH/IVF probe-side bucketing driver-side after
-# bench_ab caught the createDataFrame empty-partition Python-worker
+# the r14 A/B caught the createDataFrame empty-partition Python-worker
 # storm — same-commit front-load). io_json_scan, io_partitioned_sink,
 # io_csv_scan, rel_window_values and sf_map_funcs displace to the
 # r15 ladder to make room.

@@ -325,11 +325,6 @@ def doc_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns pairs with est_jaccard (signature agreement) and exact
     jaccard, filtered to exact >= 0.5.
 
-    SPARK_GRAFT_MINHASH_MATERIALIZE=1 persists the banded signature
-    table so the signature pipeline runs once instead of per self-join
-    branch — the cluster-scale setting (see operators/dedup.py and
-    BASELINE.md crossover guidance); default recompute wins locally.
-
     SPARK_GRAFT_MINHASH_MAX_DF sets the hot-shingle document-frequency
     cap (r11, operators/dedup.py max_shingle_df): an integer for an
     explicit cap, or "auto" for recommended_shingle_df_cap(n_docs) —
@@ -371,7 +366,6 @@ def doc_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_df = None
     cands = minhash_lsh_candidates(
         d, "doc_id", "text", num_perm=64, bands=16, shingle_k=5,
-        materialize=os.environ.get("SPARK_GRAFT_MINHASH_MATERIALIZE") == "1",
         max_shingle_df=max_df,
     )
     verified = exact_jaccard_pairs(d, cands, "doc_id", "text", shingle_k=5)
@@ -1494,7 +1488,7 @@ def doc_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero shuffles (the r5 form exploded ~3L gram rows per doc through
     two hash aggregations, and the interpreted struct-array HOF build
     dominated: 17.3 s → 6.9 s at 200k docs, bit-identical output —
-    tools/scale_probe.py). The sanctioned-boundary rules apply
+    docs/scale.md "Re-measuring"). The sanctioned-boundary rules apply
     (CUSUM/EMA precedent): Counter arithmetic per doc, fractions are
     single IEEE divisions of exact ints, tokenization replays
     tokenize() exactly (ASCII \\s+ split of lowered text, empties

@@ -1076,8 +1076,8 @@ def emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is in the same sorted order the old prune produced, the float64
     # matrix is built from the same float32 values, and the drop rule
     # is unchanged — pinned against the two-stage reconstruction in
-    # tests/test_r15_semdedup_fused.py and A/B'd at 8M in
-    # tools/ann_scale_probe.py (variant 'two_stage').
+    # tests/test_r15_semdedup_fused.py and A/B'd at 8M against the
+    # r14 commit (docs/scale.md "Re-measuring").
     from ..operators.clustering import (
         assign_euclid_udf,
         ceil_root,

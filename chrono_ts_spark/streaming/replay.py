@@ -45,6 +45,27 @@ def _observed_events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     return observed_schema(spark, f"{sf_dir.rstrip('/')}/events.parquet")
 
 
+def _replay_source(spark: SparkSession, sf_dir: str) -> tuple[str, T.StructType]:
+    """The replayed files' glob (SPARK_GRAFT_REPLAY_GLOB, default
+    ``events.parquet``) and their observed schema."""
+    apply_runtime_confs(spark)
+    glob_pat = os.environ.get("SPARK_GRAFT_REPLAY_GLOB", "events.parquet")
+    if glob_pat == "events.parquet":
+        return glob_pat, _observed_events_schema(spark, sf_dir)
+    import glob as _glob
+
+    from ..catalog import observed_schema
+
+    base = sf_dir.rstrip("/")
+    matches = sorted(_glob.glob(os.path.join(base, glob_pat)))
+    if not matches:
+        raise FileNotFoundError(
+            f"SPARK_GRAFT_REPLAY_GLOB={glob_pat!r} matches nothing "
+            f"under {base}"
+        )
+    return glob_pat, observed_schema(spark, matches[0])
+
+
 def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DataFrame replaying <sf_dir>/events.parquet, with
     ``ts`` normalized to TIMESTAMP regardless of the fixture encoding.
@@ -58,23 +79,8 @@ def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     per micro-batch and the watermark actually advances — the
     bounded-state deployment shape the r12/r13 60M probes measure
     (docs/scale.md stream-stream join state retention)."""
-    apply_runtime_confs(spark)
     base = sf_dir.rstrip("/")
-    glob_pat = os.environ.get("SPARK_GRAFT_REPLAY_GLOB", "events.parquet")
-    if glob_pat == "events.parquet":
-        raw_schema = _observed_events_schema(spark, sf_dir)
-    else:
-        import glob as _glob
-
-        from ..catalog import observed_schema
-
-        matches = sorted(_glob.glob(os.path.join(base, glob_pat)))
-        if not matches:
-            raise FileNotFoundError(
-                f"SPARK_GRAFT_REPLAY_GLOB={glob_pat!r} matches nothing "
-                f"under {base}"
-            )
-        raw_schema = observed_schema(spark, matches[0])
+    glob_pat, raw_schema = _replay_source(spark, sf_dir)
     raw = (
         spark.readStream.format("parquet")
         .schema(raw_schema)
@@ -108,7 +114,7 @@ def assert_single_file_replay(sf_dir: str) -> None:
     glob_env = os.environ.get("SPARK_GRAFT_REPLAY_GLOB", "events.parquet")
     if glob_env != "events.parquet":
         # The env var reroutes replay to sliced part files (multi-batch
-        # posture, e.g. after a stream_probe --sliced run in the same
+        # posture, e.g. after probing a sliced corpus in the same
         # shell) — the single-micro-batch premise is gone even when
         # events.parquet itself is a single regular file, so the
         # watermark could drop rows. Surface it HERE as the loud error
@@ -333,10 +339,12 @@ def run_stream_static_enrich(
     r9 finding); pass ``sink_dir`` for the production parquet path —
     append semantics are identical here (stateless join, every row
     emits immediately)."""
-    from ..catalog import load_table
-
+    # the static side reads exactly the files the replay streams
+    glob_pat, raw_schema = _replay_source(spark, sf_dir)
     static = (
-        load_table(spark, sf_dir, "events")
+        spark.read.schema(raw_schema)
+        .option("pathGlobFilter", glob_pat)
+        .parquet(sf_dir.rstrip("/"))
         .select("user_id")
         .distinct()
         .withColumn(

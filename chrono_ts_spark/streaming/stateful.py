@@ -955,8 +955,9 @@ def run_cusum_stream(
     INPUT EVENT (the monitored statistic, alarm flagged), so its output
     is data-proportional — the stream_ema memory-sink OOM class the r11
     30M probe established. The r11 sink_dir sweep missed this runner
-    (it was never probed past fixture scale); tools/stream_probe.py's
-    first smoke run caught it via the rows==input count."""
+    (it was never probed past fixture scale); the r11 streaming
+    probe's first smoke run caught it via the rows==input count
+    (docs/scale.md "Re-measuring")."""
     ev = replay_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     out = ev.groupBy("user_id").applyInPandasWithState(
         cusum_update_fn(mu, sigma, k_sigma, h_sigma),

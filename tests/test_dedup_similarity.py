@@ -133,19 +133,6 @@ class TestMinhashLSH:
         for r in out:
             assert r.jaccard == pytest.approx(py_jaccard(text[r.id_a], text[r.id_b]))
 
-    def test_materialize_identical_pairs(self, spark, corpus):
-        # persist-the-banded-table mode must be a pure execution-strategy
-        # change: candidate pairs and estimates bit-identical.
-        df = spark.createDataFrame(corpus, "doc_id long, text string")
-        base = minhash_lsh_candidates(df, "doc_id", "text", 64, 16, 5)
-        mat = minhash_lsh_candidates(
-            df, "doc_id", "text", 64, 16, 5, materialize=True
-        )
-        a = sorted((r.id_a, r.id_b, r.est_jaccard) for r in base.collect())
-        b = sorted((r.id_a, r.id_b, r.est_jaccard) for r in mat.collect())
-        spark.catalog.clearCache()
-        assert a == b and a
-
     def test_portable_mode_planted_near_dups(self, spark, corpus):
         # r7 oracle twin: the md5 portable mode must find the planted
         # pairs too, and est_jaccard stays a k/64 dyadic in [0, 1]

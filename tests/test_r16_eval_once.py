@@ -23,11 +23,12 @@ from pyspark.sql import functions as F
 
 from chrono_ts_spark.functions import eval_once
 from chrono_ts_spark.operators.textfns import quality_score
+from chrono_ts_spark.planinfo import explain_text
 from tests.conftest import SF_SMOKE
 
 
 def _physical_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+    return explain_text(df, "simple")
 
 
 class TestEvalOnceIdentity:
@@ -42,11 +43,13 @@ class TestEvalOnceIdentity:
         from chrono_ts_spark.catalog import load_table
 
         d = load_table(spark, SF_SMOKE, "documents")
-        plain = d.select(quality_score(F.col("text")).alias("q")).collect()
+        plain = d.select("doc_id", quality_score(F.col("text")).alias("q"))
         barred = d.select(
-            eval_once(quality_score(F.col("text"))).alias("q")
-        ).collect()
-        assert [r.q for r in plain] == [r.q for r in barred]
+            "doc_id", eval_once(quality_score(F.col("text"))).alias("q")
+        )
+        assert sorted(map(tuple, plain.collect())) == sorted(
+            map(tuple, barred.collect())
+        )
 
 
 class TestEvalOncePlanShape:

@@ -201,8 +201,8 @@ class TestSingleFileReplayGuard:
     def test_replay_glob_env_fails_loudly(self, monkeypatch):
         # SPARK_GRAFT_REPLAY_GLOB reroutes replay to sliced part files
         # (multi-batch posture) even when events.parquet is a single
-        # regular file — a leaked env var (e.g. after a stream_probe
-        # --sliced run in the same shell) must trip THIS guard, not
+        # regular file — a leaked env var (e.g. after probing a sliced
+        # corpus in the same shell) must trip THIS guard, not
         # surface as an oracle hash mismatch (ADVICE r13).
         from chrono_ts_spark.streaming.replay import assert_single_file_replay
 
@@ -299,7 +299,7 @@ class TestParquetSinkRunner:
         assert mem == pq
 
     def test_cusum_parquet_sink_equals_memory_sink(self, spark, tmp_path):
-        # r11 (stream_probe smoke find): CUSUM emits one row per input
+        # r11 (streaming-probe smoke find): CUSUM emits one row per input
         # event — same data-proportional class as EMA/Holt/Kalman — so
         # it carries the same production sink_dir path; both sinks must
         # agree row-for-row at fixture scale.

@@ -619,10 +619,10 @@ def test_replay_glob_sliced_equals_single_file(spark, tmp_path, monkeypatch):
     fixture as N time-sliced, mtime-ordered files — one micro-batch per
     slice, so the watermark actually advances between batches — must
     produce exactly the single-micro-batch output. Pins the knob that
-    the 60M state-retention probes (tools/stream_probe.py --sliced)
-    run production posture through."""
+    the 60M state-retention probes (sliced corpora, docs/scale.md
+    "Re-measuring") run production posture through."""
     from chrono_ts_spark.streaming.stateful import run_ema_stream
-    from tools.ss_join_state_probe import build_sliced_events
+    from tools.probe import build_sliced_events
 
     sliced_dir = str(tmp_path / "sliced")
     build_sliced_events(
@@ -637,3 +637,21 @@ def test_replay_glob_sliced_equals_single_file(spark, tmp_path, monkeypatch):
         run_ema_stream(spark, sliced_dir), ["event_id", "user_id", "ema"]
     )
     assert sliced == single
+
+
+def test_static_enrich_sliced_equals_single_file(spark, tmp_path, monkeypatch):
+    """The stream-static enrichment's static side reads the files the
+    replay glob selects, so a sliced layout (no events.parquet) runs
+    and enriches exactly like the single-file fixture."""
+    from chrono_ts_spark.streaming.replay import run_stream_static_enrich
+    from tools.probe import build_sliced_events
+
+    sliced_dir = str(tmp_path / "sliced")
+    build_sliced_events(
+        spark, f"{SF_SMOKE}/events.parquet", sliced_dir, slices=4
+    )
+    cols = ["event_id", "user_id", "tier", "ts_s"]
+    single = as_sorted_rows(run_stream_static_enrich(spark, SF_SMOKE), cols)
+    monkeypatch.setenv("SPARK_GRAFT_REPLAY_GLOB", "slice_*.parquet")
+    sliced = as_sorted_rows(run_stream_static_enrich(spark, sliced_dir), cols)
+    assert sliced == single and single

@@ -12,7 +12,7 @@ value hash).
 
 Run it from a NON-REPO cwd:
 
-    cd /tmp && python /root/repo/tools/driver_sim.py [N] [sf_dir]
+    cd /tmp && python <repo>/tools/driver_sim.py [N] [sf_dir]
 
 Exit code 0 iff every windowed query passes (rows-only queries are
 executed and row-counted, matching the driver's weaker check).
@@ -20,10 +20,13 @@ executed and row-counted, matching the driver's weaker check).
 import importlib.util
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession
+
+ENTRY = Path(__file__).resolve().parents[1] / "__spark_entry__.py"
 
 
 def main() -> int:
@@ -31,9 +34,7 @@ def main() -> int:
     sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
 
     spark = SparkSession.builder.master("local[8]").getOrCreate()  # NO extra confs
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
-    )
+    spec = importlib.util.spec_from_file_location("__spark_entry__", ENTRY)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
