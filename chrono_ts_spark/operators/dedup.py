@@ -38,7 +38,19 @@ def tokenize(col: Column, pattern: str = r"\s+") -> Column:
 
 
 def shingles(tokens: Column, k: int = 5) -> Column:
-    """Distinct word k-shingles as strings ('w1 w2 … wk')."""
+    """Distinct word k-shingles as strings ('w1 w2 … wk').
+
+    Pass ``tokens`` as a column reference, not an expression: the
+    lambda captures it, Catalyst does no common-subexpression
+    elimination inside lambdas, and an inline ``tokenize(...)`` is
+    re-run for every shingle, O(tokens²) per document. Project the
+    tokens as their own column first; CollapseProject keeps the two
+    projections apart because the alias is used more than once. Do
+    not let-bind here instead (``element_at(transform(array(tokens),
+    ...), 1)``): on Spark 4.1 that stops ExtractPythonUDFs from
+    extracting a downstream Arrow UDF (INTERNAL_ERROR "Cannot
+    evaluate expression").
+    """
     n = F.size(tokens)
     return F.array_distinct(
         F.when(
@@ -330,9 +342,8 @@ def minhash_lsh_candidates(
     # entirely: the signature is map-only after widen(), which on a
     # real cluster means zero signature-stage network traffic.
     sh = widen(df).select(
-        F.col(id_col).alias("__id"),
-        shingles(tokenize(F.col(text_col)), shingle_k).alias("__sh"),
-    )
+        F.col(id_col).alias("__id"), tokenize(F.col(text_col)).alias("__tok")
+    ).select("__id", shingles(F.col("__tok"), shingle_k).alias("__sh"))
     base_hash = _hash31_md5 if portable else _hash31
     hs = sh.select(
         "__id",
@@ -563,9 +574,8 @@ def exact_jaccard_pairs(
     )
     relevant = df.join(ids, df[id_col] == ids["__pid"], "left_semi")
     sh = widen(relevant).select(
-        F.col(id_col).alias("__id"),
-        shingles(tokenize(F.col(text_col)), shingle_k).alias("__sh"),
-    )
+        F.col(id_col).alias("__id"), tokenize(F.col(text_col)).alias("__tok")
+    ).select("__id", shingles(F.col("__tok"), shingle_k).alias("__sh"))
     j = (
         pairs.join(sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a")), "id_a")
         .join(sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b")), "id_b")

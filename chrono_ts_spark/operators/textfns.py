@@ -106,6 +106,10 @@ def ngrams(tokens: Column, n: int) -> Column:
 
     The guard matters: Spark's ``sequence(1, size - (n-1))`` produces a
     DESCENDING sequence when size < n instead of an empty one.
+
+    As with ``dedup.shingles``, pass ``tokens`` as a column reference:
+    an inline tokenizer expression is re-run inside the lambda for
+    every gram (no common-subexpression elimination in lambdas).
     """
     if n == 1:
         return tokens

@@ -57,6 +57,12 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+# SparkContext attribute caching whether the SparkConf sets
+# spark.sql.shuffle.partitions (same marker idiom as
+# ensure_package_on_workers).
+_SHUFFLE_SET_MARKER = "_chrono_shuffle_partitions_set"
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs; safe on a driver-owned session."""
     for k, v in RUNTIME_CONFS.items():
@@ -75,10 +81,16 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
         # spark-defaults) is a deliberate setting and is left alone even
         # when it equals 200 (r7 review); a runtime spark.conf.set("200")
         # remains indistinguishable from the stock default — the one
-        # residual ambiguity, accepted.
-        explicitly_set = "spark.sql.shuffle.partitions" in dict(
-            spark.sparkContext.getConf().getAll()
-        )
+        # residual ambiguity, accepted. A running context's SparkConf
+        # cannot change, so it is read once per context: getConf()
+        # copies the whole conf over py4j, key by key.
+        sc = spark.sparkContext
+        explicitly_set = getattr(sc, _SHUFFLE_SET_MARKER, None)
+        if explicitly_set is None:
+            explicitly_set = "spark.sql.shuffle.partitions" in dict(
+                sc.getConf().getAll()
+            )
+            setattr(sc, _SHUFFLE_SET_MARKER, explicitly_set)
         if (
             not explicitly_set
             and spark.conf.get("spark.sql.shuffle.partitions") == "200"
@@ -159,7 +171,7 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
 def get_spark(
     app_name: str = "chrono-ts-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
 ) -> SparkSession:
     """Build (or reuse) a local session tuned for the test/bench scales.
 
@@ -170,8 +182,6 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("CHRONO_SHUFFLE_PARTITIONS", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -23,11 +23,13 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..functions import time_bucket, ts_str
 from ..session import apply_runtime_confs
@@ -139,27 +141,59 @@ def assert_single_file_replay(sf_dir: str) -> None:
         )
 
 
+_START_LOCK = threading.Lock()
+
+
+def start_bounded(writer: DataStreamWriter, spark: SparkSession) -> StreamingQuery:
+    """Start ``writer`` with one state partition per core.
+
+    A stateful operator keeps one state-store instance per shuffle
+    partition, fixed when the checkpoint is created; AQE never
+    coalesces it. Inheriting the batch setting (32 from ``get_spark``,
+    64 on a stock driver session) makes every micro-batch of a bounded
+    replay load and commit that many RocksDB stores in waves of
+    fixed-cost tasks. The stream clones the session's SQL conf when
+    ``start()`` constructs it, so the core count is set only around
+    that call: the stream keeps it, and the session's previous value is
+    back as soon as ``start()`` returns or raises. A batch query that
+    another thread plans inside that window sees the core count too
+    (a partition count, not a result). Concurrent starts are serialized:
+    interleaved, the second would read the first's core count as the
+    value to restore. A resumed checkpoint keeps the partition count it
+    recorded.
+    """
+    key = "spark.sql.shuffle.partitions"
+    with _START_LOCK:
+        previous = spark.conf.get(key)
+        spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(key, previous)
+
+
 def _run_to_memory(
     result: DataFrame, spark: SparkSession, output_mode: str = "complete"
 ) -> DataFrame:
     """Run an availableNow query into a memory sink; return the table.
 
-    The checkpoint dir is deleted once the bounded query terminates
-    (replays construct fresh state; the checkpoint has no further use).
-    The memory table itself lives for the session — callers collect
-    from it lazily, so it can't be dropped here.
+    The query starts through :func:`start_bounded`, so its state has one
+    partition per core. The checkpoint dir is deleted once the bounded
+    query terminates (replays construct fresh state; the checkpoint has
+    no further use). The memory table itself lives for the session —
+    callers collect from it lazily, so it can't be dropped here.
     """
     import shutil
 
     name = "mem_" + uuid.uuid4().hex[:10]
     ckpt = tempfile.mkdtemp(prefix="chrono_ckpt_")
-    q = (
+    q = start_bounded(
         result.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        spark,
     )
     q.awaitTermination()
     q.stop()
@@ -183,18 +217,19 @@ def run_to_parquet(
     stays on executors, output goes to files, the driver never holds
     rows. The fixture-scale query registry keeps the memory sink (the
     driver wants a collectable table); scale probes and any real
-    deployment use this.
+    deployment use this. It starts through :func:`start_bounded` (one
+    state partition per core), like the memory sink.
     """
     import shutil
 
     ckpt = tempfile.mkdtemp(prefix="chrono_ckpt_")
-    q = (
+    q = start_bounded(
         result.writeStream.format("parquet")
         .option("path", out_dir)
         .outputMode(output_mode)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        spark,
     )
     q.awaitTermination()
     q.stop()

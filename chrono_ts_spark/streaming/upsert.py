@@ -189,10 +189,12 @@ def run_upsert_sink(
     import shutil
     import tempfile
 
+    from .replay import start_bounded
+
     own_ckpt = ckpt is None
     if own_ckpt:
         ckpt = tempfile.mkdtemp(prefix="chrono_upsert_ckpt_")
-    q = (
+    q = start_bounded(
         agg.writeStream.outputMode("update")
         .foreachBatch(
             lambda b, _id: upsert_batch(
@@ -200,8 +202,8 @@ def run_upsert_sink(
             )
         )
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        agg.sparkSession,
     )
     q.awaitTermination()
     q.stop()

@@ -259,6 +259,30 @@ class TestMinhashLSH:
         assert sum(err) / len(err) < 0.25  # 64-perm signature accuracy
 
 
+def test_shingles_of_bound_tokens_equal_inline(spark):
+    """The MinHash path shingles a projected token column; that must be
+    the same array as shingling the tokenizer expression inline."""
+    from chrono_ts_spark.operators.dedup import shingles, tokenize
+
+    docs = [
+        (0, None),
+        (1, ""),
+        (2, "fewer than five"),
+        (3, "a a a a a a a b a a a a a a a"),
+        (4, "  Mixed CASE words  and more words and more words "),
+    ]
+    df = spark.createDataFrame(docs, "doc_id int, text string")
+    inline = df.select("doc_id", shingles(tokenize(F.col("text")), 5).alias("sh"))
+    bound = df.select("doc_id", tokenize(F.col("text")).alias("tok")).select(
+        "doc_id", shingles(F.col("tok"), 5).alias("sh")
+    )
+    got_inline = {r.doc_id: r.sh for r in inline.collect()}
+    got_bound = {r.doc_id: r.sh for r in bound.collect()}
+    assert got_bound == got_inline
+    assert got_bound[2] == ["fewer than five"]
+    assert sorted(got_bound[3]) == sorted(py_shingles(docs[3][1]))
+
+
 class TestSimhash:
     def test_identical_docs_equal_fingerprint(self, spark):
         df = spark.createDataFrame(

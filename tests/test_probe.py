@@ -51,6 +51,9 @@ def test_probe_pair_head_vs_checkout():
                 assert key in r, (r["arm"], r["query"], key)
         stream = [r for r in records if r["query"] == "run_sessionized_stream"]
         assert all(r["rows"] > 0 and r["streaming.batches"] >= 1 for r in stream)
+        # the session window is one stateful operator; its layout is recorded
+        assert all(len(r["numShufflePartitions"]) == 1 for r in stream)
+        assert all(r["numStateStoreInstances"] == r["numShufflePartitions"] for r in stream)
         plan_dirs = sorted((run_dir / "plans").iterdir())
         assert len(plan_dirs) == 2
         for d in plan_dirs:

@@ -655,3 +655,108 @@ def test_static_enrich_sliced_equals_single_file(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_REPLAY_GLOB", "slice_*.parquet")
     sliced = as_sorted_rows(run_stream_static_enrich(spark, sliced_dir), cols)
     assert sliced == single and single
+
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+@pytest.fixture
+def shuffle_partitions_7(spark):
+    """The session's batch setting at 7, restored afterwards: neither
+    the core count nor the conftest's 4, so a stream that inherited it
+    would show."""
+    before = spark.conf.get(SHUFFLE_PARTITIONS)
+    spark.conf.set(SHUFFLE_PARTITIONS, "7")
+    try:
+        yield
+    finally:
+        spark.conf.set(SHUFFLE_PARTITIONS, before)
+
+
+@pytest.mark.parametrize("runner", ["memory", "parquet", "upsert"])
+def test_bounded_stream_state_one_partition_per_core(
+    spark, tmp_path, monkeypatch, shuffle_partitions_7, runner
+):
+    """Every bounded start site gives each stateful operator one state
+    partition per core, and the session keeps its own setting."""
+    from chrono_ts_spark.streaming import replay
+    from chrono_ts_spark.streaming.upsert import run_upsert_counts
+
+    started = []
+    start = replay.start_bounded
+    monkeypatch.setattr(
+        replay, "start_bounded", lambda w, s: started.append(start(w, s)) or started[-1]
+    )
+    if runner == "memory":
+        replay.run_stateful_dedup_stream(spark, SF_SMOKE)
+    elif runner == "parquet":
+        replay.run_sessionized_stream(spark, SF_SMOKE, sink_dir=str(tmp_path / "sink"))
+    else:
+        run_upsert_counts(spark, SF_SMOKE, str(tmp_path / "store"))
+    cores = spark.sparkContext.defaultParallelism
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == "7"
+    assert len(started) == 1
+    ops = started[0].lastProgress["stateOperators"]
+    assert ops
+    assert all(o["numShufflePartitions"] == cores for o in ops), ops
+    assert all(o["numStateStoreInstances"] == cores for o in ops), ops
+
+
+def test_start_bounded_restores_conf_when_start_raises(spark, shuffle_partitions_7):
+    from pyspark.errors import AnalysisException
+
+    from chrono_ts_spark.streaming.replay import replay_events_stream, start_bounded
+
+    writer = (
+        replay_events_stream(spark, SF_SMOKE)
+        .writeStream.format("memory")
+        .queryName("complete_without_aggregation")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+    )
+    with pytest.raises(AnalysisException):
+        start_bounded(writer, spark)
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == "7"
+
+
+def test_concurrent_bounded_starts_restore_session_conf():
+    """Threads starting streams on one session at once: every start
+    sees the core count and the session ends at its own value. An
+    unserialized start would restore another start's core count."""
+    import sys
+    import threading
+    import time
+    from types import SimpleNamespace
+
+    from chrono_ts_spark.streaming.replay import start_bounded
+
+    values = {SHUFFLE_PARTITIONS: "7"}
+    session = SimpleNamespace(
+        conf=SimpleNamespace(get=values.__getitem__, set=values.__setitem__),
+        sparkContext=SimpleNamespace(defaultParallelism=3),
+    )
+    seen = []
+
+    class Writer:
+        def start(self):
+            seen.append(values[SHUFFLE_PARTITIONS])
+            time.sleep(0.0005)
+            return self
+
+    def starts():
+        for _ in range(20):
+            start_bounded(Writer(), session)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=starts) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(seen) == 16 * 20 and set(seen) == {"3"}
+    assert values[SHUFFLE_PARTITIONS] == "7"

@@ -26,7 +26,9 @@ An arm may carry environment assignments: ``HEAD:KEY=VALUE``.
 Each (pair, arm) is one subprocess with its own JVM; odd pairs reverse
 the arm order. Per query: ``build_s`` (plan construction), one untimed
 warm run, one timed noop-sink run (``exec_s``). A runner builds and
-runs in one call (``build_s`` 0). An exception fails that query in
+runs in one call (``build_s`` 0); its record also carries each stateful
+operator's ``numShufflePartitions`` and ``numStateStoreInstances``
+from the stream's progress. An exception fails that query in
 that arm; the run goes on. ``--trace`` turns on Spark's event log
 through the launch configuration, tags build and exec phases with
 ``setJobGroup`` and adds the layer metrics of ``benchmark/tracing.py``.
@@ -353,6 +355,17 @@ def expand(queries: str) -> list[str]:
 # --- one (pair, arm): runs in its own subprocess and JVM
 
 
+def state_layout(progress: list[dict]) -> dict:
+    """Per stateful operator, in plan order, its shuffle partitions and
+    state-store instances as the last progress report with state
+    operators gives them (empty lists for a stateless runner)."""
+    ops = next((p["stateOperators"] for p in reversed(progress) if p.get("stateOperators")), [])
+    return {
+        "numShufflePartitions": [o.get("numShufflePartitions") for o in ops],
+        "numStateStoreInstances": [o.get("numStateStoreInstances") for o in ops],
+    }
+
+
 class Worker:
     """Runs every target once in one session and writes the records."""
 
@@ -370,8 +383,7 @@ class Worker:
         self.streams = runners()
         self.spark = get_spark("probe")
         self.progress = tracing.ProgressLog()
-        if cfg["trace"]:
-            self.spark.streams.addListener(self.progress.listener())
+        self.spark.streams.addListener(self.progress.listener())
 
     def tag(self, group: str) -> None:
         if self.cfg["trace"]:
@@ -424,7 +436,7 @@ class Worker:
         progress = self.progress.progress[n0:]
         # streaming jobs run under their query's runId as job group
         groups = [f"exec|{name}"] + sorted({p["runId"] for p in progress})
-        return {"build_s": 0.0, "exec_s": exec_s, "rows": rows}, groups, progress
+        return {"build_s": 0.0, "exec_s": exec_s, "rows": rows, **state_layout(progress)}, groups, progress
 
     def run(self) -> None:
         """Every target once; records are saved after each one, so a
