@@ -18,6 +18,9 @@ import sys
 import time
 from pathlib import Path
 
+import pandas as pd
+from pyspark.sql.functions import col, pandas_udf
+
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from chrono_ts_spark.queries import load_all  # noqa: E402
@@ -32,8 +35,38 @@ def run_once(fn, spark, sf_dir: str) -> float:
     return time.time() - t0
 
 
+def _identity(s: pd.Series) -> pd.Series:
+    return s
+
+
+def warm_python_workers(spark) -> None:
+    """One trivial pandas-UDF action per core, so the Python worker pool
+    (fork + numpy/pandas import, seconds per worker) is not billed to
+    the first Python-UDF query. Workers are session infrastructure, not
+    query work; every query still computes from the parquet inputs.
+
+    The UDF body lives at module level: under ``from __future__ import
+    annotations`` its type hints are strings that Spark resolves in the
+    function's module globals, so a body local to a function fails with
+    UNSUPPORTED_SIGNATURE."""
+    cpus = spark.sparkContext.defaultParallelism
+    (
+        spark.range(0, cpus, 1, cpus)
+        .select(pandas_udf(_identity, "long")(col("id")))
+        .write.mode("overwrite")
+        .format("noop")
+        .save()
+    )
+
+
 def build_artifact(
-    timings: dict[str, float], errors: dict[str, str], sf: float, spark_version: str
+    timings: dict[str, float],
+    errors: dict[str, str],
+    sf: float,
+    spark_version: str,
+    *,
+    cpus: int,
+    master: str,
 ) -> dict:
     """Assemble the one-line JSON artifact. A partial sum under the
     headline metric name would read as "faster" across rounds (ADVICE
@@ -49,6 +82,8 @@ def build_artifact(
         "sf": sf,
         "n_queries": len(timings),
         "spark": spark_version,
+        "cpus": cpus,
+        "master": master,
     }
     if errors:
         out["errors"] = errors
@@ -70,29 +105,8 @@ def main() -> None:
         registry["ts_topk_users"].fn(spark, sf_dir).count()
     except Exception as e:  # pragma: no cover - defensive
         print(f"  warm-up failed: {e}", file=sys.stderr)
-    # r15 measurement fix (same rationale as the JVM warm-up above,
-    # documented in OPTIMIZATION_r15.md): one trivial pandas-UDF action
-    # so the Python worker pool (fork + numpy/pandas import, ~3-6 s on
-    # local[32]) isn't billed to the alphabetically-first Python-UDF
-    # query (doc_minhash_near_dups read 6.6 s in-bench vs 2.4 s solo
-    # from exactly this). Workers are session infrastructure, not query
-    # work; every query still computes from the parquet inputs.
     try:
-        import pandas as _pd
-        from pyspark.sql.functions import col as _col, pandas_udf as _pudf
-
-        @_pudf("long")
-        def _warm(s: _pd.Series) -> _pd.Series:
-            return s
-
-        cpus = spark.sparkContext.defaultParallelism
-        (
-            spark.range(0, cpus, 1, cpus)
-            .select(_warm(_col("id")))
-            .write.mode("overwrite")
-            .format("noop")
-            .save()
-        )
+        warm_python_workers(spark)
     except Exception as e:  # pragma: no cover - defensive
         print(f"  python warm-up failed: {e}", file=sys.stderr)
 
@@ -108,7 +122,11 @@ def main() -> None:
         timings[name] = round(best, 3)
         print(f"  {name}: {best:.2f}s", file=sys.stderr)
 
-    out = build_artifact(timings, errors, float(sf), spark.version)
+    sc = spark.sparkContext
+    out = build_artifact(
+        timings, errors, float(sf), spark.version,
+        cpus=sc.defaultParallelism, master=sc.master,
+    )
     # Solo re-run of the most expensive headline query (VERDICT r5 #8):
     # in-bench doc_minhash_near_dups carries ±1 s of session/GC noise, so
     # a clean solo number rides along for round-over-round comparison.

@@ -120,16 +120,16 @@ def widen_if_narrow(df: DataFrame, partitions: int | None = None) -> DataFrame:
     SCAN-ONLY PRECONDITION, enforced (ADVICE r15 / VERDICT r15 item 7):
     the parallelism probe reads ``df.rdd.getNumPartitions()``, which
     forces physical planning — and under AQE, ``toRdd`` MATERIALIZES
-    the stages of any exchange in the subtree (the exact_jaccard_pairs
-    eagerness finding), so calling it on a derived (shuffled) input
-    would silently execute jobs at plan-construction time. The guard
-    below therefore walks the analyzed plan first and returns the
-    input unchanged for anything but projections/filters over a
-    relation — such inputs have a shuffle upstream anyway, i.e. they
-    are already wide. Pinned by a zero-jobs-at-construction test
-    (tests/test_r16_widen_guard.py). For a scan-only plan the probe
-    plans physically but launches no job (~10 ms) — cheap next to the
-    work it saves.
+    the stages of any exchange in the subtree (which is why even a
+    ``localCheckpoint(eager=False)`` runs its subplan as it is planned),
+    so calling it on a derived (shuffled) input would silently execute
+    jobs at plan-construction time. The guard below therefore walks
+    the analyzed plan first and returns the input unchanged for
+    anything but projections/filters over a relation — such inputs
+    have a shuffle upstream anyway, i.e. they are already wide. Pinned
+    by a zero-jobs-at-construction test (tests/test_r16_widen_guard.py).
+    For a scan-only plan the probe plans physically but launches no job
+    (~10 ms) — cheap next to the work it saves.
     """
     if not _is_scan_only(df):
         return df
@@ -512,79 +512,37 @@ def minhash_lsh_candidates(
 
 
 def exact_jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_k: int = 5,
+    df: DataFrame, pairs: DataFrame, id_col: str, text_col: str, shingle_k: int = 5
 ) -> DataFrame:
     """Exact shingle-set Jaccard for given (id_a, id_b) pairs.
 
-    Shingles are computed only for documents that appear in a pair
-    (semi-join first): verification cost is O(candidates), independent
-    of corpus size.
-
-    r15 (optimization round): ``pairs`` is localCheckpoint-ed (eager)
-    before use. The pair set is consumed THREE times downstream (the
-    id side of the semi-join and the verify join), and when pairs is
-    itself an expensive pipeline (minhash_lsh_candidates), Catalyst's
-    column pruning specializes each branch BELOW the candidate
-    pipeline's final exchange — the branches stop being identical
-    subtrees, AQE exchange reuse cannot fire, and the whole signature
-    pipeline is re-run per branch (the static plan embedded six
-    ArrowEvalPython signature passes; measured 2.6→1.8 s on the sf0.1
-    solo minhash, and the same multiple at any scale). Checkpointing
-    computes the candidate set once and hands every consumer the same
-    materialized RDD. Trade-offs, both deliberate: this function is
-    now EAGER — callers' plan construction executes the candidate job
-    (under AQE even ``eager=False`` materializes the subplan's stages
-    at ``toRdd``, so laziness buys nothing; oracled @query callers
-    must declare ``out_schema`` to keep the schema lint job-free) —
-    and the checkpointed blocks are not fault-tolerant (an executor
-    loss re-fails the query instead of recomputing lineage —
-    acceptable for a batch dedup pass; candidates are O(collisions)
-    rows of ~40 B, MEMORY_AND_DISK so large sets spill, never OOM).
-
-    NOT a persist(): Spark's CacheManager keys persisted plans on
-    logical-plan equality, so a lazy persist here would be silently
-    re-served across separate invocations that rebuild the identical
-    query (e.g. bench best-of-2 timing a cache read on run 2).
-    localCheckpoint materializes a fresh RDD per invocation — every
-    run recomputes from the parquet inputs.
-
-    Accepted cost (ADVICE r15): each invocation's checkpointed blocks
-    live for the SESSION lifetime — there is no post-materialization
-    hook on a returned lazy plan from which to release them, so
-    long-lived sessions (pytest, bench best-of-2 building the plan
-    twice) accumulate one MEMORY_AND_DISK block set per invocation,
-    each O(collisions) rows of ~40 B (same acceptance as
-    rel_market_basket's ≤326-row persist). The blocks become eligible
-    for ContextCleaner release once the returned plan (which references
-    the checkpointed RDD) is itself garbage-collected, so batch callers
-    looping many corpora in one session should drop plan references
-    between iterations or recycle the session.
-
-    The id set is derived with one explode instead of a two-branch
-    union so the plan references the checkpoint 3×, not 4×.
+    ``pairs`` must be distinct and ``id_col`` unique in ``df``. The plan
+    references ``pairs`` once: each pair is exploded into its two ids,
+    joined to ``df``, shingled, and regrouped by the pair columns, so
+    plan construction runs no job and each side is shingled once per
+    pair — O(candidates × doc length), independent of corpus size. A
+    pair naming an id absent from ``df`` is dropped. Returns id_a,
+    id_b, jaccard, then the other pair columns in order.
     """
-    pairs = pairs.localCheckpoint(eager=True)
-    ids = (
-        pairs.select(F.explode(F.array("id_a", "id_b")).alias("__pid"))
-        .distinct()
+    keys = pairs.columns
+    text = df.select(F.col(id_col).alias("__pid"), F.col(text_col).alias("__text"))
+    sh = (
+        pairs.select(*keys, F.explode(F.array("id_a", "id_b")).alias("__pid"))
+        .join(text, "__pid")
+        .select(*keys, "__pid", tokenize(F.col("__text")).alias("__tok"))
+        .select(*keys, "__pid", shingles(F.col("__tok"), shingle_k).alias("__sh"))
     )
-    relevant = df.join(ids, df[id_col] == ids["__pid"], "left_semi")
-    sh = widen(relevant).select(
-        F.col(id_col).alias("__id"), tokenize(F.col(text_col)).alias("__tok")
-    ).select("__id", shingles(F.col("__tok"), shingle_k).alias("__sh"))
-    j = (
-        pairs.join(sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a")), "id_a")
-        .join(sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b")), "id_b")
-    )
+
+    def side(id_name: str, alias: str) -> Column:
+        own = F.when(F.col("__pid") == F.col(id_name), F.col("__sh"))
+        return F.first(own, ignorenulls=True).alias(alias)
+
+    j = sh.groupBy(*keys).agg(side("id_a", "sh_a"), side("id_b", "sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return j.select(
+    return j.dropna(subset=["sh_a", "sh_b"]).select(
         "id_a", "id_b", (inter / union).alias("jaccard"),
-        *[c for c in pairs.columns if c not in ("id_a", "id_b")],
+        *[c for c in keys if c not in ("id_a", "id_b")],
     )
 
 

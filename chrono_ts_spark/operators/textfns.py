@@ -85,12 +85,13 @@ def quality_score(text: Column) -> Column:
     return (len_band + alpha_ratio + distinct_ratio) / F.lit(3.0)
 
 
-def doc_fingerprint(text: Column, shingle_k: int = 5) -> Column:
+def doc_fingerprint(tokens: Column, shingle_k: int = 5) -> Column:
     """Winnowing-style fingerprint: lexicographic-min md5 over word
-    k-shingles (a 1-permutation minhash; portable to any SQL engine)."""
-    return F.array_min(
-        F.transform(shingles(tokenize(text), shingle_k), lambda s: F.md5(s))
-    )
+    k-shingles (a 1-permutation minhash; portable to any SQL engine).
+
+    ``tokens`` is a bound ``tokenize(text)`` column reference, as
+    ``dedup.shingles`` requires."""
+    return F.array_min(F.transform(shingles(tokens, shingle_k), lambda s: F.md5(s)))
 
 
 def content_md5(text: Column) -> Column:

@@ -47,6 +47,13 @@ _SQL_SHINGLES = (
 )
 
 
+def _shingled(d: DataFrame, k: int = 5) -> DataFrame:
+    """(doc_id, sh): each document's distinct word k-shingles, taken
+    from a bound token column (the O(tokens²) trap in dedup.shingles)."""
+    toks = d.select("doc_id", tokenize(F.col("text")).alias("__tok"))
+    return toks.select("doc_id", shingles(F.col("__tok"), k).alias("sh"))
+
+
 # ---------------------------------------------------------------------------
 # X8: token statistics per language
 # ---------------------------------------------------------------------------
@@ -210,10 +217,11 @@ FROM t
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min-md5-shingle fingerprint per document."""
     d = load_table(spark, sf_dir, "documents")
-    return d.select(
+    t = d.select("doc_id", tokenize(F.col("text")).alias("toks"))
+    return t.select(
         "doc_id",
-        doc_fingerprint(F.col("text"), 5).alias("fingerprint"),
-        F.size(shingles(tokenize(F.col("text")), 5)).alias("n_shingles"),
+        doc_fingerprint(F.col("toks"), 5).alias("fingerprint"),
+        F.size(shingles(F.col("toks"), 5)).alias("n_shingles"),
     )
 
 
@@ -447,10 +455,6 @@ WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
     "doc_minhash_md5",
     oracle=_MINHASH_MD5_ORACLE,
     tags=("text", "X6", "minhash"),
-    # r15: exact_jaccard_pairs is now construction-eager (candidate
-    # localCheckpoint), so the schema lint must read the declaration
-    # instead of building the plan (tests/test_entry_contract.py).
-    out_schema="id_a bigint, id_b bigint, est_jaccard double, jaccard double",
 )
 def doc_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-oracled MinHash-LSH near-dup candidates (X6 twin): the
@@ -746,10 +750,7 @@ FROM s a JOIN s b ON b.doc_id = a.doc_id + 1
 )
 def doc_ngram_jaccard_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 5-gram Jaccard between doc i and doc i+1."""
-    d = load_table(spark, sf_dir, "documents")
-    s = d.select(
-        "doc_id", shingles(tokenize(F.col("text")), 5).alias("sh")
-    )
+    s = _shingled(load_table(spark, sf_dir, "documents"))
     a = s.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = s.select((F.col("doc_id") - 1).alias("doc_a"), F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     j = a.join(b, "doc_a")
@@ -1208,8 +1209,8 @@ def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists are frequency-capped, so a shingle with df ≤ f emits ≤ f²/2
     pairs, and stop-shingles (df > 5) are dropped the way LSH banding
     drops common bands. Candidates are verified with exact Jaccard
-    (O(candidates), semi-join shingling) and the surviving edges are
-    resolved into clusters with the alternating-star distributed
+    (O(candidates): only docs in a pair are shingled) and the surviving
+    edges are resolved into clusters with the alternating-star distributed
     connected-components operator (operators/graph.py) — transitive
     closure without any driver-side graph state. The DuckDB oracle
     mirrors edge generation verbatim and replaces the star algorithm
@@ -1217,10 +1218,7 @@ def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     CC algorithms agreeing on every cluster label.
     """
     d = load_table(spark, sf_dir, "documents")
-    ex = widen(d).select(
-        "doc_id",
-        F.explode(shingles(tokenize(F.col("text")), 5)).alias("shingle"),
-    )
+    ex = _shingled(widen(d)).select("doc_id", F.explode("sh").alias("shingle"))
     # Shared shingle-partitioned exchange: `ex` (the expensive
     # tokenize+shingle explode) feeds BOTH the df aggregate and the
     # posting join — the twice-run-pipeline shape the r9 span probe
@@ -1354,10 +1352,7 @@ def doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zero-hit docs are preserved via left join (the common case — the
     output is the full decontamination report, not just the flags).
     """
-    d = load_table(spark, sf_dir, "documents")
-    s = widen(d).select(
-        "doc_id", shingles(tokenize(F.col("text")), 5).alias("sh")
-    )
+    s = _shingled(widen(load_table(spark, sf_dir, "documents")))
     bench = s.filter(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("bench_id"), F.explode("sh").alias("shingle")
     )
@@ -3861,8 +3856,7 @@ def doc_containment_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
     the MinHash-LSH candidate generator exactly as doc_minhash's
     verify stage does.
     """
-    d = load_table(spark, sf_dir, "documents")
-    s = d.select("doc_id", shingles(tokenize(F.col("text")), 5).alias("sh"))
+    s = _shingled(load_table(spark, sf_dir, "documents"))
     a = s.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = s.select(
         (F.col("doc_id") - 1).alias("doc_a"),
@@ -3939,12 +3933,9 @@ def doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     owners (16-byte-class keys, the chunk-dedup contract), join back
     on shingle, and roll up per doc — no pairwise comparisons anywhere.
     """
-    d = load_table(spark, sf_dir, "documents")
     s = (
-        d.select(
-            "doc_id",
-            F.explode(shingles(tokenize(F.col("text")), 5)).alias("sh"),
-        )
+        _shingled(load_table(spark, sf_dir, "documents"))
+        .select("doc_id", F.explode("sh").alias("sh"))
         .distinct()
     )
     owner = s.groupBy("sh").agg(F.min("doc_id").alias("first_doc"))
@@ -4104,8 +4095,7 @@ def doc_jaccard_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     five-threshold fan-out is a broadcast of a 5-row dimension, not a
     re-scan per threshold.
     """
-    d = load_table(spark, sf_dir, "documents")
-    s = d.select("doc_id", shingles(tokenize(F.col("text")), 5).alias("sh"))
+    s = _shingled(load_table(spark, sf_dir, "documents"))
     a = s.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = s.select((F.col("doc_id") - 1).alias("doc_a"), F.col("sh").alias("sh_b"))
     pairs = (

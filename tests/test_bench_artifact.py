@@ -22,7 +22,9 @@ def _bench():
 
 
 def test_clean_run_sums_timings():
-    out = _bench().build_artifact({"q1": 1.0, "q2": 2.5}, {}, 0.1, "4.1.2")
+    out = _bench().build_artifact(
+        {"q1": 1.0, "q2": 2.5}, {}, 0.1, "4.1.2", cpus=4, master="local[4]"
+    )
     assert out["value"] == 3.5
     assert out["n_queries"] == 2
     assert "partial" not in out and "errors" not in out
@@ -31,7 +33,8 @@ def test_clean_run_sums_timings():
 
 def test_any_error_nulls_headline_and_flags_partial():
     out = _bench().build_artifact(
-        {"q1": 1.0}, {"q2": "RuntimeError: boom"}, 0.1, "4.1.2"
+        {"q1": 1.0}, {"q2": "RuntimeError: boom"}, 0.1, "4.1.2",
+        cpus=4, master="local[4]",
     )
     assert out["value"] is None
     assert out["partial"] is True
@@ -42,6 +45,21 @@ def test_any_error_nulls_headline_and_flags_partial():
 
 
 def test_all_errors_is_still_well_formed():
-    out = _bench().build_artifact({}, {"q1": "E"}, 0.01, "4.1.2")
+    out = _bench().build_artifact(
+        {}, {"q1": "E"}, 0.01, "4.1.2", cpus=4, master="local[4]"
+    )
     assert out["value"] is None and out["partial"] is True
     assert out["n_queries"] == 0
+
+
+def test_artifact_reports_cores_and_master():
+    out = _bench().build_artifact(
+        {"q1": 1.0}, {}, 0.1, "4.1.2", cpus=8, master="local[8]"
+    )
+    assert (out["cpus"], out["master"]) == (8, "local[8]")
+
+
+def test_python_worker_warm_up_runs(spark):
+    """The pandas-UDF warm-up must execute, not fail on its signature
+    and leave the worker start to the first Python-UDF query."""
+    _bench().warm_python_workers(spark)

@@ -124,14 +124,45 @@ class TestMinhashLSH:
             assert arrow == agg
 
     def test_exact_jaccard_matches_python(self, spark, corpus):
-        df = spark.createDataFrame(corpus, "doc_id long, text string")
-        pairs = spark.createDataFrame(
-            [(i, 100 + i) for i in range(5)], "id_a long, id_b long"
-        )
-        out = exact_jaccard_pairs(df, pairs, "doc_id", "text", 5).collect()
-        text = dict(corpus)
-        for r in out:
-            assert r.jaccard == pytest.approx(py_jaccard(text[r.id_a], text[r.id_b]))
+        # doc 0 sits in several pairs, 200 has fewer than k tokens, 201
+        # is empty, 999 is absent from df (its pair must be dropped),
+        # and the extra pair columns follow jaccard in their own order
+        docs = corpus + [(200, "fewer than five"), (201, "")]
+        df = spark.createDataFrame(docs, "doc_id long, text string")
+        rows = [(f"p{i}", i, 100 + i, i / 10) for i in range(5)] + [
+            ("multi1", 0, 1, 0.5),
+            ("multi2", 0, 200, 0.6),
+            ("short", 200, 201, 0.7),
+            ("empty", 1, 201, 0.8),
+            ("absent", 3, 999, 0.9),
+        ]
+        pairs = spark.createDataFrame(rows, "tag string, id_a long, id_b long, w double")
+        out = exact_jaccard_pairs(df, pairs, "doc_id", "text", 5)
+        assert out.columns == ["id_a", "id_b", "jaccard", "tag", "w"]
+        got = {(r.id_a, r.id_b): r for r in out.collect()}
+        want = {(a, b): (tag, w) for tag, a, b, w in rows if b != 999}
+        assert set(got) == set(want)
+        text = dict(docs)
+        for (a, b), r in got.items():
+            assert r.jaccard == pytest.approx(py_jaccard(text[a], text[b]))
+            assert (r.tag, r.w) == want[(a, b)]
+
+    def test_candidate_verification_builds_lazily(self, spark, corpus, tmp_path):
+        """LSH candidates plus exact verification build without running
+        a Spark job, and the plan reads no materialized checkpoint. The
+        corpus goes through parquet because a DataFrame made from a
+        Python list is itself an ExistingRDD scan."""
+        from chrono_ts_spark.planinfo import explain_text
+
+        path = str(tmp_path / "docs")
+        spark.createDataFrame(corpus, "doc_id long, text string").write.parquet(path)
+        df = spark.read.parquet(path)
+        tracker = spark.sparkContext.statusTracker()
+        before = len(tracker.getJobIdsForGroup())
+        cands = minhash_lsh_candidates(df, "doc_id", "text", 64, 16, 5)
+        verified = exact_jaccard_pairs(df, cands, "doc_id", "text", 5)
+        assert len(tracker.getJobIdsForGroup()) == before
+        assert "ExistingRDD" not in explain_text(verified, "simple")
 
     def test_portable_mode_planted_near_dups(self, spark, corpus):
         # r7 oracle twin: the md5 portable mode must find the planted

@@ -2,10 +2,10 @@
 
 ADVICE r15 / VERDICT r15 item 7: widen_if_narrow's parallelism probe
 (`df.rdd.getNumPartitions()`) forces physical planning, and under AQE
-`toRdd` materializes the stages of any exchange in the subtree (the
-exact_jaccard_pairs eagerness finding, operators/dedup.py). All r15
-call sites were raw scans so the hazard was latent; these tests make
-the precondition enforced rather than assumed:
+`toRdd` materializes the stages of any exchange in the subtree (which
+is why even `localCheckpoint(eager=False)` runs its subplan as it is
+planned). All r15 call sites were raw scans so the hazard was latent;
+these tests make the precondition enforced rather than assumed:
 
 * a post-shuffle input returns unchanged AND launches ZERO jobs at
   plan-construction time (the probe is never reached);

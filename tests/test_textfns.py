@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from chrono_ts_spark.operators.dedup import tokenize
 from chrono_ts_spark.operators.textfns import (
     bpe_ish_token_count,
     content_md5,
@@ -67,10 +68,11 @@ def test_lang_id_stopword_separation(spark, docs):
 
 
 def test_fingerprint_and_md5_stability(spark, docs):
+    toks = docs.withColumn("toks", tokenize(F.col("text")))
     out = rows(
-        docs.select(
+        toks.select(
             "doc_id",
-            doc_fingerprint(F.col("text")).alias("fp"),
+            doc_fingerprint(F.col("toks")).alias("fp"),
             content_md5(F.col("text")).alias("ch"),
         )
     )
@@ -79,7 +81,7 @@ def test_fingerprint_and_md5_stability(spark, docs):
     # fingerprints are hex md5 strings even for short docs
     assert len(out[2].fp) == 32
     # deterministic across evaluations
-    again = rows(docs.select("doc_id", doc_fingerprint(F.col("text")).alias("fp")))
+    again = rows(toks.select("doc_id", doc_fingerprint(F.col("toks")).alias("fp")))
     assert {k: v.fp for k, v in out.items()} == {k: v.fp for k, v in again.items()}
 
 

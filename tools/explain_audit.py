@@ -68,7 +68,7 @@ RULES: dict[str, dict[str, list[str]]] = {
     },
     "doc_minhash_near_dups": {
         "want": [],
-        "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"],
+        "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin", "Scan ExistingRDD"],
     },
     "emb_cosine_topk": {
         # deliberate broadcast NL: probes are broadcast, corpus streams
@@ -233,7 +233,7 @@ RULES: dict[str, dict[str, list[str]]] = {
         # banded equi-join, never all-pairs (portable twin keeps the
         # fast path's candidate shape)
         "want": [],
-        "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"],
+        "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin", "Scan ExistingRDD"],
     },
     "doc_simhash_md5_neighbors": {
         # pigeonhole-band equi-join, never all-pairs
