@@ -242,9 +242,7 @@ def md5_u32(col: Column | str) -> Column:
     [0, 2^32) — the engine-portable hash family behind every *_md5
     oracle twin. MUST stay byte-identical to ``sql_md5_u32`` (the
     DuckDB rendering of the same idiom): both take the first 8 hex
-    chars of md5 and parse them base-16. New twins should call these
-    helpers; the pre-helper inline copies across queries/*.py are
-    driver-proven frozen and intentionally left in place."""
+    chars of md5 and parse them base-16."""
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint")
 

@@ -27,7 +27,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..planinfo import analyzed_plan
+from ..functions import md5_u32
 
 MERSENNE = (1 << 61) - 1
 
@@ -61,82 +61,6 @@ def shingles(tokens: Column, k: int = 5) -> Column:
             ),
         ).otherwise(F.array(F.concat_ws(" ", tokens)))
     )
-
-
-def widen(df: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Round-robin repartition ahead of expensive per-row expression
-    work (shingling, signatures). A single large input file otherwise
-    pins the whole interpreted-HOF pipeline to one task — measured 5s
-    → 0.3s for 5k-doc shingling on local[32]. On a real cluster the
-    scan usually has many splits already; the extra shuffle of raw
-    text is linear and tiny next to the per-row work it parallelizes.
-    """
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n)
-
-
-# Analyzed-plan nodes that cannot introduce an exchange: under these,
-# probing df.rdd builds the RDD DAG without running any stage. Anything
-# else (Join/Aggregate/Window/Repartition/...) makes the probe unsafe
-# under AQE — see widen_if_narrow below.
-_SCAN_ONLY_NODES = ("Project", "Filter", "Relation", "SubqueryAlias")
-
-
-def _is_scan_only(df: DataFrame) -> bool:
-    """True iff the analyzed logical plan is a pure scan pipeline
-    (projections/filters over a relation). String-walks the ANALYZED
-    plan as EXPLAIN prints it, which plans but launches no jobs."""
-    # the section opens with the output schema line; the tree follows
-    plan = analyzed_plan(df).strip().splitlines()[1:]
-    if not plan:
-        return False
-    for line in plan:
-        node = line.lstrip(" +-:").split(" ", 1)[0].split("[", 1)[0]
-        if node and not any(node.startswith(p) for p in _SCAN_ONLY_NODES):
-            return False
-    return True
-
-
-def widen_if_narrow(df: DataFrame, partitions: int | None = None) -> DataFrame:
-    """``widen()`` only when the scan's parallelism is below the
-    session's — a no-op on well-split inputs (r15 optimization round).
-
-    The single-file fixtures (one parquet row group) plan a ONE-task
-    scan, so every per-row-expensive expression pipeline downstream
-    runs serially regardless of cores — measured 2x on the HOF
-    quality/token scoring at sf0.1 (doc_quality 0.55 → 0.31 s). On a
-    real cluster the scan has >= cores splits and this helper returns
-    the input unchanged, so the extra text shuffle is never paid where
-    the scan already parallelizes (the scale-adaptive form guide §2
-    asks for, vs widen()'s unconditional repartition which minhash
-    keeps because shingling is heavy enough to amortize it anywhere).
-
-    Apply it ONLY where the per-row work is heavy enough to amortize a
-    full-payload shuffle: the r15 driver bench measured 0.56-0.57x on
-    doc_token_stats/doc_dedup_stats (whitespace token count / md5
-    groupBy — too cheap) vs 1.2-1.4x on the HOF-scoring paths; the
-    cheap call sites were removed in r16.
-
-    SCAN-ONLY PRECONDITION, enforced (ADVICE r15 / VERDICT r15 item 7):
-    the parallelism probe reads ``df.rdd.getNumPartitions()``, which
-    forces physical planning — and under AQE, ``toRdd`` MATERIALIZES
-    the stages of any exchange in the subtree (which is why even a
-    ``localCheckpoint(eager=False)`` runs its subplan as it is planned),
-    so calling it on a derived (shuffled) input would silently execute
-    jobs at plan-construction time. The guard below therefore walks
-    the analyzed plan first and returns the input unchanged for
-    anything but projections/filters over a relation — such inputs
-    have a shuffle upstream anyway, i.e. they are already wide. Pinned
-    by a zero-jobs-at-construction test (tests/test_r16_widen_guard.py).
-    For a scan-only plan the probe plans physically but launches no job
-    (~10 ms) — cheap next to the work it saves.
-    """
-    if not _is_scan_only(df):
-        return df
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
-        return df
-    return df.repartition(n)
 
 
 def recommended_shingle_df_cap(n_docs: int) -> int:
@@ -179,16 +103,12 @@ def _hash31(col: Column) -> Column:
 
 
 def _hash31_md5(col: Column) -> Column:
-    """Engine-portable 31-bit base hash: first 8 hex chars of md5,
-    mod 2^31. Slower than xxhash64 (cryptographic digest + hex
-    parse) but expressible identically in any SQL engine
-    (`CAST(concat('0x', substr(md5(s),1,8)) AS BIGINT) % 2147483648`
-    in DuckDB) — the doc_simhash_md5 oracle-twin pattern applied to
-    MinHash (VERDICT r6 item 4a)."""
-    return (
-        F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
-        % F.lit(1 << 31)
-    )
+    """Engine-portable 31-bit base hash: ``md5_u32`` mod 2^31. Slower
+    than xxhash64 (cryptographic digest + hex parse) but expressible
+    identically in any SQL engine (``sql_md5_u32(s) % 2147483648`` in
+    DuckDB) — the doc_simhash_md5 oracle-twin pattern applied to
+    MinHash."""
+    return md5_u32(col) % F.lit(1 << 31)
 
 
 def _minhash_udf(params: list[tuple[int, int]], drop_hashes=None):
@@ -339,9 +259,9 @@ def minhash_lsh_candidates(
     # ((a*h + b) mod 2^61-1 over int64, identical overflow budget), so
     # signatures are bit-identical and the md5 twin's SQL oracle still
     # nests verbatim, but the (id, hash) explode SHUFFLE is gone
-    # entirely: the signature is map-only after widen(), which on a
-    # real cluster means zero signature-stage network traffic.
-    sh = widen(df).select(
+    # entirely: the signature is map-only, zero signature-stage network
+    # traffic.
+    sh = df.select(
         F.col(id_col).alias("__id"), tokenize(F.col(text_col)).alias("__tok")
     ).select("__id", shingles(F.col("__tok"), shingle_k).alias("__sh"))
     base_hash = _hash31_md5 if portable else _hash31

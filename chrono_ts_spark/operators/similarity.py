@@ -43,17 +43,11 @@ def brute_force_topk(
     query_id_alias: str = "query_id",
 ) -> DataFrame:
     """Exact cosine top-k of corpus vectors for each query vector."""
-    from .dedup import widen_if_narrow
-
     q = queries.select(
         F.col(id_col).alias(query_id_alias),
         vec_double(F.col(vec_col)).alias("__qv"),
     )
-    # r15: the per-(row × probe) interpreted HOF cosine is the cost
-    # center; a narrow scan (single-row-group fixture) serializes it on
-    # one task. widen_if_narrow parallelizes exactly then and is a
-    # no-op on well-split corpora (0.69 -> 0.38 s at sf0.1).
-    c = widen_if_narrow(corpus).select(
+    c = corpus.select(
         F.col(id_col).alias("neighbor_id"), vec_double(F.col(vec_col)).alias("__cv")
     )
     scored = (

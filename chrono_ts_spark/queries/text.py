@@ -20,10 +20,8 @@ from ..operators.dedup import (
     simhash,
     simhash_hamming_neighbors,
     tokenize,
-    widen,
-    widen_if_narrow,
 )
-from ..functions import eval_once
+from ..functions import eval_once, md5_u32, sql_md5_u32
 from ..operators.graph import connected_components
 from ..operators.textfns import (
     LANG_STOPWORDS,
@@ -80,11 +78,6 @@ GROUP BY lang
 )
 def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token counts aggregated per language."""
-    # r16: widen_if_narrow REMOVED (added r15). The driver's ground
-    # truth read 0.57x round-over-round with negative 8->32-core
-    # scaling: the per-row work here (whitespace token count) is too
-    # cheap to amortize a full-text RoundRobin shuffle. Narrow scans
-    # feed the map-side partial aggregate directly again.
     d = load_table(spark, sf_dir, "documents")
     t = d.select(
         "lang",
@@ -160,9 +153,6 @@ GROUP BY source
 )
 def doc_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-duplicate accounting per source via normalized content md5."""
-    # r16: widen_if_narrow REMOVED (added r15) — driver read 0.56x;
-    # an md5 groupBy is too cheap to amortize the added text shuffle
-    # (see doc_token_stats above).
     d = load_table(spark, sf_dir, "documents")
     h = content_md5(F.col("text")).alias("__h")
     return d.select("source", h).groupBy("source").agg(
@@ -309,8 +299,7 @@ FROM t
 )
 def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc quality score + BPE-ish token count."""
-    # r15: widen_if_narrow — see doc_token_stats (0.55 -> 0.31 s sf0.1)
-    d = widen_if_narrow(load_table(spark, sf_dir, "documents"))
+    d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         token_count(F.col("text")).alias("n_tokens"),
@@ -858,23 +847,11 @@ GROUP BY lang
 )
 def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-gate → dedup(keep-first) → per-language accounting."""
-    # r16: two changes, both driven by the committed plan dumps
-    # (plans/r16/pipeline_clean_corpus_{before,after}.txt):
-    # 1. widen_if_narrow REMOVED (added r15): the driver read this
-    #    query 0.82x with it, and the before-plan shows why the solo
-    #    "scoring-leg" win was illusory — Catalyst pushed the quality
-    #    filter BELOW the widen Exchange, so the expensive copy of the
-    #    scoring still ran single-task on the narrow scan and the
-    #    shuffle only parallelized the duplicate. 4-arm interleaved
-    #    probe (widen x barrier, median of 7): widen is a net loss in
-    #    both barrier arms at sf0.1; on cluster scans it is a no-op by
-    #    construction, so nothing is lost at scale.
-    # 2. eval_once barrier on quality (guide §4.4): quality is both
-    #    filtered on AND aggregated downstream, so predicate pushdown
-    #    substituted the full HOF pipeline into a second Filter
-    #    evaluation. The barrier keeps the filter above the Project:
-    #    one evaluation per row. Values identical (1-element shuffle
-    #    is the identity) — oracle hash-green at sf0.001/0.01/0.1.
+    # eval_once barrier on quality: quality is both filtered on AND
+    # aggregated downstream, so predicate pushdown would substitute the
+    # full HOF pipeline into a second Filter evaluation. The barrier
+    # keeps the filter above the Project: one evaluation per row. Values
+    # are identical (a 1-element shuffle is the identity).
     d = load_table(spark, sf_dir, "documents")
     scored = d.select(
         "doc_id",
@@ -1218,7 +1195,7 @@ def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     CC algorithms agreeing on every cluster label.
     """
     d = load_table(spark, sf_dir, "documents")
-    ex = _shingled(widen(d)).select("doc_id", F.explode("sh").alias("shingle"))
+    ex = _shingled(d).select("doc_id", F.explode("sh").alias("shingle"))
     # Shared shingle-partitioned exchange: `ex` (the expensive
     # tokenize+shingle explode) feeds BOTH the df aggregate and the
     # posting join — the twice-run-pipeline shape the r9 span probe
@@ -1352,7 +1329,7 @@ def doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zero-hit docs are preserved via left join (the common case — the
     output is the full decontamination report, not just the flags).
     """
-    s = _shingled(widen(load_table(spark, sf_dir, "documents")))
+    s = _shingled(load_table(spark, sf_dir, "documents"))
     bench = s.filter(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("bench_id"), F.explode("sh").alias("shingle")
     )
@@ -1558,12 +1535,8 @@ def _u32():
     """md5-derived uniform in [0,1) from doc_id — the Spark twin of
     _SQL_U32; keep the two in lockstep (split membership and mixture
     sampling both key off it)."""
-    return (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        .cast("double")
-        / F.lit(4294967296.0)
-    )
+    u32 = md5_u32(F.col("doc_id").cast("string"))
+    return u32.cast("double") / F.lit(4294967296.0)
 
 
 _SQL_U32 = (
@@ -1831,11 +1804,8 @@ _CMS_D = 4
 _CMS_W = 512
 _CMS_TOPN = 25
 
-from ..functions import md5_u32 as _md5_u32  # noqa: E402
-from ..functions import sql_md5_u32 as _sql_md5_u32  # noqa: E402
-
 _SQL_CMS_COL = (
-    _sql_md5_u32("CAST({r} AS VARCHAR) || ':' || {tok}") + f" % {_CMS_W}"
+    sql_md5_u32("CAST({r} AS VARCHAR) || ':' || {tok}") + f" % {_CMS_W}"
 )
 
 
@@ -1890,7 +1860,7 @@ def doc_cms_heavy_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     rs = F.explode(F.array(*[F.lit(i) for i in range(_CMS_D)])).alias("r")
 
     def cms_col(r, tok):
-        return _md5_u32(F.concat(r.cast("string"), F.lit(":"), tok)) % _CMS_W
+        return md5_u32(F.concat(r.cast("string"), F.lit(":"), tok)) % _CMS_W
 
     cells = (
         toks.select("token", rs)
@@ -2119,10 +2089,7 @@ def doc_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization sqrt is exact so weights are bit-identical."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(tokenize(F.col("text"))).alias("token"))
-    bucket = (
-        F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("bigint")
-        % F.lit(_FH_DIM)
-    ).cast("int")
+    bucket = (md5_u32("token") % F.lit(_FH_DIM)).cast("int")
     tf = tok.select("doc_id", bucket.alias("bucket")).groupBy(
         "doc_id", "bucket"
     ).agg(F.count(F.lit(1)).alias("tf"))
@@ -2173,10 +2140,7 @@ def inverted_index(d: DataFrame, n_shards: int = _INV_SHARDS, min_df: int = 5) -
         d.select("doc_id", F.explode(tokenize(F.col("text"))).alias("token"))
         .distinct()
     )
-    shard = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint") % n_shards
-    ).cast("int")
+    shard = (md5_u32(F.col("doc_id").cast("string")) % n_shards).cast("int")
     shards = (
         tok.select("token", shard.alias("shard"), "doc_id")
         .groupBy("token", "shard")
@@ -3415,7 +3379,7 @@ def doc_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     ).otherwise(F.array().cast("array<struct<pos:int,wh:string>>"))
-    w = widen(d).select("doc_id", F.explode(win).alias("x")).select(
+    w = d.select("doc_id", F.explode(win).alias("x")).select(
         "doc_id", F.col("x.pos").alias("pos"), F.col("x.wh").alias("wh")
     )
     # Materialize the hashed-window stream through ONE wh-partitioned
@@ -3663,9 +3627,7 @@ def doc_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # md5-u32 -> uniform in (0,1): (h + 1) / (2^32 + 1) keeps u strictly
     # inside the open interval so ln never sees 0
     u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("double")
-        + F.lit(1.0)
+        md5_u32(F.col("doc_id").cast("string")).cast("double") + F.lit(1.0)
     ) / F.lit(4294967297.0)
     key_fp = (
         F.round(

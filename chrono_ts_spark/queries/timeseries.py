@@ -6945,22 +6945,14 @@ def ts_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     b = spark.range(1, _PB_B + 1).select(F.col("id").cast("int").alias("b"))
-    u32 = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("pb-"),
-                    F.col("b").cast("string"),
-                    F.lit("-"),
-                    F.col("event_id").cast("string"),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    u32 = md5_u32(
+        F.concat(
+            F.lit("pb-"),
+            F.col("b").cast("string"),
+            F.lit("-"),
+            F.col("event_id").cast("string"),
+        )
+    )
     wt = (
         F.when(u32 < _PB_CUTS[0], 0)
         .when(u32 < _PB_CUTS[1], 1)

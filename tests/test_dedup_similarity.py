@@ -79,13 +79,12 @@ class TestMinhashLSH:
             _perm_params,
             shingles,
             tokenize,
-            widen,
         )
 
         df = spark.createDataFrame(corpus, "doc_id long, text string")
         params = _perm_params(64, 42)
         for base_hash in (_hash31, _hash31_md5):
-            sh = widen(df).select(
+            sh = df.select(
                 F.col("doc_id").alias("id"),
                 shingles(tokenize(F.col("text")), 5).alias("sh"),
             )
@@ -149,9 +148,10 @@ class TestMinhashLSH:
 
     def test_candidate_verification_builds_lazily(self, spark, corpus, tmp_path):
         """LSH candidates plus exact verification build without running
-        a Spark job, and the plan reads no materialized checkpoint. The
-        corpus goes through parquet because a DataFrame made from a
-        Python list is itself an ExistingRDD scan."""
+        a Spark job, the plan reads no materialized checkpoint, and the
+        corpus is read as the scan splits it, with no round-robin
+        spread. The corpus goes through parquet because a DataFrame
+        made from a Python list is itself an ExistingRDD scan."""
         from chrono_ts_spark.planinfo import explain_text
 
         path = str(tmp_path / "docs")
@@ -162,7 +162,9 @@ class TestMinhashLSH:
         cands = minhash_lsh_candidates(df, "doc_id", "text", 64, 16, 5)
         verified = exact_jaccard_pairs(df, cands, "doc_id", "text", 5)
         assert len(tracker.getJobIdsForGroup()) == before
-        assert "ExistingRDD" not in explain_text(verified, "simple")
+        plan = explain_text(verified, "simple")
+        assert "ExistingRDD" not in plan
+        assert "RoundRobinPartitioning" not in plan
 
     def test_portable_mode_planted_near_dups(self, spark, corpus):
         # r7 oracle twin: the md5 portable mode must find the planted
@@ -395,10 +397,19 @@ class TestSimilarity:
                 vid += 1
         return spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
 
-    def test_brute_force_matches_python(self, spark, clustered):
-        data = {r.vec_id: (list(r.embedding), r.label) for r in clustered.collect()}
-        probes = clustered.filter(F.col("vec_id") < 3)
-        out = brute_force_topk(clustered, probes, k=3)
+    def test_brute_force_matches_python(self, spark, clustered, tmp_path):
+        """Exact top-k equals a Python reference on a one-file corpus,
+        which is scored as its single-task scan reads it: no
+        round-robin spread is planned."""
+        from chrono_ts_spark.planinfo import explain_text
+
+        path = str(tmp_path / "vectors")
+        clustered.coalesce(1).write.parquet(path)
+        corpus = spark.read.parquet(path)
+        data = {r.vec_id: (list(r.embedding), r.label) for r in corpus.collect()}
+        probes = corpus.filter(F.col("vec_id") < 3)
+        out = brute_force_topk(corpus, probes, k=3)
+        assert "RoundRobinPartitioning" not in explain_text(out, "simple")
         got = {(r.query_id, r.rnk): r.neighbor_id for r in out.collect()}
 
         def cos(a, b):

@@ -67,13 +67,35 @@ RULES: dict[str, dict[str, list[str]]] = {
         "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"],
     },
     "doc_minhash_near_dups": {
+        # signatures are computed on the corpus as its scan splits it
         "want": [],
-        "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin", "Scan ExistingRDD"],
+        "forbid": [
+            "CartesianProduct",
+            "BroadcastNestedLoopJoin",
+            "Scan ExistingRDD",
+            "RoundRobinPartitioning",
+        ],
     },
     "emb_cosine_topk": {
         # deliberate broadcast NL: probes are broadcast, corpus streams
+        # as its scan splits it
         "want": ["BroadcastNestedLoopJoin"],
-        "forbid": ["CartesianProduct"],
+        "forbid": ["CartesianProduct", "RoundRobinPartitioning"],
+    },
+    "doc_quality": {
+        # per-doc scoring runs on the corpus as its scan splits it
+        "want": [],
+        "forbid": ["RoundRobinPartitioning"],
+    },
+    "doc_decontaminate": {
+        # shingling runs on the corpus as its scan splits it
+        "want": [],
+        "forbid": ["RoundRobinPartitioning"],
+    },
+    "doc_repeated_spans": {
+        # window hashing runs on the corpus as its scan splits it
+        "want": [],
+        "forbid": ["RoundRobinPartitioning"],
     },
     "rel_pricing_summary": {
         "want": ["PushedFilters: [IsNotNull(l_shipdate)", "HashAggregate"],
@@ -233,7 +255,12 @@ RULES: dict[str, dict[str, list[str]]] = {
         # banded equi-join, never all-pairs (portable twin keeps the
         # fast path's candidate shape)
         "want": [],
-        "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin", "Scan ExistingRDD"],
+        "forbid": [
+            "CartesianProduct",
+            "BroadcastNestedLoopJoin",
+            "Scan ExistingRDD",
+            "RoundRobinPartitioning",
+        ],
     },
     "doc_simhash_md5_neighbors": {
         # pigeonhole-band equi-join, never all-pairs
