@@ -88,14 +88,16 @@ def connected_components(
     """
     cur = _canon(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
     cur = cur.localCheckpoint(eager=True)
+    n_cur = cur.count()
     for _ in range(max_iterations):
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)
+        n_nxt = nxt.count()
         # converged iff the canonical edge sets are equal; both sets are
         # distinct, so equality == same count + empty one-sided except
-        if nxt.count() == cur.count() and nxt.exceptAll(cur).isEmpty():
+        if n_nxt == n_cur and nxt.exceptAll(cur).isEmpty():
             cur = nxt
             break
-        cur = nxt
+        cur, n_cur = nxt, n_nxt
     else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "

@@ -72,19 +72,19 @@ def misra_gries(df: DataFrame, col: str, k: int = 64) -> DataFrame:
     # = thr), so the top-(k+1) cut — TakeOrderedAndProject, per-
     # partition heaps, no global sort — already holds every survivor,
     # and the rank window runs limit-bounded (the explain_audit window
-    # rule's contract).
+    # rule's contract). The threshold is read in the same window pass,
+    # so the cut is referenced once and nothing runs at build time.
     order = [F.col("est").desc(), F.col("item")]
-    # materialize the <= k+1-row top table once: the threshold branch
-    # and the result branch both read `ranked`, and without truncation
-    # each re-runs the full-input partial-sketch pass (r7 review)
-    top = summed.orderBy(*order).limit(k + 1).localCheckpoint(eager=True)
-    ranked = top.withColumn("__r", F.row_number().over(Window.orderBy(*order)))
-    thr = ranked.agg(
-        F.max(F.when(F.col("__r") == k + 1, F.col("est"))).alias("__thr")
+    w = Window.orderBy(*order)
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    ranked = summed.orderBy(*order).limit(k + 1).select(
+        "item",
+        "est",
+        F.row_number().over(w).alias("__r"),
+        F.nth_value("est", k + 1).over(whole).alias("__thr"),
     )
     return (
         ranked.filter(F.col("__r") <= k)
-        .crossJoin(F.broadcast(thr))
         .withColumn("est", F.col("est") - F.coalesce(F.col("__thr"), F.lit(0)))
         .filter(F.col("est") > 0)
         .select("item", "est")

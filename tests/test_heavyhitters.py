@@ -46,3 +46,20 @@ def test_mg_exact_when_k_exceeds_distinct(spark):
     est = {r.item: r.est for r in misra_gries(df, "tok", k=10).collect()}
     # fewer distinct items than k in every partition: no decrements ever
     assert est == {"a": 10, "b": 5, "c": 2}
+
+
+def test_mg_builds_lazily(spark, tmp_path):
+    """Building the sketch runs no Spark job and the plan reads no
+    materialized checkpoint: the top-(k+1) cut is referenced once. The
+    input goes through parquet because a DataFrame made from a Python
+    list is itself an ExistingRDD scan."""
+    from chrono_ts_spark.planinfo import explain_text
+
+    path = str(tmp_path / "tokens")
+    spark.createDataFrame([(t,) for t in zipf_rows()], "tok string").write.parquet(path)
+    df = spark.read.parquet(path)
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup())
+    sketch = misra_gries(df, "tok", k=32)
+    assert len(tracker.getJobIdsForGroup()) == before
+    assert "ExistingRDD" not in explain_text(sketch, "simple")

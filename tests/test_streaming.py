@@ -18,6 +18,15 @@ def as_sorted_rows(df, cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
+@pytest.fixture
+def shared_buckets(monkeypatch):
+    """Seven state buckets, so the fixture's users share them: each
+    user's fold must stay exact however its bucket is shared."""
+    from chrono_ts_spark.streaming import stateful
+
+    monkeypatch.setattr(stateful, "_N_BUCKETS", 7)
+
+
 @pytest.mark.slow
 def test_tumbling_stream_equals_batch(spark):
     stream = REG["stream_bucket_counts"].fn(spark, SF_SMOKE)
@@ -143,7 +152,7 @@ def test_stream_stream_join_left_equals_batch_range_join(spark):
 
 
 @pytest.mark.slow
-def test_ema_stream_equals_batch(spark):
+def test_ema_stream_equals_batch(spark, shared_buckets):
     from chrono_ts_spark.streaming.stateful import batch_ema
 
     stream = REG["stream_ema"].fn(spark, SF_SMOKE)
@@ -250,6 +259,9 @@ def test_watermark_drops_late_rows(spark, tmp_path):
 
 @pytest.mark.slow
 def test_running_extrema_stream_equals_batch(spark):
+    # The update-mode aggregation's last snapshot per user must equal
+    # the batch aggregate exactly: min/max/count carry no float
+    # arithmetic.
     stream = REG["stream_running_extrema"].fn(spark, SF_SMOKE)
     batch = load_table(spark, SF_SMOKE, "events").groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -258,79 +270,6 @@ def test_running_extrema_stream_equals_batch(spark):
     )
     cols = ["user_id", "n_events", "min_value", "max_value"]
     assert as_sorted_rows(stream, cols) == as_sorted_rows(batch, cols)
-
-
-@pytest.mark.slow
-def test_running_extrema_native_equals_batch(spark):
-    # The JVM-native update-mode aggregation (zero Python state
-    # round-trips) must agree with the batch aggregate exactly —
-    # min/max/count are commutative monoids, so this is the
-    # production path for monoid recurrences (r14, VERDICT r13 item 4).
-    from chrono_ts_spark.streaming.stateful import run_running_extrema_native
-
-    stream = run_running_extrema_native(spark, SF_SMOKE)
-    batch = load_table(spark, SF_SMOKE, "events").groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("value").alias("min_value"),
-        F.max("value").alias("max_value"),
-    )
-    cols = ["user_id", "n_events", "min_value", "max_value"]
-    assert as_sorted_rows(stream, cols) == as_sorted_rows(batch, cols)
-
-
-@pytest.mark.slow
-def test_ema_bucketed_equals_per_user(spark):
-    # The bucketed state layout (user_id % n_buckets group key, packed
-    # binary state) must reproduce the per-user plan BIT-EXACTLY: the
-    # global (ts, event_id) sort is a total order, so each user's fold
-    # sequence and arithmetic are identical (r14, VERDICT r13 item 4).
-    from chrono_ts_spark.streaming.stateful import (
-        run_ema_stream,
-        run_ema_stream_bucketed,
-    )
-
-    per_user = run_ema_stream(spark, SF_SMOKE)
-    bucketed = run_ema_stream_bucketed(spark, SF_SMOKE, n_buckets=7)
-    cols = ["user_id", "event_id", "ts_s", "value", "ema"]
-    assert as_sorted_rows(bucketed, cols) == as_sorted_rows(per_user, cols)
-
-
-@pytest.mark.slow
-def test_holt_kalman_bucketed_equal_per_user(spark):
-    # The generic bucketed-fold builder must reproduce the per-user
-    # plans bit-exactly for both 2-field recurrences (r14).
-    from chrono_ts_spark.streaming.stateful import (
-        run_holt_stream,
-        run_holt_stream_bucketed,
-        run_kalman_stream,
-        run_kalman_stream_bucketed,
-    )
-
-    h_cols = ["user_id", "event_id", "ts_s", "value", "level", "trend"]
-    assert as_sorted_rows(
-        run_holt_stream_bucketed(spark, SF_SMOKE, n_buckets=7), h_cols
-    ) == as_sorted_rows(run_holt_stream(spark, SF_SMOKE), h_cols)
-
-    k_cols = ["user_id", "event_id", "ts_s", "value", "kalman", "err_var"]
-    assert as_sorted_rows(
-        run_kalman_stream_bucketed(spark, SF_SMOKE, n_buckets=7), k_cols
-    ) == as_sorted_rows(run_kalman_stream(spark, SF_SMOKE), k_cols)
-
-
-@pytest.mark.slow
-def test_cusum_bucketed_equals_per_user(spark):
-    # r15 (VERDICT r14 item 5): the last heavy per-user pandas-state
-    # stream rides the generic bucketed-fold builder; the alarm reset
-    # must land AFTER the emitted row, exactly as the per-user fn does.
-    from chrono_ts_spark.streaming.stateful import (
-        run_cusum_stream,
-        run_cusum_stream_bucketed,
-    )
-
-    cols = ["user_id", "event_id", "ts_s", "value", "s_plus", "s_minus", "alarm"]
-    assert as_sorted_rows(
-        run_cusum_stream_bucketed(spark, SF_SMOKE, n_buckets=7), cols
-    ) == as_sorted_rows(run_cusum_stream(spark, SF_SMOKE), cols)
 
 
 @pytest.mark.slow
@@ -452,7 +391,7 @@ class TestKafkaParse:
             kafka_events_stream(spark, "localhost:9092", "events")
 
 
-def test_cusum_stream_equals_batch(spark):
+def test_cusum_stream_equals_batch(spark, shared_buckets):
     """Online streaming CUSUM == batch changepoint op with the same
     fixed target parameters (exact, not approximate)."""
     from chrono_ts_spark.operators.changepoint import cusum
@@ -484,11 +423,13 @@ def test_cusum_stream_equals_batch(spark):
 
 
 @pytest.mark.slow
-def test_cusum_stream_state_crosses_batches(spark, tmp_path):
-    """Two files -> two micro-batches: the (s_plus, s_minus) state must
-    carry across the batch boundary (no restart at zero)."""
+def test_cusum_stream_state_crosses_batches(spark, tmp_path, monkeypatch):
+    """Two files -> two micro-batches: the user's (s_plus, s_minus) in
+    its bucket's packed state must carry across the batch boundary (no
+    restart at zero)."""
     from datetime import datetime
 
+    from chrono_ts_spark.streaming import replay
     from chrono_ts_spark.streaming.stateful import run_cusum_stream
     import pathlib
 
@@ -518,34 +459,16 @@ def test_cusum_stream_state_crosses_batches(spark, tmp_path):
                                   (2, t(1), 5, "c", 13.0, "{}")])
     write_file("events2.parquet", [(3, t(2), 5, "c", 13.0, "{}")])
 
-    # pathGlobFilter only matches events.parquet; widen via a direct run.
-    # (This test writes its own ns-as-bigint files above, so it declares
-    # that encoding locally — replay.py now discovers the encoding from
-    # the footer instead of exporting a fixed schema.)
-    from chrono_ts_spark.streaming.stateful import cusum_update_fn, _CUSUM_OUT, _CUSUM_STATE
-    from chrono_ts_spark.streaming.replay import _run_to_memory
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    ns_schema = (
-        "event_id long, ts long, user_id long, "
-        "event_type string, value double, props string"
+    started = []
+    start = replay.start_bounded
+    monkeypatch.setattr(
+        replay, "start_bounded", lambda w, s: started.append(start(w, s)) or started[-1]
     )
-    raw = (
-        spark.readStream.format("parquet")
-        .schema(ns_schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(str(src))
-        .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        .withWatermark("ts", "1 hour")
-    )
-    out = raw.groupBy("user_id").applyInPandasWithState(
-        cusum_update_fn(10.0, 2.0, 0.5, 2.0),
-        outputStructType=_CUSUM_OUT,
-        stateStructType=_CUSUM_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    rows = {r.event_id: r for r in _run_to_memory(out, spark, "append").collect()}
+    monkeypatch.setenv("SPARK_GRAFT_REPLAY_GLOB", "events*.parquet")
+    out = run_cusum_stream(spark, str(src), mu=10.0, sigma=2.0, h_sigma=2.0)
+    rows = {r.event_id: r for r in out.collect()}
+    fed = [p["numInputRows"] for p in started[0].recentProgress if p["numInputRows"]]
+    assert fed == [2, 1]
     assert len(rows) == 3
     assert rows[1].s_plus == 2.0 and rows[1].alarm == 0
     assert rows[2].s_plus == 4.0 and rows[2].alarm == 0
@@ -575,7 +498,7 @@ def test_stream_static_enrich_equals_batch(spark):
     assert as_sorted_rows(stream, cols) == as_sorted_rows(batch, cols)
 
 
-def test_holt_stream_equals_batch(spark):
+def test_holt_stream_equals_batch(spark, shared_buckets):
     # r6: same bit-exactness contract as EMA — the stream replays the
     # identical IEEE recurrence, so level/trend match the batch twin
     # exactly (not approx) on the in-order replay.
@@ -601,7 +524,7 @@ def test_m4_stream_equals_batch(spark):
     assert as_sorted_rows(stream, cols) == as_sorted_rows(batch, cols)
 
 
-def test_kalman_stream_equals_batch(spark):
+def test_kalman_stream_equals_batch(spark, shared_buckets):
     # r6 late: the stream replays the identical IEEE Kalman recurrence
     # (state = x, P per key), so estimates and error variances match
     # the batch twin bit-for-bit on the in-order replay.
