@@ -170,61 +170,16 @@ def run_ema_stream(
     the memory sink OOMs the local driver heap at the r11 30M probe
     (same class as run_kalman_stream / sessions / enrich; the 30M
     parquet-sink run completes)."""
-    return _run_bucketed(
-        spark, sf_dir, ema_bucketed_update_fn(alpha), _EMA_OUT, sink_dir
-    )
-
-
-def ema_bucketed_update_fn(alpha: float):
-    """The bucketed layout's update with the EMA fold inlined: no
-    per-event fold call (bucketed_fold_update_fn's contract otherwise).
-    Self-contained closure (stdlib + pandas + numpy only)."""
     a = float(alpha)
     b = 1.0 - a
 
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def fold(st, x):
+        e = x if st is None else a * x + b * st[0]
+        return (e,), (e,)
 
-        if state.exists:
-            ids_b, emas_b = state.get
-            cur = dict(
-                zip(
-                    np.frombuffer(ids_b, dtype=np.int64).tolist(),
-                    np.frombuffer(emas_b, dtype=np.float64).tolist(),
-                )
-            )
-        else:
-            cur = {}
-        batch = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        emas = []
-        get = cur.get
-        for uid, val in zip(
-            batch["user_id"].tolist(), batch["value"].tolist()
-        ):
-            e = get(uid)
-            e = val if e is None else a * val + b * e
-            cur[uid] = e
-            emas.append(e)
-        res = pd.DataFrame(
-            {
-                "user_id": batch["user_id"].to_numpy(),
-                "event_id": batch["event_id"].to_numpy(),
-                "ts_s": batch["ts"].dt.strftime("%Y-%m-%d %H:%M:%S"),
-                "value": batch["value"].to_numpy(),
-                "ema": emas,
-            }
-        )
-        ids = np.fromiter(cur.keys(), dtype=np.int64, count=len(cur))
-        vals = np.fromiter(cur.values(), dtype=np.float64, count=len(cur))
-        order = np.argsort(ids, kind="stable")
-        state.update((ids[order].tobytes(), vals[order].tobytes()))
-        yield res
-
-    return update
+    return _run_bucketed(
+        spark, sf_dir, bucketed_fold_update_fn(1, fold, ["ema"]), _EMA_OUT, sink_dir
+    )
 
 
 def batch_ema(spark: SparkSession, sf_dir: str, alpha: float = 0.2) -> DataFrame:
