@@ -195,7 +195,8 @@ def stream_stream_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "ST6", "stream-oracled"),
 )
 def stream_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful op: per-user EMA via applyInPandasWithState.
+    """Custom stateful op: each user's EMA as a fold over the bucketed
+    applyInPandasWithState state layout (streaming/stateful.py).
 
     Oracled (r9): same output columns as batch ts_ema and bit-exact
     equivalence on the in-order replay (pytest), so the batch
@@ -216,10 +217,11 @@ def stream_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "ST6", "stream-oracled"),
 )
 def stream_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful op (r6): per-user Holt linear level+trend via
-    applyInPandasWithState — the streaming twin of ts_holt_linear,
-    bit-exact on the in-order replay (pinned in pytest), so the batch
-    recursive-CTE oracle verifies the stream directly."""
+    """Custom stateful op (r6): each user's Holt linear level+trend as a
+    fold over the bucketed applyInPandasWithState state layout — the
+    streaming twin of ts_holt_linear, bit-exact on the in-order replay
+    (pinned in pytest), so the batch recursive-CTE oracle verifies the
+    stream directly."""
     from ..streaming.stateful import run_holt_stream
 
     return run_holt_stream(spark, sf_dir)
@@ -235,7 +237,8 @@ FROM events GROUP BY user_id
     tags=("streaming", "ST6", "stream-oracled"),
 )
 def stream_running_extrema(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """transformWithStateInPandas: per-user running min/max/count.
+    """Running min/max/count per user as a JVM-native update-mode
+    streaming aggregation (no Python state).
 
     Oracled: the last emitted snapshot per user (max n_events) must
     equal the batch extrema — min/max/count carry no float arithmetic,
@@ -299,8 +302,9 @@ FROM c
     tags=("streaming", "ST6", "changepoint", "stream-oracled"),
 )
 def stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Online CUSUM chart per user (applyInPandasWithState; state = two
-    doubles/key). Oracled: the fixed-target recurrence replays as a
+    """Online CUSUM chart per user (a fold over the bucketed
+    applyInPandasWithState state layout; two doubles of state per
+    user). Oracled: the fixed-target recurrence replays as a
     recursive CTE (slack/threshold fold to constants); exact batch
     equivalence vs operators/changepoint.py is additionally pinned in
     tests/test_streaming.py."""
@@ -449,9 +453,10 @@ def stream_alert_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "ST6", "stream-oracled"),
 )
 def stream_kalman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful op (r6 late): per-user scalar Kalman filter via
-    applyInPandasWithState — the streaming twin of ts_kalman_filter,
-    equivalence-tested bit-for-bit in tests/test_r6c_ops.py."""
+    """Custom stateful op (r6 late): each user's scalar Kalman filter as
+    a fold over the bucketed applyInPandasWithState state layout — the
+    streaming twin of ts_kalman_filter, equivalence-tested bit-for-bit
+    in tests/test_streaming.py."""
     from ..streaming.stateful import run_kalman_stream
 
     return run_kalman_stream(spark, sf_dir)

@@ -273,6 +273,32 @@ def test_running_extrema_stream_equals_batch(spark):
 
 
 @pytest.mark.slow
+def test_running_extrema_native_equals_batch(spark, monkeypatch):
+    # Called directly, the extrema runner keeps its state in the JVM
+    # state store (a streaming aggregation, no Python state operator)
+    # and still agrees with the batch aggregate exactly.
+    from chrono_ts_spark.streaming import replay
+    from chrono_ts_spark.streaming.stateful import run_running_extrema_stream
+
+    started = []
+    start = replay.start_bounded
+    monkeypatch.setattr(
+        replay, "start_bounded", lambda w, s: started.append(start(w, s)) or started[-1]
+    )
+    stream = run_running_extrema_stream(spark, SF_SMOKE)
+    batch = load_table(spark, SF_SMOKE, "events").groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.min("value").alias("min_value"),
+        F.max("value").alias("max_value"),
+    )
+    cols = ["user_id", "n_events", "min_value", "max_value"]
+    assert as_sorted_rows(stream, cols) == as_sorted_rows(batch, cols)
+    assert len(started) == 1
+    ops = [o["operatorName"] for o in started[0].lastProgress["stateOperators"]]
+    assert ops and not any("Pandas" in op for op in ops), ops
+
+
+@pytest.mark.slow
 def test_parquet_streaming_sink(spark, tmp_path):
     """S6: the production file sink — tumbling counts streamed to
     parquet, read back, equal to the memory-sink/batch result."""
