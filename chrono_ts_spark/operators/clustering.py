@@ -1,21 +1,25 @@
-"""Distributed Euclidean k-means (Lloyd's) over an embedding column.
+"""Distributed Euclidean k-means (Lloyd's) over an embedding column,
+and ``lloyd_fit``, the one distributed Lloyd trainer behind it,
+similarity.ivf_fit_centroids and pq.pq_fit.
 
 The clustering primitive of the LLM-data-pipeline surface (SemDeDup-
 style semantic dedup, corpus stratification, IVF coarse quantizers all
-sit on it). Same determinism discipline as ivf_fit_centroids /
-pq_fit (operators/similarity.py:179, operators/pq.py:56):
+sit on it). The trainers differ only in their init and their
+assignment rule; ``lloyd_fit`` owns everything else:
 
-- init = the first k vectors by id (deterministic, layout-independent;
-  a seeded k-means++ is the documented quality upgrade — determinism
-  would survive it because the seed fixes the probe sequence);
-- assignment = Arrow pandas_udf, argmin squared L2 with ties broken to
-  the lowest centroid id (BLAS matmul per batch, vectors never leave
-  executors);
-- update = mapInPandas partial sums: one k x dims matrix of 1e-9
-  fixed-point int64 coordinate sums per Arrow batch (addition-order-
-  immune, so centroids are bit-deterministic under any partitioning);
-  only k x dims x batches tiny rows shuffle and only the k x dims
-  merged matrix reaches the driver (the sanctioned bounded collect);
+- init (kmeans_fit) = the first k vectors by id (deterministic,
+  layout-independent; a seeded k-means++ is the documented quality
+  upgrade — determinism would survive it because the seed fixes the
+  probe sequence); IVF and PQ use ``_stride_init``;
+- assignment (kmeans_fit) = argmin squared L2 with ties broken to
+  the lowest centroid id (BLAS matmul per Arrow batch, vectors never
+  leave executors); IVF takes the cosine argmax, PQ ``_encode_np``;
+- update = mapInPandas partial sums: per Arrow batch, one int64
+  matrix of 1e-9 HALF-UP fixed-point coordinate sums per cell
+  (addition-order-immune, so centroids are bit-deterministic under any
+  partitioning); only cells x dims x batches tiny rows shuffle, and
+  only the merged cells x dims matrix reaches the driver (the
+  sanctioned bounded collect);
 - empty clusters keep their previous centroid (no resample — RNG-free).
 
 Scale: each Lloyd round shuffles O(k x dims x batches) integers —
@@ -25,6 +29,8 @@ took the 500k x 64 fit from 187 s to 15 s — BASELINE.md.)
 """
 
 from __future__ import annotations
+
+from fractions import Fraction
 
 import numpy as np
 import pandas as pd
@@ -69,6 +75,23 @@ def _sqdist_udf(centroids: np.ndarray):
     return sqdist
 
 
+def _head_by_id(df: DataFrame, k: int, id_col: str, vec_col: str) -> np.ndarray:
+    """The first k vectors of ``df`` by id as an (n <= k, dims) matrix."""
+    rows = df.orderBy(id_col).limit(k).select(vec_col).collect()
+    return np.array([list(r[0]) for r in rows], dtype=np.float64)
+
+
+def _stride_init(df: DataFrame, k: int, id_col: str, vec_col: str) -> np.ndarray:
+    """The IVF/PQ init: the first k vectors by id among every
+    (n // k)-th id. Sparse or non-contiguous id spaces can leave the
+    modulo probe short; then the first k rows by id (deterministic,
+    layout-independent). May return fewer than k rows on a small
+    corpus — each caller applies its own rule."""
+    stride = max(1, df.count() // k)
+    init = _head_by_id(df.filter(F.col(id_col) % stride == 0), k, id_col, vec_col)
+    return init if len(init) >= k else _head_by_id(df, k, id_col, vec_col)
+
+
 def kmeans_fit(
     df: DataFrame,
     dims: int,
@@ -79,46 +102,24 @@ def kmeans_fit(
 ) -> np.ndarray:
     """Deterministic Lloyd's iterations; returns the (k, dims) centroid
     matrix. See module docstring for the determinism contract."""
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(df.sparkSession)
-    init_rows = df.orderBy(id_col).limit(k).select(vec_col).collect()
-    if len(init_rows) < k:
+    init = _head_by_id(df, k, id_col, vec_col)
+    if len(init) < k:
         raise ValueError(f"corpus has fewer than k={k} vectors")
-    centroids = np.array([list(r[0]) for r in init_rows], dtype=np.float64)
 
-    for _ in range(iters):
-        partials = df.select(vec_col).mapInPandas(
-            _partial_sums_fn(centroids, dims, vec_col),
-            schema="cluster int, pos int, s long, n long",
-        )
-        sums = (
-            partials.groupBy("cluster", "pos")
-            .agg(
-                F.sum(F.col("s").cast("decimal(38,0)")).cast("double").alias("s"),
-                F.sum("n").alias("n"),
-            )
-            .collect()
-        )
-        new = centroids.copy()
-        acc: dict[int, np.ndarray] = {}
-        cnt: dict[int, int] = {}
-        for r in sums:
-            acc.setdefault(r.cluster, np.zeros(dims))[r.pos] = r.s
-            cnt[r.cluster] = r.n
-        for cid, vec in acc.items():
-            new[cid] = vec / 1e9 / cnt[cid]
-        centroids = new
-    return centroids
+    def euclid(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
+        c = cents[0]
+        return np.argmin(-2.0 * (mat @ c.T) + (c**2).sum(axis=1), axis=1)[:, None]
+
+    return lloyd_fit(df, init[None], euclid, iters, vec_col)[0]
 
 
-def guard_int64_partials(qf: np.ndarray) -> np.ndarray:
+def _guard_int64_partials(qf: np.ndarray) -> np.ndarray:
     """Bound a float fixed-point batch and cast it to int64, failing
     loudly if either the cast or the partial sums could wrap.
 
-    The int64 per-batch accumulators (here, similarity._ivf_partial_sums_fn,
-    pq._pq_partial_sums_fn) rely on the session's Arrow batch size and
-    |coord| <= ~1e3 for overflow headroom (ADVICE r14): a caller raising
+    The int64 per-batch accumulators of ``lloyd_fit`` rely on the
+    session's Arrow batch size and |coord| <= ~1e3 for overflow
+    headroom (ADVICE r14): a caller raising
     spark.sql.execution.arrow.maxRecordsPerBatch or feeding
     large-magnitude embeddings would wrap silently and corrupt centroids
     with no error. Worst case one cell receives every row of the batch,
@@ -143,49 +144,87 @@ def guard_int64_partials(qf: np.ndarray) -> np.ndarray:
     return qf.astype(np.int64)
 
 
-def _partial_sums_fn(centroids: np.ndarray, dims: int, vec_col: str):
-    """One Lloyd round's map side: per ARROW BATCH, assign every vector
-    (BLAS argmin) and accumulate a k x dims matrix of 1e-9 fixed-point
-    coordinate sums plus per-cluster counts; emit k*dims tiny rows.
+def lloyd_fit(
+    df: DataFrame, cents: np.ndarray, assign, iters: int, vec_col: str
+) -> np.ndarray:
+    """``iters`` deterministic distributed Lloyd rounds from ``cents``.
 
-    The shuffle therefore carries O(k * dims * batches) integers, not
-    O(rows * dims) exploded values — the mapInPandas partial-sum shape
-    promised in the module docstring (measured at 500k x 64: 187 s
-    with the exploded shuffle -> 15 s with this path; BASELINE.md).
-    Integer partials are addition-order-immune, so centroids stay bit-deterministic under any partitioning;
-    the 1e-9 quantization matches the decimal(18,9) discipline of
-    pq_fit. Overflow headroom: |coord| <= ~1e3 -> per-batch sums
-    <= ~1e12 * rows_per_batch; the driver-side merge re-widens to
-    decimal(38,0).
+    ``cents`` is a (G, k, w) array: G codebooks of k centroids, codebook
+    g over the vector's g-th w-wide slice (G = 1 for k-means and IVF,
+    G = m_sub subspaces for PQ). ``assign(mat, cents)`` maps a (B, G*w)
+    float64 batch to its (B, G) cell ids. Returns the (G, k, w) result.
+
+    Each round is one Spark job. The map side (one mapInPandas pass)
+    assigns every vector of an Arrow batch and emits one
+    (g, c, pos, s, n) row per occupied cell and coordinate: s sums the
+    coordinates rounded HALF-UP at 1e-9 (``floor(|x|·1e9 + 0.5)·
+    sign(x)``) as int64, n counts the cell's rows. The shuffle
+    therefore carries O(G × k × w × batches) integers, never
+    O(rows × dims). Ulp contract: a decimal(18,9) cast rounds HALF_UP
+    too, but on the double's shortest decimal string rather than its
+    binary value; the two differ only where those round differently
+    at the 9th decimal, which no coordinate of the 8M IVF fit probe
+    did (docs/scale.md).
+    ``groupBy(g, c, pos)`` merges the partials as decimal(38,0), and
+    the driver converts each exact sum through ``Fraction``: one
+    correct rounding, where int64→double→/1e9 rounds twice once a
+    cell's sum passes 2^53 (~8M rows per cell) — which moved 3 of
+    1024 IVF coordinates by 1 ulp in a first cut. Integer partials are
+    addition-order-immune, so the result is bit-identical under any
+    partitioning (docs/determinism.md). Cells no vector reached keep
+    their previous centroid.
     """
-    c = centroids.astype(np.float64)
-    c_sq = (c**2).sum(axis=1)
-    k = len(c)
+    from ..session import ensure_package_on_workers
+
+    ensure_package_on_workers(df.sparkSession)
+    cents = np.array(cents, dtype=np.float64)
+    for _ in range(iters):
+        partials = df.select(vec_col).mapInPandas(
+            _lloyd_round(cents, assign, vec_col),
+            schema="g int, c int, pos int, s long, n long",
+        )
+        sums = (
+            partials.groupBy("g", "c", "pos")
+            .agg(
+                F.sum(F.col("s").cast("decimal(38,0)")).alias("s"),
+                F.sum("n").alias("n"),
+            )
+            .collect()
+        )
+        new = cents.copy()
+        for r in sums:
+            new[r.g, r.c, r.pos] = float(Fraction(int(r.s), 10**9)) / r.n
+        cents = new
+    return cents
+
+
+def _lloyd_round(cents: np.ndarray, assign, vec_col: str):
+    """The map side of one ``lloyd_fit`` round (see its docstring)."""
+    g_n, k, w = cents.shape
+    offsets = np.arange(g_n) * k
 
     def fn(it):
         for pdf in it:
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]],
-                dtype=np.float64,
-            )
-            if mat.size == 0:
+            if len(pdf) == 0:
                 continue
-            cl = np.argmin(-2.0 * (mat @ c.T) + c_sq, axis=1)
-            q = guard_int64_partials(np.round(mat * 1e9))
-            sums = np.zeros((k, dims), dtype=np.int64)
-            np.add.at(sums, cl, q)
-            cnt = np.bincount(cl, minlength=k)
+            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            cell = (assign(mat, cents) + offsets).ravel()  # g * k + c
+            q = _guard_int64_partials(
+                np.floor(np.abs(mat) * 1e9 + 0.5) * np.sign(mat)
+            )
+            sums = np.zeros((g_n * k, w), dtype=np.int64)
+            np.add.at(sums, cell, q.reshape(len(cell), w))
+            cnt = np.bincount(cell, minlength=g_n * k)
             present = np.nonzero(cnt)[0]
-            n_rows = len(present) * dims
-            out = pd.DataFrame(
+            yield pd.DataFrame(
                 {
-                    "cluster": np.repeat(present, dims).astype(np.int32),
-                    "pos": np.tile(np.arange(dims, dtype=np.int32), len(present)),
-                    "s": sums[present].reshape(n_rows),
-                    "n": np.repeat(cnt[present], dims),
+                    "g": np.repeat(present // k, w).astype(np.int32),
+                    "c": np.repeat(present % k, w).astype(np.int32),
+                    "pos": np.tile(np.arange(w, dtype=np.int32), len(present)),
+                    "s": sums[present].ravel(),
+                    "n": np.repeat(cnt[present], w),
                 }
             )
-            yield out
 
     return fn
 
@@ -334,6 +373,22 @@ def tree_width(k_local: int, depth: int) -> int:
     return b * tree_width(-(-k_local // b), depth - 1)
 
 
+def _local_lloyd(mat: np.ndarray, k: int, iters: int) -> np.ndarray:
+    """One node of the local tree: first-k init, ``iters`` Lloyd rounds
+    (first-minimum argmin ties, np.add.at sums in row order, empty
+    clusters keep their centroid), then every row's cell against the
+    post-update centroids."""
+    cent = mat[:k].copy()
+    for _ in range(iters):
+        cl = np.argmin(-2.0 * (mat @ cent.T) + (cent**2).sum(axis=1), axis=1)
+        sums = np.zeros((k, mat.shape[1]))
+        np.add.at(sums, cl, mat)
+        cnt = np.bincount(cl, minlength=k)
+        nz = cnt > 0
+        cent[nz] = sums[nz] / cnt[nz, None]
+    return np.argmin(-2.0 * (mat @ cent.T) + (cent**2).sum(axis=1), axis=1)
+
+
 def local_tree_assign(
     mat: np.ndarray,
     k_local: int,
@@ -357,32 +412,12 @@ def local_tree_assign(
     if k_local <= 1 or n_loc == 0:
         return np.zeros(n_loc, dtype=np.int64)
     if depth <= 1:
-        kl = min(k_local, n_loc)
-        cent = mat[:kl].copy()
-        for _ in range(fine_iters):
-            d = -2.0 * (mat @ cent.T) + (cent**2).sum(axis=1)
-            cl = np.argmin(d, axis=1)
-            sums = np.zeros((kl, mat.shape[1]))
-            np.add.at(sums, cl, mat)
-            cnt = np.bincount(cl, minlength=kl)
-            nz = cnt > 0
-            cent[nz] = sums[nz] / cnt[nz, None]
-        # final assignment against the post-update centroids
-        return np.argmin(-2.0 * (mat @ cent.T) + (cent**2).sum(axis=1), axis=1)
+        return _local_lloyd(mat, min(k_local, n_loc), fine_iters)
     b = ceil_root(k_local, depth)
     k_sub = -(-k_local // b)
     w_sub = tree_width(k_sub, depth - 1)
     kl = min(b, n_loc)
-    cent = mat[:kl].copy()
-    for _ in range(coarse_iters):
-        d = -2.0 * (mat @ cent.T) + (cent**2).sum(axis=1)
-        cl = np.argmin(d, axis=1)
-        sums = np.zeros((kl, mat.shape[1]))
-        np.add.at(sums, cl, mat)
-        cnt = np.bincount(cl, minlength=kl)
-        nz = cnt > 0
-        cent[nz] = sums[nz] / cnt[nz, None]
-    cell = np.argmin(-2.0 * (mat @ cent.T) + (cent**2).sum(axis=1), axis=1)
+    cell = _local_lloyd(mat, kl, coarse_iters)
     out = np.empty(n_loc, dtype=np.int64)
     for cidx in range(kl):
         mask = cell == cidx

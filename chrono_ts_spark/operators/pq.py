@@ -3,9 +3,10 @@
 Complements the scalar int8 path (queries/vectors.py emb_quantize_int8)
 and the LSH/IVF ANN operators (operators/similarity.py): vectors are
 split into `m_sub` subspaces, each subspace gets its own K-centroid
-codebook (deterministic Lloyd, same discipline as ivf_fit_centroids —
-int64 fixed-point partial sums merged decimal-exact, so centroids are
-shuffle-order independent), and every vector compresses to m_sub codes
+codebook (deterministic Lloyd through clustering.lloyd_fit, the trainer
+kmeans_fit and ivf_fit_centroids use too — int64 fixed-point partial
+sums merged decimal-exact, so centroids are shuffle-order
+independent), and every vector compresses to m_sub codes
 (64 float32 dims → 8 bytes at m_sub=8/K=16 vs 256 bytes raw).
 
 Search is asymmetric distance computation (ADC): each query
@@ -31,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .clustering import guard_int64_partials
+from .clustering import _stride_init, lloyd_fit
 from .topk import top_k_per_group
 
 
@@ -54,67 +55,6 @@ def _encode_np(mat: np.ndarray, codebook: np.ndarray) -> np.ndarray:
     return codes
 
 
-def _pq_partial_sums_fn(codebook: np.ndarray, dims: int, vec_col: str):
-    """One PQ Lloyd round's map side: per ARROW BATCH, encode every
-    vector (``_encode_np`` — byte-identical math to pq_encode_udf)
-    and, for each subspace, accumulate a k × sub int64 matrix of 1e-9
-    HALF-UP fixed-point coordinate sums plus per-code counts; emit
-    m_sub·k·sub tiny (m, c, pos, s, n) rows with pos in GLOBAL dim
-    coordinates (m·sub + local), matching the legacy explode's keying.
-
-    Same rewrite as similarity._ivf_partial_sums_fn (r14): the shuffle
-    carries O(m_sub × k × sub × batches) = O(k × dims × batches)
-    integers per round instead of the posexploded O(rows × dims)
-    (m, c, pos, val) triples. Quantization/ulp contract and the
-    decimal(38,0)+Fraction driver merge are shared with the IVF
-    rewrite — see _ivf_partial_sums_fn's docstring; the 8M IVF probe
-    hashed bit-identical to the decimal(18,9) path, and the r14 PQ
-    fit probe recorded the same check here (docs/scale.md
-    "Re-measuring").
-    """
-    cb = codebook.copy()
-    m_sub, k, sub = cb.shape
-
-    def fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            codes = _encode_np(mat, cb)
-            q = guard_int64_partials(
-                np.floor(np.abs(mat) * 1e9 + 0.5) * np.sign(mat)
-            )
-            cols_m, cols_c, cols_pos, cols_s, cols_n = [], [], [], [], []
-            for m in range(m_sub):
-                cl = codes[:, m]
-                sums = np.zeros((k, sub), dtype=np.int64)
-                np.add.at(sums, cl, q[:, m * sub : (m + 1) * sub])
-                cnt = np.bincount(cl, minlength=k)
-                present = np.nonzero(cnt)[0]
-                n_rows = len(present) * sub
-                cols_m.append(np.full(n_rows, m, dtype=np.int32))
-                cols_c.append(np.repeat(present, sub).astype(np.int32))
-                cols_pos.append(
-                    np.tile(
-                        np.arange(m * sub, (m + 1) * sub, dtype=np.int32),
-                        len(present),
-                    )
-                )
-                cols_s.append(sums[present].reshape(n_rows))
-                cols_n.append(np.repeat(cnt[present], sub))
-            yield pd.DataFrame(
-                {
-                    "m": np.concatenate(cols_m),
-                    "c": np.concatenate(cols_c),
-                    "pos": np.concatenate(cols_pos),
-                    "s": np.concatenate(cols_s),
-                    "n": np.concatenate(cols_n),
-                }
-            )
-
-    return fn
-
-
 def pq_fit(
     corpus: DataFrame,
     dims: int,
@@ -126,67 +66,17 @@ def pq_fit(
 ) -> np.ndarray:
     """Deterministic PQ codebook (m_sub, k, dims/m_sub).
 
-    Init = every (n/k)-th vector by id sliced into subspaces; each
-    Lloyd round is ONE Spark job covering all subspaces — mapInPandas
-    int64 partial sums per (subspace, code, dim), merged decimal-exact
-    (r14, _pq_partial_sums_fn; only k×dims sums reach the driver)."""
+    Init = every (n/k)-th vector by id sliced into subspaces
+    (clustering._stride_init); each Lloyd round is ONE Spark job
+    covering all subspaces — the shared trainer clustering.lloyd_fit
+    with one codebook per subspace and ``_encode_np`` as the
+    assignment (only k×dims sums reach the driver)."""
     sub = _check_geometry(dims, m_sub)
-    n = corpus.count()
-    stride = max(1, n // k)
-    init_rows = (
-        corpus.filter(F.col(id_col) % stride == 0)
-        .orderBy(id_col)
-        .limit(k)
-        .select(vec_col)
-        .collect()
-    )
-    if len(init_rows) < k:
-        # sparse / non-contiguous id spaces can leave the modulo probe
-        # short: fall back to the first k rows by id (deterministic,
-        # layout-independent)
-        init_rows = corpus.orderBy(id_col).limit(k).select(vec_col).collect()
-    if len(init_rows) < k:
+    init = _stride_init(corpus, k, id_col, vec_col)
+    if len(init) < k:
         raise ValueError(f"corpus has fewer than k={k} vectors")
-    codebook = np.array(
-        [[list(r[0])[m * sub : (m + 1) * sub] for r in init_rows] for m in range(m_sub)],
-        dtype=np.float64,
-    )  # (m_sub, k, sub)
-
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(corpus.sparkSession)
-
-    for _ in range(iters):
-        partials = corpus.select(vec_col).mapInPandas(
-            _pq_partial_sums_fn(codebook, dims, vec_col),
-            schema="m int, c int, pos int, s long, n long",
-        )
-        sums = (
-            partials.groupBy("m", "c", "pos")
-            # decimal-exact merge, Fraction conversion on the driver —
-            # the shared r14 discipline (see _pq_partial_sums_fn)
-            .agg(
-                F.sum(F.col("s").cast("decimal(38,0)")).alias("s"),
-                F.sum("n").alias("cnt"),
-            )
-            .collect()
-        )
-        from fractions import Fraction
-
-        new = codebook.copy()
-        for m in range(m_sub):
-            rows = [r for r in sums if r.m == m]
-            by_c: dict[int, np.ndarray] = {}
-            n_c: dict[int, int] = {}
-            for r in rows:
-                by_c.setdefault(r.c, np.zeros(sub))[r.pos - m * sub] = float(
-                    Fraction(int(r.s), 10**9)
-                )
-                n_c[r.c] = r.cnt
-            for cid, vec in by_c.items():
-                new[m, cid] = vec / max(n_c[cid], 1)
-        codebook = new
-    return codebook
+    codebook = init.reshape(k, m_sub, sub).transpose(1, 0, 2)  # (m_sub, k, sub)
+    return lloyd_fit(corpus, codebook, _encode_np, iters, vec_col)
 
 
 def pq_encode_udf(codebook: np.ndarray):

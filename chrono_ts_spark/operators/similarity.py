@@ -30,7 +30,7 @@ from pyspark.sql import types as T
 from pyspark.sql import functions as F
 
 from ..functions import vec_cosine, vec_double
-from .clustering import guard_int64_partials
+from .clustering import _stride_init, lloyd_fit
 from .topk import top_k_per_group
 
 
@@ -389,73 +389,6 @@ def _assign_cos_udf(centroids: np.ndarray, probe_mat: np.ndarray):
     return fused
 
 
-def _ivf_partial_sums_fn(centroids: np.ndarray, dims: int, vec_col: str):
-    """One IVF Lloyd round's map side: per ARROW BATCH, assign every
-    vector to its nearest centroid (cosine argmin — byte-identical
-    math to ``_assign_udf(centroids, 1)``) and accumulate a k × dims
-    matrix of 1e-9 fixed-point coordinate sums plus per-cluster
-    counts; emit k*dims tiny rows.
-
-    This is clustering._partial_sums_fn's shape (the kmeans_fit fix,
-    r11: 187 s → 15 s at 500k×64) ported to the cosine quantizer: the
-    shuffle carries O(k × dims × batches) integers instead of the
-    posexploded O(rows × dims) (cluster, pos, val) triples the pre-r14
-    update aggregated — ~1B shuffle rows per round at 8M×64.
-
-    Quantization / ulp contract (r14): each coordinate is rounded
-    HALF-UP at 1e-9 (``floor(|x|·1e9 + 0.5)·sign(x)``) on the BINARY
-    double, where the old path cast to decimal(18,9) — i.e. HALF_UP on
-    the SHORTEST DECIMAL STRING repr (JVM BigDecimal(Double.toString)).
-    The two disagree only for doubles whose shortest repr and binary
-    value round differently at the 9th decimal — no hit observed
-    across the 2×512M-coordinate 8M fit probe (centroid md5s match
-    the legacy path bit-for-bit; re-measure with tools/probe.py, see
-    docs/scale.md "Re-measuring"). The
-    driver-side merge keeps the summed partials as decimal(38,0) and
-    converts via Fraction — int64→double→/1e9 would round twice once
-    cluster sums pass 2^53 (~8M rows/cluster), which moved 3 of 1024
-    coordinates by 1 ulp in the first cut of this rewrite. Integer
-    partials are addition-order-immune, so centroids stay
-    bit-deterministic under any partitioning — the same determinism
-    the decimal sum bought (docs/determinism.md). Overflow headroom:
-    |coord| ≤ ~1e3 → |q| ≤ 1e12; Arrow batches are ≤ ~10k rows →
-    per-batch cell sums ≤ 1e16 ≪ 2^63.
-    """
-    c = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    k = len(c)
-
-    def fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            unit = mat / np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-            )
-            sims = unit @ c.T
-            cl = np.argsort(-sims, axis=1)[:, 0]
-            q = guard_int64_partials(
-                np.floor(np.abs(mat) * 1e9 + 0.5) * np.sign(mat)
-            )
-            sums = np.zeros((k, dims), dtype=np.int64)
-            np.add.at(sums, cl, q)
-            cnt = np.bincount(cl, minlength=k)
-            present = np.nonzero(cnt)[0]
-            n_rows = len(present) * dims
-            yield pd.DataFrame(
-                {
-                    "cluster": np.repeat(present, dims).astype(np.int32),
-                    "pos": np.tile(
-                        np.arange(dims, dtype=np.int32), len(present)
-                    ),
-                    "s": sums[present].reshape(n_rows),
-                    "n": np.repeat(cnt[present], dims),
-                }
-            )
-
-    return fn
-
-
 def ivf_fit_centroids(
     corpus: DataFrame,
     dims: int,
@@ -464,69 +397,23 @@ def ivf_fit_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> np.ndarray:
-    """Deterministic mini k-means: init = every (n/k)-th vector by id,
-    then `iters` Lloyd rounds computed with mapInPandas partial sums
-    (only k×dims×batches integer partials ever shuffle, and only the
-    k×dims centroid matrix ever reaches the driver — see
-    _ivf_partial_sums_fn for the r14 rewrite + ulp contract)."""
-    n = corpus.count()
-    stride = max(1, n // n_centroids)
-    init_rows = (
-        corpus.filter((F.col(id_col) % stride == 0))
-        .orderBy(id_col)
-        .limit(n_centroids)
-        .select(vec_col)
-        .collect()
-    )
-    if len(init_rows) < n_centroids:
-        # sparse / non-contiguous id space: the stride filter can match
-        # few (or zero) ids — fall back to the first k rows by id, the
-        # same deterministic guard pq_fit has (r7 review)
-        init_rows = (
-            corpus.orderBy(id_col).limit(n_centroids).select(vec_col).collect()
-        )
-    if not init_rows:
+    """Deterministic mini k-means: init = every (n/k)-th vector by id
+    (clustering._stride_init), then `iters` rounds of the shared
+    distributed Lloyd trainer (clustering.lloyd_fit: int64 partial
+    sums, decimal-exact merge, only the k×dims centroid matrix reaches
+    the driver) with the cosine assignment of ``_assign_udf(centroids,
+    1)``."""
+    init = _stride_init(corpus, n_centroids, id_col, vec_col)
+    if not len(init):
         raise ValueError("corpus is empty; cannot fit IVF centroids")
-    centroids = np.array([list(r[0]) for r in init_rows], dtype=np.float64)
 
-    from ..session import ensure_package_on_workers
+    def cosine(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
+        c = cents[0] / np.linalg.norm(cents[0], axis=1, keepdims=True)
+        unit = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+        sims = unit @ c.T
+        return np.argsort(-sims, axis=1)[:, :1]
 
-    ensure_package_on_workers(corpus.sparkSession)
-
-    for _ in range(iters):
-        partials = corpus.select(vec_col).mapInPandas(
-            _ivf_partial_sums_fn(centroids, dims, vec_col),
-            schema="cluster int, pos int, s long, n long",
-        )
-        sums = (
-            partials.groupBy("cluster", "pos")
-            # decimal-exact merge of the integer partials: immune to
-            # shuffle combine order, like kmeans_fit (clustering.py).
-            # NO double cast here — int64→double→/1e9 would round
-            # TWICE (sums exceed 2^53 past ~8M rows/cluster), moving
-            # final ulps vs the old decimal(18,9) path; the driver
-            # converts each exact sum via Fraction (one correct
-            # rounding), which re-matched the 8M probe bit-for-bit.
-            .agg(
-                F.sum(F.col("s").cast("decimal(38,0)")).alias("s"),
-                F.sum("n").alias("m"),
-            )
-            .collect()
-        )
-        from fractions import Fraction
-
-        new = centroids.copy()
-        acc: dict[int, np.ndarray] = {}
-        cnt: dict[int, int] = {}
-        for r in sums:
-            acc.setdefault(r.cluster, np.zeros(dims))[r.pos] = float(
-                Fraction(int(r.s), 10**9)
-            )
-            cnt[r.cluster] = r.m
-        for cid, vec in acc.items():
-            new[cid] = vec / max(cnt[cid], 1)
-        centroids = new
-    return centroids
+    return lloyd_fit(corpus, init[None], cosine, iters, vec_col)[0]
 
 
 def ivf_topk(

@@ -72,42 +72,8 @@ _MODULES = [
 ]
 
 # The driver's correctness harness verifies the FIRST 50 registry entries
-# per round, so ordering is coverage policy, not cosmetics.  Round-14
-# rotation (docs/coverage.md "Round-14 window", backlog recomputed from
-# CORRECTNESS_r01-r13 at round start + changed-since-witness recomputed
-# from the r13 post-seal diff, per VERDICT r13 items 1-2 and the
-# standing rule):
-# (1) the 7 CHANGED-SINCE-WITNESS front-loads — emb_ann_ivf's plan
-# changed after its r12 driver row (ivf_topk fused Arrow cell+cosine
-# scoring, commit 1e3eeb5, post-seal) and changes AGAIN this round
-# (ivf_fit_centroids partial-sum Lloyd rewrite, VERDICT r13 item 1 —
-# landed in THIS commit, hence front-loaded in the same commit per the
-# r13 lesson); emb_ann_ivf_exact rides along per the judge's done-
-# criterion (its _fp_* fixed-point plan is untouched by the rewrite —
-# verified: it never calls ivf_fit_centroids — but the judge named its
-# hash row as the gate, so it is witnessed in-window, not assumed).
-# The r13 module diff showed NO other changed-since-witness slots:
-# clustering.py's ac64eba touched only hierarchical_kmeans_assign
-# (emb_semdedup re-witnessed r13; kmeans_fit untouched), similarity.py's
-# 0b13f55 touched only lsh_bucket_topk (emb_ann_lsh/emb_recall_eval
-# re-witnessed r13; md5_sign_buckets/_bucket_udf untouched), text.py's
-# a5c9b77 is validation-only on a non-default env branch.
-# (2) the 6 remaining r6-cohort greens, registration order (they
-# displaced to make room for r13's front-loads and must not slip
-# again — VERDICT r13 item 5);
-# emb_pq_topk's plan also changes this round (pq_fit got the same
-# partial-sum trainer rewrite in the following commit — it had the
-# identical O(n x dims) explode); emb_pq_exact rides along on the
-# same precedent (its _fp_* plan never calls pq_fit); and
-# rel_market_basket (r12 witness, plan restructured mid-r14 after the
-# 800x probe caught the thrice-run shared subtree — same-commit
-# front-load); and emb_ann_lsh + emb_recall_eval (r13 witnesses, but
-# late-r14 moved the LSH/IVF probe-side bucketing driver-side after
-# the r14 A/B caught the createDataFrame empty-partition Python-worker
-# storm — same-commit front-load). io_json_scan, io_partitioned_sink,
-# io_csv_scan, rel_window_values and sf_map_funcs displace to the
-# r15 ladder to make room.
-# (3) the first 37 of the r7 cohort, registration order.
+# per round, so ordering is coverage policy, not cosmetics; the rotation
+# history is in docs/coverage.md "Round-14 window".
 _WINDOW_50 = [
     # -- (1) changed-since-witness front-loads (r13 post-seal ivf fuse +
     #        this round's ivf_fit partial-sum rewrite) --

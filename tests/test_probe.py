@@ -1,13 +1,16 @@
 """tools/probe.py end to end: one interleaved pair of a git-ref arm
 (a temporary worktree) and this checkout, traced, over a registry
-query, a plan-heavy text query and a sink_dir streaming runner."""
+query, a plan-heavy text query and a sink_dir streaming runner; and a
+SIGTERM to the harness stopping its worker and removing the worktree."""
 
 from __future__ import annotations
 
 import json
 import shutil
+import signal
 import subprocess
 import sys
+import time
 from pathlib import Path
 
 import pytest
@@ -60,3 +63,59 @@ def test_probe_pair_head_vs_checkout():
             assert sorted(p.stem for p in d.glob("*.txt")) == sorted(QUERIES)
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
+
+
+def _alive(pid: int) -> bool:
+    try:
+        stat = Path(f"/proc/{pid}/stat").read_text()
+    except FileNotFoundError:
+        return False
+    return stat.rsplit(")", 1)[1].split()[0] != "Z"  # a zombie is dead
+
+
+def test_sigterm_kills_worker_and_removes_worktree(tmp_path):
+    # The (pair, arm) worker is a stub that sleeps next to a child of its
+    # own (standing in for the JVM) and records both pids. SIGTERM to the
+    # harness must kill both and remove the HEAD arm's worktree.
+    before = _worktrees()
+    pids = tmp_path / "pids"
+    stub = tmp_path / "worker.sh"
+    stub.write_text(
+        "#!/bin/sh\n"
+        "sleep 600 &\n"
+        f'echo "$$ $! $3" > {pids}.tmp && mv {pids}.tmp {pids}\n'
+        "wait\n"
+    )
+    stub.chmod(0o755)
+    driver = tmp_path / "driver.py"
+    driver.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {str(ROOT / 'tools')!r})\n"
+        "import probe\n"
+        f"sys.executable = {str(stub)!r}\n"
+        f"sys.exit(probe.main(['--data', {SF_SMOKE!r}, '--queries', 'ts_bucket_agg',\n"
+        "                      '--arms', 'HEAD,.', '--pairs', '1']))\n"
+    )
+    harness = subprocess.Popen([sys.executable, str(driver)], cwd=ROOT,
+                               stdout=subprocess.PIPE, stderr=subprocess.PIPE)
+    try:
+        deadline = time.monotonic() + 300
+        while not pids.exists():
+            assert harness.poll() is None, harness.communicate()[1][-3000:]
+            assert time.monotonic() < deadline, "the stub worker never started"
+            time.sleep(0.2)
+        worker, child = pids.read_text().split()[:2]
+        assert any(".probe/worktrees" in line for line in _worktrees())
+        harness.send_signal(signal.SIGTERM)
+        assert harness.wait(timeout=60) == 128 + signal.SIGTERM
+        deadline = time.monotonic() + 10
+        while (_alive(int(worker)) or _alive(int(child))) and time.monotonic() < deadline:
+            time.sleep(0.1)
+        assert not _alive(int(worker)) and not _alive(int(child))
+        assert _worktrees() == before
+    finally:
+        if harness.poll() is None:
+            harness.kill()
+        harness.wait()
+        if pids.exists():
+            shutil.rmtree(Path(pids.read_text().split()[2]).parents[1], ignore_errors=True)

@@ -15,7 +15,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from chrono_ts_spark.operators.clustering import guard_int64_partials
+from chrono_ts_spark.operators.clustering import _guard_int64_partials as guard_int64_partials
 
 
 class TestGuardInt64Partials:

@@ -267,6 +267,50 @@ class TestKmeans:
         assert all(len(cs) == 1 for cs in by_label.values())
         assert len({next(iter(cs)) for cs in by_label.values()}) == 3
 
+    def test_fit_matches_local_lloyd(self, spark):
+        # kmeans_fit must reproduce a straight local Lloyd with the
+        # shared trainer's contract bit for bit: first k rows by id,
+        # euclidean argmin (lowest id on ties), 1e-9 HALF-UP
+        # fixed-point sums, one rounding via Fraction, empty clusters
+        # keep their centroid. Coordinates of exactly +-2^-10 are
+        # 976562.5 at 1e-9: HALF-UP gives +-976563, half-even
+        # (np.round) would give +-976562.
+        import random
+        from fractions import Fraction
+
+        import numpy as np
+
+        from chrono_ts_spark.operators.clustering import kmeans_fit
+
+        rnd = random.Random(3)
+        rows = [(i, [rnd.uniform(-2, 2) for _ in range(8)]) for i in range(200)]
+        for i in (5, 17, 123):
+            rows[i][1][3] = 2.0**-10
+            rows[i][1][6] = -(2.0**-10)
+        df = spark.createDataFrame(
+            rows, "vec_id long, embedding array<float>"
+        ).repartition(7)
+        got = kmeans_fit(df, dims=8, k=4, iters=3)
+
+        mat = np.array(
+            [[np.float32(x) for x in v] for _, v in rows], dtype=np.float64
+        )
+        q = (np.floor(np.abs(mat) * 1e9 + 0.5) * np.sign(mat)).astype(np.int64)
+        assert q[5, 3] == 976563 and q[5, 6] == -976563
+        cents = mat[:4].copy()
+        for _ in range(3):
+            cl = np.argmin(
+                -2.0 * (mat @ cents.T) + (cents**2).sum(axis=1), axis=1
+            )
+            new = cents.copy()
+            for cid in np.unique(cl):
+                sel = q[cl == cid]
+                new[cid] = np.array(
+                    [float(Fraction(int(v), 10**9)) for v in sel.sum(axis=0)]
+                ) / len(sel)
+            cents = new
+        assert np.array_equal(got, cents), got - cents
+
     def test_deterministic_across_runs(self, spark, tmp_path):
         sf = _planted_vectors(spark, tmp_path)
         from chrono_ts_spark.queries import load_all

@@ -148,7 +148,11 @@ class TestDedupSizeHintGate:
         assert plan is not None
         assert len(after) == len(before), "plan construction launched a job"
 
-    def test_size_hint_paths_agree(self, spark):
+    def test_size_hint_paths_agree(self, spark, monkeypatch):
+        # The self-join pin is decided from Catalyst's plan size: force
+        # each branch (0 bytes -> unhinted small plan; no estimate ->
+        # the spill-safe shuffle_merge pin) and compare the pairs.
+        import chrono_ts_spark.planinfo as planinfo
         from chrono_ts_spark.operators.dedup import minhash_lsh_candidates
 
         docs = spark.createDataFrame(
@@ -159,21 +163,17 @@ class TestDedupSizeHintGate:
             ],
             "doc_id long, text string",
         )
-        small = sorted(
-            map(
-                tuple,
-                minhash_lsh_candidates(
-                    docs, "doc_id", "text", 16, 4, 3, size_hint=3
-                ).collect(),
+
+        def pairs(plan_bytes):
+            monkeypatch.setattr(
+                planinfo, "optimized_plan_size_bytes", lambda df: plan_bytes
             )
-        )
-        large = sorted(
-            map(
-                tuple,
-                minhash_lsh_candidates(
-                    docs, "doc_id", "text", 16, 4, 3, size_hint=1_000_000
-                ).collect(),
-            )
-        )
+            cands = minhash_lsh_candidates(docs, "doc_id", "text", 16, 4, 3)
+            pinned = "strategy=merge" in planinfo.analyzed_plan(cands)
+            return pinned, sorted(map(tuple, cands.collect()))
+
+        pinned_small, small = pairs(0)
+        pinned_large, large = pairs(None)
+        assert (pinned_small, pinned_large) == (False, True)
         assert small == large
         assert any(r[0] == 1 and r[1] == 2 for r in small)

@@ -24,8 +24,10 @@ imports differs, so an A/B of an old operator is ``--arms <commit>,.``.
 An arm may carry environment assignments: ``HEAD:KEY=VALUE``.
 
 Each (pair, arm) is one subprocess with its own JVM; odd pairs reverse
-the arm order. Per query: ``build_s`` (plan construction), one untimed
-warm run, one timed noop-sink run (``exec_s``). A runner builds and
+the arm order. Stopping the harness (SIGTERM or Ctrl-C) kills the
+running subprocess and its JVM and removes the temporary worktrees.
+Per query: ``build_s`` (plan construction), one untimed warm run, one
+timed noop-sink run (``exec_s``). A runner builds and
 runs in one call (``build_s`` 0); its record also carries each stateful
 operator's ``numShufflePartitions`` and ``numStateStoreInstances``
 from the stream's progress. An exception fails that query in
@@ -50,6 +52,7 @@ import json
 import os
 import re
 import shutil
+import signal
 import statistics
 import subprocess
 import sys
@@ -488,15 +491,29 @@ def spawn(tree: Path, call: str, args: list[str], env: dict, confs: dict) -> int
     """Run ``probe.<call>(*args)`` in a new interpreter that imports
     ``tree``'s package: ``tree`` is first on the path (Python workers
     inherit it), then this harness and the tracing module. ``confs``
-    is the Spark launch configuration."""
+    is the Spark launch configuration.
+
+    The interpreter leads its own session, so it and its JVM form one
+    process group, which is killed however this call ends (a SIGTERM
+    to the harness included, see ``main``). PySpark's worker daemon
+    leads a group of its own; it and its workers exit when the JVM's
+    pipe to it closes."""
     confs = {"spark.ui.showConsoleProgress": "false", **confs}
     submit = " ".join(f"--conf {k}={v}" for k, v in confs.items())
     env = {**os.environ, **env, "PYSPARK_SUBMIT_ARGS": f"{submit} pyspark-shell"}
     paths = [str(tree), str(TOOLS), str(BENCH), env.get("PYTHONPATH", "")]
     env["PYTHONPATH"] = os.pathsep.join(p for p in paths if p)
     code = f"import sys, probe; probe.{call}(*sys.argv[1:])"
-    return subprocess.run([sys.executable, "-c", code, *args], cwd=tree, env=env,
-                          stdout=sys.stderr).returncode
+    proc = subprocess.Popen([sys.executable, "-c", code, *args], cwd=tree, env=env,
+                            stdout=sys.stderr, start_new_session=True)
+    try:
+        return proc.wait()
+    finally:
+        try:
+            os.killpg(proc.pid, signal.SIGKILL)
+        except ProcessLookupError:
+            pass
+        proc.wait()
 
 
 def parse_arms(text: str) -> list[tuple[str, str, dict]]:
@@ -620,6 +637,9 @@ def parse_args(argv):
 
 
 def main(argv=None) -> int:
+    # SIGTERM unwinds like an exception, so the running worker is killed
+    # and the temporary worktrees are removed on the way out
+    signal.signal(signal.SIGTERM, lambda signum, _: sys.exit(128 + signum))
     args = parse_args(argv)
     sys.path.insert(0, str(ROOT))
     arms = parse_arms(args.arms)
