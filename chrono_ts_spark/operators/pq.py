@@ -33,7 +33,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .clustering import _stride_init, lloyd_fit
+from .similarity import _collect_probes
 from .topk import top_k_per_group
+
+# Bound on the rerank candidate rows (probes × max(k, rerank)) that
+# pq_adc_topk broadcasts: ~40 B/row keeps the broadcast under ~40 MB.
+_MAX_RERANK_ROWS = 1_000_000
 
 
 def _check_geometry(dims: int, m_sub: int) -> int:
@@ -124,18 +129,36 @@ def pq_adc_topk(
     exact squared L2 distance (joining the raw vectors back for the
     candidates only) before the final top-k — the standard
     quality-recovery stage.
+
+    Bounds. Probes: the probe set is collected once at build time
+    (similarity._collect_probes, as for lsh_bucket_topk and ivf_topk),
+    so |queries| must be driver-bounded; an empty probe set or
+    duplicate probe ids raise ValueError. Candidates: the rerank
+    broadcasts at most P × max(k, R) rows, and a rerank whose bound
+    exceeds ``_MAX_RERANK_ROWS`` (1M) raises ValueError instead of
+    planning an unbounded broadcast.
     """
-    m_sub = codebook.shape[0]
-    q_rows = queries.select(id_col, vec_col).collect()
-    tables = {}
-    for r in q_rows:
-        qv = np.array(list(r[1]), dtype=np.float64)
-        sub = codebook.shape[2]
-        tab = np.empty((m_sub, codebook.shape[1]))
-        for m in range(m_sub):
-            seg = qv[m * sub : (m + 1) * sub]
-            tab[m] = ((codebook[m] - seg) ** 2).sum(axis=1)
-        tables[r[0]] = tab
+    m_sub, _, sub = codebook.shape
+    probe_rows, probe_mat, _ = _collect_probes(
+        queries, id_col, vec_col, "pq_adc_topk"
+    )
+    cap = max(k, rerank)
+    if rerank and len(probe_rows) * cap > _MAX_RERANK_ROWS:
+        raise ValueError(
+            f"pq_adc_topk: {len(probe_rows)} probes × max(k, rerank)={cap} "
+            f"exceeds the {_MAX_RERANK_ROWS:,}-row bound on the broadcast "
+            "rerank candidates; use fewer probes or a smaller rerank"
+        )
+    qmap = {r[0]: qv for r, qv in zip(probe_rows, probe_mat)}
+    tables = {
+        qid: np.stack(
+            [
+                ((codebook[m] - qv[m * sub : (m + 1) * sub]) ** 2).sum(axis=1)
+                for m in range(m_sub)
+            ]
+        )
+        for qid, qv in qmap.items()
+    }
 
     from ..session import ensure_package_on_workers
 
@@ -156,8 +179,6 @@ def pq_adc_topk(
     # the selection (masked before the cap) — filter-then-topk must
     # commute with the cap, and it no longer ships rows just to drop
     # them.
-    cap = max(k, rerank)
-
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
@@ -198,9 +219,9 @@ def pq_adc_topk(
         k=rerank,
     )
     # exact re-rank: join raw vectors back for candidates only.
-    # r16 (guide §3.1/§8): the candidate side is contractually tiny
-    # (≤ P·max(k, rerank) rows — probes are few by the operator's
-    # contract), but its size ESTIMATE descends from the whole opaque
+    # r16 (guide §3.1/§8): the candidate side is tiny by construction
+    # (≤ P·max(k, rerank) ≤ _MAX_RERANK_ROWS rows, checked above), but
+    # its size ESTIMATE descends from the whole opaque
     # ADC pipeline, so the static plan chose a SortMergeJoin whose
     # build-side Exchange hash-partitioned the FULL corpus of raw
     # vectors (~0.5 KB/row) just to attach 64-dim arrays to a few
@@ -213,7 +234,6 @@ def pq_adc_topk(
         F.col(id_col).alias("neighbor_id"),
         F.transform(vec_col, lambda x: x.cast("double")).alias("__nv"),
     )
-    qmap = {r[0]: np.array(list(r[1]), dtype=np.float64) for r in q_rows}
 
     def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -7,18 +7,18 @@ Two tiers:
   shuffle of the corpus, then one shuffle of |Q|·k candidate rows for
   the final per-query rank. Right shape for "a handful of probes
   against 100 TB of vectors".
-- lsh_bucket_topk: sign-LSH (random hyperplanes) approximate top-k.
-  Every vector gets an n_planes-bit bucket id; probes only score
-  vectors in the same bucket (optionally hamming<=1 neighbors), an
-  equi-join on bucket id. Recall/cost is tunable via n_planes; the
-  join is shuffle-partitioned by bucket, so it scales horizontally
-  and AQE's skew handling covers hot buckets.
+- lsh_bucket_topk / ivf_topk: approximate top-k, candidate cells then
+  an exact-cosine refine, through one probe path (_routed_topk). Each
+  index writes its routing once as a numpy function (_lsh_router: an
+  n_planes-bit sign bucket per hash table; _ivf_router: the nearest
+  k-means cells) that the corpus pass and the driver-side probe
+  routing both call; the candidate join is an equi-join on one int64
+  cell key, broadcast from the probe side, and the rerank cosine is
+  computed in the same Arrow pass that routes the corpus.
 
-Hyperplanes are deterministic (seeded numpy), embedded as literal
-arrays — dims × n_planes doubles, negligible plan size. Exact-path
-math (brute_force_topk) is built-in higher-order functions in double
-precision; the LSH rerank scores inside the same Arrow pass that
-assigns buckets (r13 — see lsh_bucket_topk).
+Hyperplanes are deterministic (seeded numpy). Exact-path math
+(brute_force_topk) is built-in higher-order functions in double
+precision.
 """
 
 from __future__ import annotations
@@ -72,74 +72,92 @@ def _hyperplanes(dims: int, n_planes: int, seed: int = 7) -> np.ndarray:
     return rng.standard_normal((n_planes, dims))
 
 
-def _bucket_udf(dims: int, n_planes: int, n_tables: int, seed: int):
-    """Vectorized (Arrow) bucket assigner: embedding → int bucket per table.
+# ---------------------------------------------------------------------------
+# Routing: one numpy function per index kind, (B, dims) float64 → (B, R)
+# int64 cell keys. The corpus pass, the driver-side probe routing, the
+# IVF Lloyd assignment and diag_lsh_buckets all call these, so the two
+# sides of a cell join cannot drift apart.
+# ---------------------------------------------------------------------------
 
-    The per-row work is a (dims × n_tables·n_planes) matrix multiply —
-    exactly what Spark's interpreted higher-order functions are worst
-    at (measured 20s+ for 2k×48×64 on local[32]) and what a
-    numpy-backed pandas_udf does in one BLAS call per Arrow batch
-    (measured <1s). Bucket ids only need to be internally consistent
-    between corpus and probes, so float32 math is fine here — the
-    cross-engine determinism rules (docs/determinism.md) don't apply.
+
+def _lsh_router(dims: int, n_planes: int, n_tables: int, seed: int):
+    """Sign-LSH routing, one key per table: table t's n_planes sign
+    bits pack as Σ bit_j·2^j, offset by t·2^n_planes, so one int64
+    names one (table, bucket).
+
+    A (dims × n_tables·n_planes) matmul per Arrow batch is exactly what
+    Spark's interpreted higher-order functions are worst at (measured
+    20s+ for 2k×48×64 on local[32]) and one BLAS call here (<1s). Keys
+    only need to agree between corpus and probes, so the cross-engine
+    determinism rules (docs/determinism.md) don't apply.
     """
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType
-
     planes = np.vstack(
         [_hyperplanes(dims, n_planes, seed + 1000 * t) for t in range(n_tables)]
-    ).astype(np.float64)  # (n_tables*n_planes, dims)
-    weights = (2 ** np.arange(n_planes)).astype(np.int64)
+    )  # (n_tables*n_planes, dims)
+    weights = 2 ** np.arange(n_planes, dtype=np.int64)
+    offsets = np.arange(n_tables, dtype=np.int64) << n_planes
 
-    @pandas_udf(ArrayType(IntegerType()))
-    def buckets(emb: pd.Series) -> pd.Series:
-        mat = np.vstack(emb.to_numpy())  # (batch, dims)
-        signs = (mat @ planes.T) > 0  # (batch, n_tables*n_planes)
-        b = signs.reshape(len(mat), n_tables, n_planes) @ weights  # (batch, n_tables)
-        return pd.Series([row.astype(np.int32).tolist() for row in b])
+    def route(mat: np.ndarray) -> np.ndarray:
+        signs = (mat @ planes.T) > 0
+        return signs.reshape(len(mat), n_tables, n_planes) @ weights + offsets
 
-    return buckets
+    return route
 
 
-def _bucket_cos_udf(
-    dims: int, n_planes: int, n_tables: int, seed: int, probe_mat: np.ndarray
-):
-    """Fused Arrow pass: per row, BOTH the per-table LSH buckets and
-    the cosine of the row against every probe vector (one BLAS matmul
-    against the (P × dims) probe matrix per batch).
+def _ivf_router(centroids: np.ndarray, n: int):
+    """IVF routing: the n cells of highest cosine per row (n = 1 for
+    the corpus and the Lloyd assignment, n = n_probe for probes)."""
+    c = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
+
+    def route(mat: np.ndarray) -> np.ndarray:
+        unit = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+        return np.argsort(-(unit @ c.T), axis=1)[:, :n]
+
+    return route
+
+
+def _route_udf(route):
+    """Arrow pass: embedding → array<bigint> of the row's cell keys."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("array<bigint>")
+    def cells(emb: pd.Series) -> pd.Series:
+        keys = route(np.vstack(emb.to_numpy()).astype(np.float64))
+        return pd.Series([row.tolist() for row in keys])
+
+    return cells
+
+
+def _route_cos_udf(route, probe_mat: np.ndarray):
+    """Fused Arrow pass: per row, BOTH its cell keys and its cosine
+    against every probe vector (one BLAS matmul against the (P × dims)
+    probe matrix per batch).
 
     Scoring here instead of per candidate pair is the r13 scale fix:
-    a corpus vector is scored ONCE regardless of how many tables it
-    collides in, so rerank cost is O(corpus × P), never
-    O(candidates) — the candidate count depends on corpus clustering
-    (measured 11 candidates per corpus vector on the 8-cluster probe
-    corpus) and the per-pair HOF cosine was 117 s of emb_ann_lsh's
-    160 s at 16M vectors (interpreted CodegenFallback; an unrolled
-    codegen expression tree was probed too and is 2x WORSE — 64-term
-    chains exceed HotSpot's 8 KB JIT method limit, see docs/scale.md
-    "The interpreted rerank cosine").
+    a corpus vector is scored ONCE however many cells it collides in,
+    so rerank cost is O(corpus × P), never O(candidates) — the
+    candidate count depends on corpus clustering (measured 11
+    candidates per corpus vector on the 8-cluster probe corpus) and
+    the per-pair HOF cosine was 117 s of emb_ann_lsh's 160 s at 16M
+    vectors (interpreted CodegenFallback; an unrolled codegen
+    expression tree was probed too and is 2x WORSE — 64-term chains
+    exceed HotSpot's 8 KB JIT method limit, see docs/scale.md "The
+    interpreted rerank cosine").
 
     Zero-norm rows score NULL against every probe (matching
     vec_cosine's try_divide contract); numpy's pairwise summation can
     differ from the sequential HOF fold in final ulps, which is inside
-    the rows-only/recall-pinned contract of the LSH path (the oracled
-    md5 twin keeps HOF arithmetic).
+    the rows-only/recall-pinned contract of the ANN paths (the oracled
+    twins keep HOF arithmetic).
     """
     from pyspark.sql.functions import pandas_udf
 
-    planes = np.vstack(
-        [_hyperplanes(dims, n_planes, seed + 1000 * t) for t in range(n_tables)]
-    ).astype(np.float64)
-    weights = (2 ** np.arange(n_planes)).astype(np.int64)
-    probe64 = np.ascontiguousarray(probe_mat, dtype=np.float64)  # (P, dims)
-    probe_nsq = (probe64**2).sum(axis=1)  # (P,)
+    probe_nsq = (probe_mat**2).sum(axis=1)  # (P,)
 
-    @pandas_udf("buckets array<int>, cos array<double>")
+    @pandas_udf("cells array<bigint>, cos array<double>")
     def fused(emb: pd.Series) -> pd.DataFrame:
         mat = np.vstack(emb.to_numpy()).astype(np.float64)  # (batch, dims)
-        signs = (mat @ planes.T) > 0
-        b = signs.reshape(len(mat), n_tables, n_planes) @ weights
-        dot = mat @ probe64.T  # (batch, P)
+        dot = mat @ probe_mat.T  # (batch, P)
         nsq = (mat**2).sum(axis=1)
         denom_sq = nsq[:, None] * probe_nsq[None, :]
         with np.errstate(divide="ignore", invalid="ignore"):
@@ -152,40 +170,19 @@ def _bucket_cos_udf(
         else:
             cos_lists = [row.tolist() for row in cos]
         return pd.DataFrame(
-            {
-                "buckets": [row.astype(np.int32).tolist() for row in b],
-                "cos": cos_lists,
-            }
+            {"cells": [row.tolist() for row in route(mat)], "cos": cos_lists}
         )
 
     return fused
 
 
-def _collect_probes(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    op_name: str,
-):
+def _collect_probes(queries: DataFrame, id_col: str, vec_col: str, op_name: str):
     """Collect the probe set ONCE and derive every probe-side artifact
-    from that single snapshot (ADVICE r13): the score matrix AND the
-    probe-side join rows. The pre-r14 operators evaluated ``queries``
-    twice — once via collect() for the matrix, once lazily in the
-    join plan — so a non-deterministic probe DF (sample/limit) could
-    emit ids absent from the map, silently ranking those candidates
-    last via a NULL cosine. Duplicate probe ids (which would merge
-    distinct probes' candidate sets) raise here with a clear error.
-
-    r14 interleaved-A/B find: the first fix rebuilt the probe DataFrame from
-    the collected rows and kept the bucket pandas UDF on it — but
-    createDataFrame spreads even 10 rows across defaultParallelism
-    partitions, so the probe-side UDF cold-started one Python worker
-    per mostly-empty partition (+2.7 s cold, +0.45 s in-bench), and
-    coalesce(1) broke the broadcast (+4 s). The callers now compute
-    probe buckets/cells DRIVER-SIDE with the same numpy ops and ship
-    a literal int table — no probe-side UDF, no Python workers, and
-    the qidx rides in the rows (the create_map lookup is gone too).
+    from that single snapshot (ADVICE r13): evaluating ``queries``
+    twice (once for the score matrix, once lazily in the join plan)
+    lets a non-deterministic probe DF (sample/limit) emit ids absent
+    from the matrix. An empty probe set and duplicate probe ids (which
+    would merge distinct probes' candidate sets) raise ValueError.
 
     Returns (probe_rows, probe_mat, id_field) — id_field preserves
     the probe id column's Spark type for the literal schema.
@@ -207,6 +204,84 @@ def _collect_probes(
     return probe_rows, probe_mat, id_field
 
 
+def _routed_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    corpus_route,
+    probe_route,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    op_name: str,
+) -> DataFrame:
+    """The one ANN probe path (LSH and IVF): candidate cells, then an
+    exact-cosine refine.
+
+    The corpus goes through one fused Arrow pass (_route_cos_udf:
+    ``corpus_route`` cell keys plus the cosine against every probe).
+    The probes are routed DRIVER-SIDE by ``probe_route`` on the
+    collected matrix and shipped as a literal (query_id, cell, __qidx)
+    table: createDataFrame spreads even 10 rows across
+    defaultParallelism partitions, so a probe-side UDF cold-started one
+    Python worker per mostly-empty partition (+2.7 s cold, +0.45 s
+    in-bench) and coalesce(1) broke the broadcast (+4 s) — r14 A/B.
+    A broadcast equi-join on the int64 cell key yields the candidates,
+    which element_at-index their precomputed cosine; a pair colliding
+    in several cells scores identically, so deduping AFTER projection
+    keeps the candidate set while the only corpus-sized exchange stays
+    at ~32 B/row instead of two dims-wide vectors (r12).
+    """
+    from ..session import ensure_package_on_workers
+
+    ensure_package_on_workers(corpus.sparkSession)
+    probe_rows, probe_mat, id_field = _collect_probes(
+        queries, id_col, vec_col, op_name
+    )
+    fused = _route_cos_udf(corpus_route, probe_mat)
+    c = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        fused(F.col(vec_col)).alias("__rc"),
+    ).select(
+        "neighbor_id",
+        F.col("__rc.cos").alias("__cos"),
+        F.explode("__rc.cells").alias("cell"),
+    )
+    probe_cells = probe_route(probe_mat)
+    q_schema = T.StructType(
+        [
+            T.StructField("query_id", id_field.dataType),
+            T.StructField("cell", T.LongType()),
+            T.StructField("__qidx", T.IntegerType()),
+        ]
+    )
+    q = corpus.sparkSession.createDataFrame(
+        [
+            (r[0], int(cell), i)
+            for i, r in enumerate(probe_rows)
+            for cell in probe_cells[i]
+        ],
+        q_schema,
+    )
+    scored = (
+        c.join(F.broadcast(q), "cell")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.element_at(F.col("__cos"), F.col("__qidx") + F.lit(1)).alias(
+                "cosine"
+            ),
+        )
+        .dropDuplicates(["query_id", "neighbor_id"])
+    )
+    return top_k_per_group(
+        scored,
+        group=["query_id"],
+        order=[F.col("cosine").desc(), F.col("neighbor_id")],
+        k=k,
+    )
+
+
 def lsh_bucket_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -224,22 +299,9 @@ def lsh_bucket_topk(
     bits each; a candidate is any corpus vector sharing a bucket with
     the query in ANY table. Collision prob for angle θ is
     1-(1-(1-θ/π)^n_planes)^n_tables — recall/cost is tuned by the two
-    knobs. The join is an equi-join on (table_id, bucket): the corpus
-    side is replicated n_tables× into the shuffle, the scored set is
-    the colliding pairs — scored first, THEN deduped across tables
-    (r12: duplicate pairs score identical cosines, so the deduped
-    candidate set is unchanged, while deduping after projection keeps
-    the only corpus-sized exchange at ~32 B/row instead of two
-    dims-wide vectors).
-
-    r13 (16M-vector probe): the rerank cosine moved INTO the bucket
-    Arrow pass (_bucket_cos_udf) — each corpus vector is scored once
-    against the whole probe matrix, and the candidate join just
-    element_at-indexes the precomputed array. Per-pair scoring (HOF
-    vec_cosine) was the measured cliff: interpreted evaluation over
-    the candidate set (11× the corpus here) cost 117 s of the 160 s
-    total at 16M. Scoring is now O(corpus × P) BLAS, independent of
-    collision density, and the corpus-side exchange stays narrow.
+    knobs. Corpus and probes route through the same _lsh_router; the
+    corpus side is replicated n_tables× into the (table, bucket) cell
+    join of _routed_topk, which scores each corpus vector once.
 
     EAGERNESS contract (r13): the probe set is collected at build
     time to form the score matrix — |queries| must be driver-bounded
@@ -247,146 +309,24 @@ def lsh_bucket_topk(
     P ≤ ~10k keeps the matrix ≤ 5 MB and the per-row cos array ≤
     80 KB). An empty probe set raises ValueError.
     """
-    from ..session import ensure_package_on_workers
-
-    # Bucket ids live in IntegerType on both sides; the corpus pass
-    # wraps via astype(np.int32) while the driver-side probe table
-    # would overflow createDataFrame first — so the two sides would
-    # disagree before anything errors usefully. 31 bits is the shared
-    # exact range (ADVICE r14).
+    # Cell keys pack the table index above the bucket bits in one
+    # int64; 31 bucket bits keep that exact for any table count below
+    # 2^32 (ADVICE r14).
     if n_planes > 31:
         raise ValueError(
             f"lsh_bucket_topk: n_planes={n_planes} exceeds the 31-bit "
-            "IntegerType bucket range shared by the corpus and probe "
-            "sides; use more tables instead of wider buckets"
+            "bucket range of the int64 (table, bucket) cell key; use "
+            "more tables instead of wider buckets"
         )
-
-    ensure_package_on_workers(corpus.sparkSession)
-
-    probe_rows, probe_mat, id_field = _collect_probes(
-        corpus, queries, id_col, vec_col, "lsh_bucket_topk"
-    )
-
-    fused = _bucket_cos_udf(dims, n_planes, n_tables, seed, probe_mat)
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        fused(F.col(vec_col)).alias("__bc"),
-    ).select(
-        "neighbor_id",
-        F.col("__bc.cos").alias("__cos"),
-        F.posexplode("__bc.buckets").alias("table_id", "bucket"),
-    )
-    # Probe buckets computed DRIVER-SIDE with the exact _bucket_udf
-    # math (same planes/weights arrays; float32@float64 promotes to
-    # float64 before BLAS, so signs match the corpus-side fused pass
-    # bit-for-bit) and shipped as a literal int table — see
-    # _collect_probes for why no probe-side UDF (r14 A/B find).
-    planes = np.vstack(
-        [_hyperplanes(dims, n_planes, seed + 1000 * t) for t in range(n_tables)]
-    ).astype(np.float64)
-    weights = (2 ** np.arange(n_planes)).astype(np.int64)
-    signs = (probe_mat @ planes.T) > 0
-    pb = signs.reshape(len(probe_rows), n_tables, n_planes) @ weights
-    q_schema = T.StructType(
-        [
-            T.StructField("query_id", id_field.dataType),
-            T.StructField("table_id", T.IntegerType()),
-            T.StructField("bucket", T.IntegerType()),
-            T.StructField("__qidx", T.IntegerType()),
-        ]
-    )
-    q = corpus.sparkSession.createDataFrame(
-        [
-            (r[0], t, int(pb[i, t]), i)
-            for i, r in enumerate(probe_rows)
-            for t in range(n_tables)
-        ],
-        q_schema,
-    )
-
-    scored = (
-        c.join(F.broadcast(q), ["table_id", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.element_at(F.col("__cos"), F.col("__qidx") + F.lit(1)).alias(
-                "cosine"
-            ),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return top_k_per_group(
-        scored,
-        group=["query_id"],
-        order=[F.col("cosine").desc(), F.col("neighbor_id")],
-        k=k,
+    route = _lsh_router(dims, n_planes, n_tables, seed)
+    return _routed_topk(
+        corpus, queries, route, route, k, id_col, vec_col, "lsh_bucket_topk"
     )
 
 
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN: k-means coarse quantizer + n_probe search
 # ---------------------------------------------------------------------------
-
-
-def _assign_udf(centroids: np.ndarray, n_probe: int = 1):
-    """Vectorized assigner: embedding → n_probe nearest centroid ids
-    (by cosine, numpy matmul per Arrow batch)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    c = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def assign(emb: pd.Series) -> pd.Series:
-        mat = np.vstack(emb.to_numpy()).astype(np.float64)
-        mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        sims = mat @ c.T  # (batch, n_centroids)
-        top = np.argsort(-sims, axis=1)[:, :n_probe]
-        return pd.Series([row.astype(np.int32).tolist() for row in top])
-
-    return assign
-
-
-def _assign_cos_udf(centroids: np.ndarray, probe_mat: np.ndarray):
-    """Fused Arrow pass for ivf_topk (r13): per row, the nearest-cell
-    id (byte-identical math to ``_assign_udf(centroids, 1)``) AND the
-    cosine against every probe vector (one BLAS matmul per batch) —
-    the same score-once-per-corpus-row design as _bucket_cos_udf.
-    Zero-norm rows score NULL against every probe."""
-    from pyspark.sql.functions import pandas_udf
-
-    c = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    probe64 = np.ascontiguousarray(probe_mat, dtype=np.float64)
-    probe_nsq = (probe64**2).sum(axis=1)
-
-    @pandas_udf("cluster int, cos array<double>")
-    def fused(emb: pd.Series) -> pd.DataFrame:
-        mat = np.vstack(emb.to_numpy()).astype(np.float64)
-        unit = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        sims = unit @ c.T
-        top = np.argsort(-sims, axis=1)[:, :1]
-        dot = mat @ probe64.T
-        nsq = (mat**2).sum(axis=1)
-        denom_sq = nsq[:, None] * probe_nsq[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = dot / np.sqrt(denom_sq)
-        if (denom_sq == 0.0).any():
-            cos = np.where(denom_sq > 0.0, cos, np.nan)
-            cos_lists = [
-                [None if np.isnan(v) else float(v) for v in row] for row in cos
-            ]
-        else:
-            cos_lists = [row.tolist() for row in cos]
-        return pd.DataFrame(
-            {
-                "cluster": [int(row[0]) for row in top],
-                "cos": cos_lists,
-            }
-        )
-
-    return fused
 
 
 def ivf_fit_centroids(
@@ -401,19 +341,16 @@ def ivf_fit_centroids(
     (clustering._stride_init), then `iters` rounds of the shared
     distributed Lloyd trainer (clustering.lloyd_fit: int64 partial
     sums, decimal-exact merge, only the k×dims centroid matrix reaches
-    the driver) with the cosine assignment of ``_assign_udf(centroids,
-    1)``."""
+    the driver) with ``_ivf_router(centroids, 1)`` as the
+    assignment."""
     init = _stride_init(corpus, n_centroids, id_col, vec_col)
     if not len(init):
         raise ValueError("corpus is empty; cannot fit IVF centroids")
 
-    def cosine(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
-        c = cents[0] / np.linalg.norm(cents[0], axis=1, keepdims=True)
-        unit = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        sims = unit @ c.T
-        return np.argsort(-sims, axis=1)[:, :1]
+    def assign(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
+        return _ivf_router(cents[0], 1)(mat)
 
-    return lloyd_fit(corpus, init[None], cosine, iters, vec_col)[0]
+    return lloyd_fit(corpus, init[None], assign, iters, vec_col)[0]
 
 
 def ivf_topk(
@@ -428,8 +365,10 @@ def ivf_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF ANN: corpus partitioned into centroid cells; probes score
-    only the n_probe nearest cells. The cell join is a plain equi-join
-    on cluster id (AQE/skew eligible); recall/cost is n_probe/k-means
+    only the n_probe nearest cells. The corpus routes through
+    ``_ivf_router(centroids, 1)`` and the probes through
+    ``_ivf_router(centroids, n_probe)`` into the cell equi-join of
+    _routed_topk (AQE/skew eligible); recall/cost is n_probe/k-means
     quality. The complementary scale path to multi-table LSH.
 
     Scale note: ivf_fit_centroids collects n_centroids x dims per
@@ -439,79 +378,24 @@ def ivf_topk(
     clustering.hierarchical_kmeans_assign as the coarse quantizer
     (capped driver collect; cells become (coarse, fine) pairs).
 
-    r13 (the LSH lesson applied here — docs/scale.md "The interpreted
-    rerank cosine"): the pre-r13 plan scored per CANDIDATE PAIR with
-    HOF vec_cosine (interpreted) after a dedup exchange that carried
-    both dims-wide vectors (the exact wide-shuffle shape r12 killed in
-    LSH). Scoring now rides the cell-assignment Arrow pass — each
-    corpus vector scored once against the collected probe matrix
-    (O(corpus x P) BLAS, independent of n_probe and cell sizes); the
-    candidate join element_at-indexes the array and the dedup exchange
-    carries ~32 B/row. Cell assignment math is byte-identical to
-    _assign_udf; the cosine moves final ulps (numpy pairwise sum vs
-    the HOF fold), inside the rows-only/recall-pinned contract —
+    The cosine moves final ulps against the HOF fold (numpy pairwise
+    sum), inside the rows-only/recall-pinned contract —
     emb_ann_ivf_exact keeps engine-portable arithmetic. EAGERNESS:
-    the probe set is collected to form the matrix (ivf_fit_centroids
-    already collects, so the operator was never lazy); |queries| must
-    be driver-bounded, and an empty probe set raises ValueError.
+    the probe set is collected to form the score matrix
+    (ivf_fit_centroids already collects, so the operator was never
+    lazy); |queries| must be driver-bounded, and an empty probe set
+    raises ValueError.
     """
     centroids = ivf_fit_centroids(corpus, dims, n_centroids, iters, id_col, vec_col)
-
-    probe_rows, probe_mat, id_field = _collect_probes(
-        corpus, queries, id_col, vec_col, "ivf_topk"
-    )
-
-    c_fused = _assign_cos_udf(centroids, probe_mat)
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        c_fused(F.col(vec_col)).alias("__ac"),
-    ).select(
-        "neighbor_id",
-        F.col("__ac.cos").alias("__cos"),
-        F.col("__ac.cluster").alias("cluster"),
-    )
-    # Probe cell routing computed DRIVER-SIDE with the exact
-    # _assign_udf math (same normalization/argsort ops on the same
-    # float64 values) and shipped as a literal int table — see
-    # _collect_probes for why no probe-side UDF (r14 A/B find).
-    cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    unit = probe_mat / np.maximum(
-        np.linalg.norm(probe_mat, axis=1, keepdims=True), 1e-12
-    )
-    top = np.argsort(-(unit @ cn.T), axis=1)[:, :n_probe]
-    q_schema = T.StructType(
-        [
-            T.StructField("query_id", id_field.dataType),
-            T.StructField("cluster", T.IntegerType()),
-            T.StructField("__qidx", T.IntegerType()),
-        ]
-    )
-    q = corpus.sparkSession.createDataFrame(
-        [
-            (r[0], int(top[i, j]), i)
-            for i, r in enumerate(probe_rows)
-            for j in range(top.shape[1])
-        ],
-        q_schema,
-    )
-    scored = (
-        c.join(F.broadcast(q), "cluster")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.element_at(F.col("__cos"), F.col("__qidx") + F.lit(1)).alias(
-                "cosine"
-            ),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return top_k_per_group(
-        scored,
-        group=["query_id"],
-        order=[F.col("cosine").desc(), F.col("neighbor_id")],
-        k=k,
+    return _routed_topk(
+        corpus,
+        queries,
+        _ivf_router(centroids, 1),
+        _ivf_router(centroids, n_probe),
+        k,
+        id_col,
+        vec_col,
+        "ivf_topk",
     )
 
 
@@ -525,7 +409,7 @@ def md5_sign_buckets(
 ) -> DataFrame:
     """Engine-portable sign-LSH bucket assignment: (id, t, bucket).
 
-    The oracle-twin of _bucket_udf (VERDICT r6 item 4b, the
+    The oracle-twin of _lsh_router (VERDICT r6 item 4b, the
     emb_rp_project construction): hyperplanes are Rademacher ±1
     vectors with sign(t, j, i) derived from md5("ann-t-j-i") — a pure
     function of the indices, identical in any engine — and each
@@ -539,7 +423,7 @@ def md5_sign_buckets(
     trivially broadcastable), then two partial+final aggregates — all
     JVM-side. ~n_tables·n_planes·dims rows per vector through the
     first aggregate makes this the verification path; the BLAS
-    pandas_udf (_bucket_udf) stays the throughput path.
+    routing (_lsh_router) stays the throughput path.
     """
     spark = df.sparkSession
     t_ = spark.range(n_tables).select(F.col("id").cast("int").alias("t"))

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions import davg, vec_cosine, vec_double, vec_norm_sq
 from ..operators.similarity import brute_force_topk, lsh_bucket_topk
+from ..operators.topk import top_k_per_group
 from . import query
 
 _DIMS = 64
@@ -26,6 +27,36 @@ _SQL_DOT = (
 
 def _sql_dot(a: str, b: str, n: int = _DIMS) -> str:
     return _SQL_DOT.format(a=a, b=b, n=n)
+
+
+def _cosine_rerank(e: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact-cosine top-5 of (query_id, neighbor_id) candidates for the
+    probes vec_id < 10: the refine step the oracled ANN twins share
+    (emb_ann_md5, emb_ann_ivf_exact, emb_pq_exact). vec_cosine folds
+    left to right in double, as the oracles' generate_series walk does.
+    Only the probe vectors are broadcast; broadcasting the unfiltered
+    table would ship the whole corpus to every executor."""
+    qe = e.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), vec_double(F.col("embedding")).alias("__qv")
+    )
+    ce = e.select(
+        F.col("vec_id").alias("neighbor_id"), vec_double(F.col("embedding")).alias("__cv")
+    )
+    scored = (
+        cand.join(F.broadcast(qe), "query_id")
+        .join(ce, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            vec_cosine(F.col("__qv"), F.col("__cv")).alias("cosine"),
+        )
+    )
+    return top_k_per_group(
+        scored,
+        group=["query_id"],
+        order=[F.col("cosine").desc(), F.col("neighbor_id")],
+        k=5,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -359,7 +390,6 @@ def emb_ann_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     the throughput path; recall pinning between the two is in pytest.
     """
     from ..operators.similarity import md5_sign_buckets
-    from ..operators.topk import top_k_per_group
 
     e = load_table(spark, sf_dir, "embeddings")
     buck = md5_sign_buckets(e, "vec_id", "embedding", _DIMS, _ANN_J, _ANN_T)
@@ -373,29 +403,7 @@ def emb_ann_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    # broadcast ONLY the probe vectors (r7 review: broadcasting the
-    # unfiltered table ships the whole corpus to every executor)
-    qe = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), vec_double(F.col("embedding")).alias("__qv")
-    )
-    ce = e.select(
-        F.col("vec_id").alias("neighbor_id"), vec_double(F.col("embedding")).alias("__cv")
-    )
-    scored = (
-        cand.join(F.broadcast(qe), "query_id")
-        .join(ce, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            vec_cosine(F.col("__qv"), F.col("__cv")).alias("cosine"),
-        )
-    )
-    return top_k_per_group(
-        scored,
-        group=["query_id"],
-        order=[F.col("cosine").desc(), F.col("neighbor_id")],
-        k=5,
-    )
+    return _cosine_rerank(e, cand)
 
 
 # ---------------------------------------------------------------------------
@@ -530,8 +538,6 @@ def emb_ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpreted-fold rerank makes this the verification path, the
     BLAS ivf_topk the throughput path.
     """
-    from ..operators.topk import top_k_per_group
-
     e = load_table(spark, sf_dir, "embeddings")
     e6 = _fp_quantized(e)
     n = e.count()
@@ -568,27 +574,7 @@ def emb_ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    qe = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), vec_double(F.col("embedding")).alias("__qv")
-    )
-    ce = e.select(
-        F.col("vec_id").alias("neighbor_id"), vec_double(F.col("embedding")).alias("__cv")
-    )
-    scored = (
-        cand.join(F.broadcast(qe), "query_id")
-        .join(ce, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            vec_cosine(F.col("__qv"), F.col("__cv")).alias("cosine"),
-        )
-    )
-    return top_k_per_group(
-        scored,
-        group=["query_id"],
-        order=[F.col("cosine").desc(), F.col("neighbor_id")],
-        k=5,
-    )
+    return _cosine_rerank(e, cand)
 
 
 # ---------------------------------------------------------------------------
@@ -794,29 +780,7 @@ def emb_pq_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ark") <= _PQ_RERANK)
         .select("query_id", "neighbor_id")
     )
-    qe = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), vec_double(F.col("embedding")).alias("__qv")
-    )
-    ce = e.select(
-        F.col("vec_id").alias("neighbor_id"), vec_double(F.col("embedding")).alias("__cv")
-    )
-    scored = (
-        cand.join(F.broadcast(qe), "query_id")
-        .join(ce, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            vec_cosine(F.col("__qv"), F.col("__cv")).alias("cosine"),
-        )
-    )
-    from ..operators.topk import top_k_per_group
-
-    return top_k_per_group(
-        scored,
-        group=["query_id"],
-        order=[F.col("cosine").desc(), F.col("neighbor_id")],
-        k=5,
-    )
+    return _cosine_rerank(e, cand)
 
 
 # ---------------------------------------------------------------------------
@@ -1628,29 +1592,17 @@ def emb_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query("emb_recall_eval", oracle=None, tags=("vectors", "X7f", "eval", "no-oracle"))
-def emb_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the sign-LSH ANN index against the exact cosine
-    top-5, per probe — the evaluation operator an ANN deployment runs
-    continuously (index drift, parameter tuning). Joins the two
-    registry paths on (probe, neighbor) and counts hits; rows-only by
-    nature (the LSH bucketing is engine-specific), with the aggregate
-    recall floor pinned in tests/test_r6c_ops.py.
-
-    Scale: both sides are probe-bounded (k rows per probe); the
-    evaluation join keys on (probe_id, neighbor_id) — never touches
-    the corpus.
-    """
-    from ..operators.similarity import brute_force_topk, lsh_bucket_topk
-
-    e = load_table(spark, sf_dir, "embeddings")
+def _recall_at_5(e: DataFrame, approx: DataFrame) -> DataFrame:
+    """Per-probe recall@5 of ``approx`` (query_id, neighbor_id rows)
+    against the exact cosine top-5 of the probes vec_id < 10: one row
+    (query_id, n_exact, n_hits, recall) per probe. The hit join keys
+    on (probe, neighbor), so both sides stay probe-bounded."""
     probes = e.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(e, probes, k=5).select(
-        F.col("query_id"), F.col("neighbor_id")
+    exact = brute_force_topk(e, probes, k=5).select("query_id", "neighbor_id")
+    approx = approx.select(
+        F.col("query_id").alias("a_query"),
+        F.col("neighbor_id").alias("a_neighbor"),
     )
-    approx = lsh_bucket_topk(
-        e, probes, dims=_DIMS, k=5, n_planes=6, n_tables=8
-    ).select(F.col("query_id").alias("a_query"), F.col("neighbor_id").alias("a_neighbor"))
     hits = exact.join(
         approx,
         (exact.query_id == approx.a_query)
@@ -1677,6 +1629,23 @@ def emb_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
+
+
+@query("emb_recall_eval", oracle=None, tags=("vectors", "X7f", "eval", "no-oracle"))
+def emb_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@5 of the sign-LSH ANN index against the exact cosine
+    top-5, per probe — the evaluation operator an ANN deployment runs
+    continuously (index drift, parameter tuning). Joins the two
+    registry paths on (probe, neighbor) and counts hits; rows-only by
+    nature (the LSH bucketing is engine-specific), with the aggregate
+    recall floor pinned in tests/test_r6c_ops.py.
+
+    Scale: both sides are probe-bounded (k rows per probe); the
+    evaluation join keys on (probe_id, neighbor_id) — never touches
+    the corpus.
+    """
+    e = load_table(spark, sf_dir, "embeddings")
+    return _recall_at_5(e, emb_ann_lsh(spark, sf_dir))
 
 
 _RECALL_MD5_ORACLE = f"""
@@ -1729,42 +1698,8 @@ def emb_recall_eval_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys on (probe, neighbor); the corpus is touched only by the two
     index paths themselves.
     """
-    from ..operators.similarity import brute_force_topk
-
     e = load_table(spark, sf_dir, "embeddings")
-    probes = e.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(e, probes, k=5).select("query_id", "neighbor_id")
-    approx = emb_ann_md5(spark, sf_dir).select(
-        F.col("query_id").alias("a_query"),
-        F.col("neighbor_id").alias("a_neighbor"),
-    )
-    hits = exact.join(
-        approx,
-        (exact.query_id == approx.a_query)
-        & (exact.neighbor_id == approx.a_neighbor),
-        "left_semi",
-    )
-    n_hit = hits.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hits")
-    )
-    n_exact = exact.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_exact")
-    )
-    return (
-        n_exact.join(n_hit, "query_id", "left")
-        .select(
-            "query_id",
-            "n_exact",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("bigint").alias("n_hits"),
-        )
-        .withColumn(
-            "recall",
-            F.round(
-                F.col("n_hits").cast("double") / F.col("n_exact").cast("double"),
-                6,
-            ),
-        )
-    )
+    return _recall_at_5(e, emb_ann_md5(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -2371,14 +2306,14 @@ def diag_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only (bucket ids are engine-specific hashes); internal
     consistency and the occupancy-sum identity are pinned in tests.
     """
-    from ..operators.similarity import _bucket_udf
+    from ..operators.similarity import _lsh_router, _route_udf
 
     e = load_table(spark, sf_dir, "embeddings")
-    bucket_fn = _bucket_udf(dims=_DIMS, n_planes=6, n_tables=8, seed=7)
+    cells = _route_udf(_lsh_router(_DIMS, n_planes=6, n_tables=8, seed=7))
     assigned = e.select(
-        F.posexplode(bucket_fn(F.col("embedding"))).alias("table_id", "bucket")
+        F.posexplode(cells(F.col("embedding"))).alias("table_id", "cell")
     )
-    occ = assigned.groupBy("table_id", "bucket").agg(
+    occ = assigned.groupBy("table_id", "cell").agg(
         F.count(F.lit(1)).cast("bigint").alias("sz")
     )
     D = lambda c: c.cast("double")

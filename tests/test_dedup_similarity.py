@@ -495,6 +495,28 @@ class TestSimilarity:
             assert labels[r.neighbor_id] == labels[0]
 
 
+def _pq_probe_search(df, probes):
+    import numpy as np
+
+    from chrono_ts_spark.operators.pq import pq_adc_topk
+
+    return pq_adc_topk(df, probes, np.zeros((1, 2, 2)), k=3)
+
+
+def _ivf_probe_search(df, probes):
+    from chrono_ts_spark.operators.similarity import ivf_topk
+
+    return ivf_topk(df, probes, dims=2, k=3, n_centroids=2, n_probe=1)
+
+
+# Every operator that collects a probe set (similarity._collect_probes)
+_PROBE_SEARCHES = {
+    "lsh_bucket_topk": lambda df, probes: lsh_bucket_topk(df, probes, dims=2, k=3),
+    "ivf_topk": _ivf_probe_search,
+    "pq_adc_topk": _pq_probe_search,
+}
+
+
 class TestIVF:
     def test_ivf_high_recall_on_clusters(self, spark, clustered=None):
         import random
@@ -586,14 +608,14 @@ class TestIVF:
 
         assert np.array_equal(a, b)
 
-    def test_duplicate_probe_ids_raise(self, spark):
+    @pytest.mark.parametrize("search", sorted(_PROBE_SEARCHES))
+    def test_duplicate_probe_ids_raise(self, spark, search):
         # ADVICE r13: duplicate probe ids used to surface as a runtime
         # DUPLICATED_MAP_KEY (or worse, silent NULL-cosine ranking when
         # a non-deterministic probe DF diverged between its two
-        # evaluations). The probe set is now snapshotted once and
-        # duplicates raise with a clear message.
-        from chrono_ts_spark.operators.similarity import lsh_bucket_topk
-
+        # evaluations). Every probe-collecting search snapshots the
+        # probe set once and raises on duplicates (pq_adc_topk used to
+        # keep the last vector of a duplicated id).
         df = spark.createDataFrame(
             [(i, [float(i), 1.0]) for i in range(20)],
             "vec_id long, embedding array<float>",
@@ -602,7 +624,60 @@ class TestIVF:
             df.filter(F.col("vec_id") < 1)
         )
         with pytest.raises(ValueError, match="duplicate probe ids"):
-            lsh_bucket_topk(df, dup_probes, dims=2, k=3)
+            _PROBE_SEARCHES[search](df, dup_probes)
+
+    @pytest.mark.parametrize("search", sorted(_PROBE_SEARCHES))
+    def test_empty_probe_set_raises(self, spark, search):
+        df = spark.createDataFrame(
+            [(i, [float(i), 1.0]) for i in range(20)],
+            "vec_id long, embedding array<float>",
+        )
+        with pytest.raises(ValueError, match="no probe rows"):
+            _PROBE_SEARCHES[search](df, df.filter(F.col("vec_id") < 0))
+
+
+class TestRoutingAgreement:
+    """The corpus side (the fused Arrow pass) and the probe side (the
+    driver-side routing) of an ANN cell join must put the same vector
+    in the same cell. Each probe's exact copy sits in the corpus under
+    another id, so the copy is the probe's top-1 neighbour (cosine 1)
+    exactly when both sides route that vector to the same cell."""
+
+    @pytest.fixture(scope="class")
+    def twins(self, spark):
+        import numpy as np
+
+        rng = np.random.default_rng(23)
+        base = rng.normal(size=(200, 16)).astype(np.float32)
+        rows = [(i, v.tolist()) for i, v in enumerate(base)]
+        rows += [(1000 + i, base[i].tolist()) for i in range(40)]
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        return df, df.filter(F.col("vec_id") < 40)
+
+    @pytest.mark.parametrize("seed", [7, 1007])
+    def test_lsh_probe_shares_its_twins_bucket(self, spark, twins, seed):
+        # one table of 12 bits: a probe routed differently from its
+        # twin lands in another bucket with probability ~1 - 2^-12
+        df, probes = twins
+        out = lsh_bucket_topk(
+            df, probes, dims=16, k=1, n_planes=12, n_tables=1, seed=seed
+        )
+        got = {r.query_id: (r.neighbor_id, r.cosine) for r in out.collect()}
+        assert {q: n for q, (n, _) in got.items()} == {
+            q: 1000 + q for q in range(40)
+        }
+        assert all(abs(c - 1.0) < 1e-12 for _, c in got.values())
+
+    def test_ivf_probe_shares_its_twins_cell(self, spark, twins):
+        from chrono_ts_spark.operators.similarity import ivf_topk
+
+        df, probes = twins
+        out = ivf_topk(df, probes, dims=16, k=1, n_centroids=8, n_probe=1)
+        got = {r.query_id: (r.neighbor_id, r.cosine) for r in out.collect()}
+        assert {q: n for q, (n, _) in got.items()} == {
+            q: 1000 + q for q in range(40)
+        }
+        assert all(abs(c - 1.0) < 1e-12 for _, c in got.values())
 
 
 # ---------------------------------------------------------------------------

@@ -167,3 +167,19 @@ def test_adc_batch_cap_invariant(spark, corpus):
     big_plain, big_rr = run()
     assert small_plain == big_plain
     assert small_rr == big_rr
+
+
+def test_rerank_candidate_broadcast_is_bounded(spark, corpus, monkeypatch):
+    # P x max(k, rerank) candidate rows are broadcast for the rerank;
+    # past the private bound the operator raises instead of planning an
+    # unbounded broadcast (the MinHash hot-set idiom: no second path).
+    from chrono_ts_spark.operators import pq
+
+    df, _ = corpus
+    probes = df.filter(F.col("vec_id") < 4)
+    cb = np.zeros((4, 8, DIMS // 4))
+    monkeypatch.setattr(pq, "_MAX_RERANK_ROWS", 40)
+    with pytest.raises(ValueError, match="40-row bound"):
+        pq_adc_topk(df, probes, cb, k=5, rerank=20)  # 4 x 20 = 80 > 40
+    pq_adc_topk(df, probes, cb, k=5, rerank=10)  # 4 x 10 = 40: at the bound
+    pq_adc_topk(df, probes, cb, k=20)  # no rerank, nothing broadcast

@@ -276,6 +276,18 @@ RULES: dict[str, dict[str, list[str]]] = {
         "want": ["BroadcastHashJoin"],
         "forbid": ["CartesianProduct"],
     },
+    "emb_ann_lsh": {
+        # cell-key equi-join with the literal probe table broadcast; the
+        # rerank cosine rides the corpus Arrow pass, never a per-pair
+        # HOF (zip_with: docs/scale.md "The interpreted rerank cosine")
+        "want": ["BroadcastHashJoin"],
+        "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin", "zip_with"],
+    },
+    "emb_ann_ivf": {
+        # same probe path as emb_ann_lsh, one cell per corpus row
+        "want": ["BroadcastHashJoin"],
+        "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin", "zip_with"],
+    },
 }
 
 
