@@ -48,12 +48,19 @@ RUNTIME_CONFS: dict[str, str] = {
     # row as an UnsafeRow copy ON THE HEAP — the 30M-event probe OOMed
     # an 8g JVM at ~28M (bucket, user) aggregation states
     # (UnsafeRow.copy inside HDFSBackedStateStore.put), while RocksDB
-    # finishes the same stream in 78 s with heap flat. Fixture-scale
-    # cost is ~0.1-0.4 s per stateful query (measured, untimed
-    # surface) — the wrong-at-scale default is not worth it.
+    # finishes the same stream in 78 s with heap flat — the
+    # wrong-at-scale default is not worth it.
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     ),
+    # A RocksDB commit appends the batch's writes to one changelog file
+    # per store; snapshots move to the state-store maintenance thread.
+    # Without it every commit of every micro-batch flushes the memtable,
+    # copies the new SST files plus a zip into the checkpoint and fsyncs
+    # them: a fixed cost per store per batch, whatever the data size
+    # (measured in docs/scale.md "Streaming state commits").
+    # A checkpoint written with either setting resumes under the other.
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
 }
 
 
@@ -117,7 +124,8 @@ CLUSTER_CONF: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     # arrow batches sized so multimodal blobs don't blow worker memory
     "spark.sql.execution.arrow.maxRecordsPerBatch": "2000",
-    # streaming state on disk (inherited from RUNTIME_CONFS since r10)
+    # streaming state on disk, committed as a changelog per micro-batch
+    # (both inherited from RUNTIME_CONFS)
 }
 
 _PKG_ZIP: str | None = None

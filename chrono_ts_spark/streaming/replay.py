@@ -22,6 +22,7 @@ watermark eviction claim above actually applies.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import threading
 import uuid
@@ -172,32 +173,47 @@ def start_bounded(writer: DataStreamWriter, spark: SparkSession) -> StreamingQue
             spark.conf.set(key, previous)
 
 
+def _run_bounded(
+    writer: DataStreamWriter, spark: SparkSession, ckpt: str | None = None
+) -> None:
+    """Run ``writer`` as an availableNow query until it terminates.
+
+    It starts through :func:`start_bounded`, so its state has one
+    partition per core. Without ``ckpt`` the query gets a fresh
+    checkpoint dir, removed once the query ends, failed or not: a
+    bounded replay constructs fresh state, so the checkpoint has no
+    further use. A ``ckpt`` the caller passes (to resume a previous
+    run) is kept. The query is stopped however it ends.
+    """
+    own_ckpt = ckpt is None
+    if own_ckpt:
+        ckpt = tempfile.mkdtemp(prefix="chrono_ckpt_")
+    try:
+        q = start_bounded(
+            writer.option("checkpointLocation", ckpt).trigger(availableNow=True),
+            spark,
+        )
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+    finally:
+        if own_ckpt:
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def _run_to_memory(
     result: DataFrame, spark: SparkSession, output_mode: str = "complete"
 ) -> DataFrame:
-    """Run an availableNow query into a memory sink; return the table.
-
-    The query starts through :func:`start_bounded`, so its state has one
-    partition per core. The checkpoint dir is deleted once the bounded
-    query terminates (replays construct fresh state; the checkpoint has
-    no further use). The memory table itself lives for the session —
+    """Run a bounded query into a memory sink (:func:`_run_bounded`);
+    return the table. The memory table itself lives for the session —
     callers collect from it lazily, so it can't be dropped here.
     """
-    import shutil
-
     name = "mem_" + uuid.uuid4().hex[:10]
-    ckpt = tempfile.mkdtemp(prefix="chrono_ckpt_")
-    q = start_bounded(
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
+    _run_bounded(
+        result.writeStream.format("memory").queryName(name).outputMode(output_mode),
         spark,
     )
-    q.awaitTermination()
-    q.stop()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 
@@ -207,7 +223,8 @@ def run_to_parquet(
     out_dir: str,
     output_mode: str = "append",
 ) -> DataFrame:
-    """Run an availableNow query into a PARQUET sink; return a reader.
+    """Run a bounded query into a PARQUET sink (:func:`_run_bounded`);
+    return a reader.
 
     The memory sink materializes the whole result driver-side, which
     caps per-event-output streams (Kalman/EMA/Holt emit one row per
@@ -217,23 +234,14 @@ def run_to_parquet(
     stays on executors, output goes to files, the driver never holds
     rows. The fixture-scale query registry keeps the memory sink (the
     driver wants a collectable table); scale probes and any real
-    deployment use this. It starts through :func:`start_bounded` (one
-    state partition per core), like the memory sink.
+    deployment use this.
     """
-    import shutil
-
-    ckpt = tempfile.mkdtemp(prefix="chrono_ckpt_")
-    q = start_bounded(
+    _run_bounded(
         result.writeStream.format("parquet")
         .option("path", out_dir)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
+        .outputMode(output_mode),
         spark,
     )
-    q.awaitTermination()
-    q.stop()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(out_dir)
 
 

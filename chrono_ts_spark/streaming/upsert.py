@@ -186,29 +186,17 @@ def run_upsert_sink(
     skips already-committed source files, and the sink's idempotent
     merge absorbs any batch replayed from an uncommitted epoch — the
     two halves of the exactly-once story."""
-    import shutil
-    import tempfile
+    from .replay import _run_bounded
 
-    from .replay import start_bounded
-
-    own_ckpt = ckpt is None
-    if own_ckpt:
-        ckpt = tempfile.mkdtemp(prefix="chrono_upsert_ckpt_")
-    q = start_bounded(
-        agg.writeStream.outputMode("update")
-        .foreachBatch(
+    _run_bounded(
+        agg.writeStream.outputMode("update").foreachBatch(
             lambda b, _id: upsert_batch(
                 b, root, keys=keys or ["bucket_ts", "user_id"], seq_col=seq_col
             )
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
+        ),
         agg.sparkSession,
+        ckpt,
     )
-    q.awaitTermination()
-    q.stop()
-    if own_ckpt:
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def run_upsert_counts(

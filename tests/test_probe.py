@@ -1,7 +1,8 @@
 """tools/probe.py end to end: one interleaved pair of a git-ref arm
 (a temporary worktree) and this checkout, traced, over a registry
 query, a plan-heavy text query and a sink_dir streaming runner; and a
-SIGTERM to the harness stopping its worker and removing the worktree."""
+SIGTERM to the harness stopping its worker and removing the worktree;
+and the per-operator commit split summed from canned progress."""
 
 from __future__ import annotations
 
@@ -119,3 +120,38 @@ def test_sigterm_kills_worker_and_removes_worktree(tmp_path):
         harness.wait()
         if pids.exists():
             shutil.rmtree(Path(pids.read_text().split()[2]).parents[1], ignore_errors=True)
+
+
+def test_state_operators_sum_the_commit_split():
+    sys.path.insert(0, str(ROOT / "tools"))
+    import probe
+
+    def op(parts, commit, custom):
+        return {"numShufflePartitions": parts, "numStateStoreInstances": parts,
+                "commitTimeMs": commit, "customMetrics": custom}
+
+    progress = [
+        {"batchId": 0, "stateOperators": [
+            op(4, 500, {"rocksdbCommitFileSyncLatencyMs": 450, "rocksdbCommitFlushLatency": 20,
+                        "rocksdbCommitCheckpointLatency": 10}),
+            op(4, 300, {"rocksdbCommitFileSyncLatencyMs": 280}),
+        ]},
+        {"batchId": 1},  # a report with no state operators adds nothing
+        {"batchId": 2, "stateOperators": [
+            op(4, 60, {"rocksdbCommitFileSyncLatencyMs": 55,
+                       "rocksdbChangeLogWriterCommitLatencyMs": 55}),
+            op(4, 40, {"rocksdbCommitFileSyncLatencyMs": 35,
+                       "rocksdbChangeLogWriterCommitLatencyMs": 35}),
+        ]},
+    ]
+    got = probe.state_operators(progress)
+    assert set(got) == {"numShufflePartitions", "numStateStoreInstances", *probe.COMMIT_SPLIT}
+    assert got["numShufflePartitions"] == got["numStateStoreInstances"] == [4, 4]
+    assert got["commitTimeMs"] == [560, 340]
+    assert got["rocksdbCommitFileSyncLatencyMs"] == [505, 315]
+    assert got["rocksdbChangeLogWriterCommitLatencyMs"] == [55, 35]
+    assert got["rocksdbCommitFlushLatency"] == [20, 0]
+    assert got["rocksdbCommitCheckpointLatency"] == [10, 0]
+    assert probe.state_operators([{"batchId": 0}]) == {
+        key: [] for key in got
+    }

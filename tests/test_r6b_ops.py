@@ -11,6 +11,7 @@ import statistics
 from datetime import datetime, timedelta
 
 import pyspark.sql.functions as F
+import pytest
 
 from chrono_ts_spark.queries import load_all
 
@@ -946,8 +947,20 @@ class TestSkyline:
         assert got == want
 
 
+CHANGELOG = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+
 class TestUpsertRestart:
-    def test_checkpoint_restart_processes_only_new_files(self, spark, tmp_path):
+    # The checkpoint is written with RocksDB changelog checkpointing off
+    # and resumed with it on, and the reverse. Each run's new state
+    # files show how it committed: changelogs, or snapshot zips only.
+    @pytest.mark.parametrize(
+        "written,resumed", [("false", "true"), ("true", "false")],
+        ids=["snapshot_then_changelog", "changelog_then_snapshot"],
+    )
+    def test_checkpoint_restart_processes_only_new_files(
+        self, spark, tmp_path, written, resumed
+    ):
         import pathlib
         import shutil
 
@@ -983,10 +996,29 @@ class TestUpsertRestart:
                 .withWatermark("ts", "10 minutes")
             )
 
+        def committed(suffix):
+            # <version>.<suffix> per state partition of operator 0
+            return set(pathlib.Path(ckpt).glob(f"state/0/*/*{suffix}"))
+
+        def run(changelog):
+            logs, zips = committed(".changelog"), committed(".zip")
+            # the stream clones the session conf when it starts
+            before = spark.conf.get(CHANGELOG)
+            spark.conf.set(CHANGELOG, changelog)
+            try:
+                run_upsert_sink(windowed_counts(stream()), root, ckpt=ckpt)
+            finally:
+                spark.conf.set(CHANGELOG, before)
+            if changelog == "true":
+                assert committed(".changelog") > logs
+            else:
+                assert committed(".changelog") == logs
+                assert committed(".zip") > zips
+
         t = lambda m: datetime(2024, 1, 1, 10, m)
         write_file("f0.parquet", [(1, t(0), 1, "a", 1.0, "{}"),
                                   (2, t(1), 1, "a", 1.0, "{}")])
-        run_upsert_sink(windowed_counts(stream()), root, ckpt=ckpt)
+        run(written)
         first = {(r.bucket_ts, r.user_id): r.n_events
                  for r in read_state(spark, root).collect()}
         assert first == {("2024-01-01 10:00:00", 1): 2}
@@ -996,7 +1028,7 @@ class TestUpsertRestart:
         # must be CORRECTED to 3, not duplicated
         write_file("f1.parquet", [(3, t(2), 1, "a", 1.0, "{}"),
                                   (4, t(7), 2, "a", 1.0, "{}")])
-        run_upsert_sink(windowed_counts(stream()), root, ckpt=ckpt)
+        run(resumed)
         second = {(r.bucket_ts, r.user_id): r.n_events
                   for r in read_state(spark, root).collect()}
         assert second == {

@@ -54,3 +54,15 @@ def test_explicit_200_in_sparkconf_is_kept():
         apply_runtime_confs(s)
     assert s.sparkContext.getconf_calls == 1
     assert s.conf.get("spark.sql.shuffle.partitions") == "200"
+
+
+def test_stock_session_commits_streaming_state_as_a_changelog():
+    s = _Session({}, "200")
+    apply_runtime_confs(s)
+    assert s.conf.get("spark.sql.streaming.stateStore.providerClass").endswith(
+        "RocksDBStateStoreProvider"
+    )
+    assert (
+        s.conf.get("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+        == "true"
+    )

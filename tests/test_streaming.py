@@ -709,3 +709,70 @@ def test_concurrent_bounded_starts_restore_session_conf():
     assert not any(t.is_alive() for t in threads)
     assert len(seen) == 16 * 20 and set(seen) == {"3"}
     assert values[SHUFFLE_PARTITIONS] == "7"
+
+
+CHANGELOG = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+
+@pytest.mark.parametrize("runner", ["memory", "upsert", "pandas_state"])
+def test_bounded_stream_commits_a_changelog(spark, tmp_path, monkeypatch, runner):
+    """On the session as the package configures it, every stateful
+    operator commits its RocksDB state as a changelog: no SST file is
+    copied into the checkpoint during the batch."""
+    from chrono_ts_spark.streaming import replay
+    from chrono_ts_spark.streaming.stateful import run_ema_stream
+    from chrono_ts_spark.streaming.upsert import run_upsert_counts
+
+    started = []
+    start = replay.start_bounded
+    monkeypatch.setattr(
+        replay, "start_bounded", lambda w, s: started.append(start(w, s)) or started[-1]
+    )
+    if runner == "memory":
+        replay.run_stateful_dedup_stream(spark, SF_SMOKE)
+    elif runner == "upsert":
+        run_upsert_counts(spark, SF_SMOKE, str(tmp_path / "store"))
+    else:
+        run_ema_stream(spark, SF_SMOKE)
+    assert len(started) == 1
+    ops = started[0].lastProgress["stateOperators"]
+    assert ops and any(o["numRowsTotal"] > 0 for o in ops), ops
+    for o in ops:
+        metrics = o["customMetrics"]
+        assert "rocksdbChangeLogWriterCommitLatencyMs" in metrics, o["operatorName"]
+        assert metrics.get("rocksdbFilesCopied", 0) == 0, o["operatorName"]
+    assert spark.conf.get(CHANGELOG) == "true"
+
+
+def _failing(df, col):
+    """``df`` whose ``col`` raises once a micro-batch computes it."""
+    return df.withColumn(
+        col, F.when(F.col(col) > 0, F.raise_error(F.lit("planted failure"))).otherwise(F.col(col))
+    )
+
+
+def test_failed_bounded_stream_removes_its_checkpoint(spark, tmp_path, monkeypatch):
+    """A bounded stream that fails is stopped and the checkpoint it
+    created is removed; a checkpoint the caller passed in is kept."""
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    from chrono_ts_spark.streaming.replay import _run_to_memory, replay_events_stream
+    from chrono_ts_spark.streaming.upsert import run_upsert_sink, windowed_counts
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    ev = replay_events_stream(spark, SF_SMOKE).withWatermark("ts", "10 minutes")
+    agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
+    with pytest.raises(StreamingQueryException, match="planted failure"):
+        _run_to_memory(_failing(agg, "n_events"), spark)
+    assert not list(tmp_path.glob("chrono_ckpt_*"))
+    assert not spark.streams.active
+
+    ckpt = tmp_path / "resume_ckpt"
+    with pytest.raises(StreamingQueryException, match="planted failure"):
+        run_upsert_sink(
+            _failing(windowed_counts(ev), "n_events"), str(tmp_path / "store"), ckpt=str(ckpt)
+        )
+    assert (ckpt / "offsets").is_dir()
+    assert not spark.streams.active

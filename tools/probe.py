@@ -28,9 +28,14 @@ the arm order. Stopping the harness (SIGTERM or Ctrl-C) kills the
 running subprocess and its JVM and removes the temporary worktrees.
 Per query: ``build_s`` (plan construction), one untimed warm run, one
 timed noop-sink run (``exec_s``). A runner builds and
-runs in one call (``build_s`` 0); its record also carries each stateful
-operator's ``numShufflePartitions`` and ``numStateStoreInstances``
-from the stream's progress. An exception fails that query in
+runs in one call (``build_s`` 0); its record also carries, per stateful
+operator, ``numShufflePartitions`` and ``numStateStoreInstances`` from
+the stream's progress and the commit split of the timed run summed
+over its progress reports: ``commitTimeMs`` and the RocksDB
+``rocksdbCommitFileSyncLatencyMs``,
+``rocksdbChangeLogWriterCommitLatencyMs``,
+``rocksdbCommitFlushLatency`` and ``rocksdbCommitCheckpointLatency``
+(``COMMIT_SPLIT``). An exception fails that query in
 that arm; the run goes on. ``--trace`` turns on Spark's event log
 through the launch configuration, tags build and exec phases with
 ``setJobGroup`` and adds the layer metrics of ``benchmark/tracing.py``.
@@ -358,15 +363,37 @@ def expand(queries: str) -> list[str]:
 # --- one (pair, arm): runs in its own subprocess and JVM
 
 
-def state_layout(progress: list[dict]) -> dict:
-    """Per stateful operator, in plan order, its shuffle partitions and
-    state-store instances as the last progress report with state
-    operators gives them (empty lists for a stateless runner)."""
-    ops = next((p["stateOperators"] for p in reversed(progress) if p.get("stateOperators")), [])
-    return {
+# Per stateful operator, summed over a run's progress reports: the
+# state-store commit time and the RocksDB metrics that split it
+# (snapshot: memtable flush, local checkpoint, SST copy + fsync;
+# changelog: one file written and synced per store).
+COMMIT_SPLIT = (
+    "commitTimeMs",
+    "rocksdbCommitFileSyncLatencyMs",
+    "rocksdbChangeLogWriterCommitLatencyMs",
+    "rocksdbCommitFlushLatency",
+    "rocksdbCommitCheckpointLatency",
+)
+
+
+def state_operators(progress: list[dict]) -> dict:
+    """Per stateful operator, in plan order (empty lists for a
+    stateless runner): its shuffle partitions and state-store instances
+    as the last progress report with state operators gives them, and
+    each ``COMMIT_SPLIT`` metric summed over every report (0 where a
+    report lacks it)."""
+    reports = [p["stateOperators"] for p in progress if p.get("stateOperators")]
+    ops = reports[-1] if reports else []
+    out = {
         "numShufflePartitions": [o.get("numShufflePartitions") for o in ops],
         "numStateStoreInstances": [o.get("numStateStoreInstances") for o in ops],
     }
+    for key in COMMIT_SPLIT:
+        out[key] = [0] * len(ops)
+        for r in reports:
+            for i, o in enumerate(r[: len(ops)]):
+                out[key][i] += o.get(key, o.get("customMetrics", {}).get(key, 0))
+    return out
 
 
 class Worker:
@@ -439,7 +466,7 @@ class Worker:
         progress = self.progress.progress[n0:]
         # streaming jobs run under their query's runId as job group
         groups = [f"exec|{name}"] + sorted({p["runId"] for p in progress})
-        return {"build_s": 0.0, "exec_s": exec_s, "rows": rows, **state_layout(progress)}, groups, progress
+        return {"build_s": 0.0, "exec_s": exec_s, "rows": rows, **state_operators(progress)}, groups, progress
 
     def run(self) -> None:
         """Every target once; records are saved after each one, so a
