@@ -14,6 +14,9 @@ query adds downstream. Nothing here materializes or collects.
 
 from __future__ import annotations
 
+import glob
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -156,8 +159,6 @@ def _path_fingerprint(path: str) -> tuple:
     trees). Non-local / unstatable paths (e.g. s3://) fingerprint as
     a constant — falling back to the r9 per-path-forever behavior for
     storage where mtime probing isn't free."""
-    import os
-
     try:
         st = os.stat(path)
     except OSError:
@@ -208,11 +209,45 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     The rule is applied to *every* column observed as ``timestamp_ntz``
     in *every* table, not just events.ts, so a future rotation of
-    o_orderdate / l_shipdate cannot re-open the same hole.
+    o_orderdate / l_shipdate cannot re-open the same hole
+    (:func:`normalize_timestamps`, which the streaming replay applies
+    too). The events table is read where :func:`events_files` finds it.
     """
     apply_runtime_confs(spark)
-    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    df = spark.read.schema(observed_schema(spark, path)).parquet(path)
+    base = sf_dir.rstrip("/")
+    if name == "events":
+        pattern, schema_file = events_files(base)
+    else:
+        pattern = f"{name}.parquet"
+        schema_file = f"{base}/{pattern}"
+    df = spark.read.schema(observed_schema(spark, schema_file)).parquet(f"{base}/{pattern}")
+    return normalize_timestamps(df, name)
+
+
+# The time-sliced events layout: one file per replay micro-batch, in
+# mtime order (streaming/replay.py).
+SLICE_GLOB = "slice_*.parquet"
+
+
+def events_files(sf_dir: str) -> tuple[str, str]:
+    """Where the events table of ``sf_dir`` lives, as (file name or
+    glob under ``sf_dir``, one file to read its schema from):
+    ``events.parquet`` when it exists, else the time-sliced
+    ``slice_*.parquet`` layout. A non-local URI is taken to hold
+    ``events.parquet``, as is a directory with neither (its read then
+    fails on the missing path)."""
+    base = sf_dir.rstrip("/")
+    single = f"{base}/events.parquet"
+    if "://" in base or os.path.exists(single):
+        return "events.parquet", single
+    slices = sorted(glob.glob(f"{base}/{SLICE_GLOB}"))
+    return (SLICE_GLOB, slices[0]) if slices else ("events.parquet", single)
+
+
+def normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
+    """``load_table``'s timestamp rule on a frame read as table
+    ``name`` is stored (batch or streaming): every column declared
+    TimestampType comes out as TIMESTAMP, whatever the encoding."""
     # ns-as-bigint rule generalized over SCHEMAS (r7 review: it was
     # hard-coded to events.ts while the docstring promised every
     # column): any column DECLARED TimestampType that loads as bigint

@@ -121,6 +121,28 @@ def favg(col: Column | str, s: int = 2) -> Column:
     return fx_double(F.sum(fx(c, s)), s) / F.count(c).cast("double")
 
 
+def moment_sums(x: Column | str, y: Column | str) -> list[Column]:
+    """The exact bivariate moment sums ``n, sx, sy, sxy, sxx, syy`` over
+    integer-valued ``x`` and ``y`` (fixed-point longs from :func:`fx`,
+    or counts), as aggregate columns in decimal(38,0).
+
+    Decimal multiply and sum are exact, so the moments are the same
+    integers whatever the aggregation order; the oracle side carries
+    them as HUGEINT (DuckDB widens decimal x decimal past 38 digits
+    into double, Spark caps at 38). Each caller keeps its own final
+    double formula: the IEEE op order of corr/slope/acf differs
+    between queries and must mirror that query's oracle text."""
+    dx, dy = dec(x, 38, 0), dec(y, 38, 0)
+    return [
+        dec(F.count(F.lit(1)), 38, 0).alias("n"),
+        F.sum(dx).alias("sx"),
+        F.sum(dy).alias("sy"),
+        F.sum(dx * dy).alias("sxy"),
+        F.sum(dx * dx).alias("sxx"),
+        F.sum(dy * dy).alias("syy"),
+    ]
+
+
 def eval_once(col: Column) -> Column:
     """Nondeterminism barrier: value-identical wrapper that stops the
     optimizer duplicating an expensive expression below a filter on its

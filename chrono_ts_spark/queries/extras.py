@@ -17,6 +17,7 @@ from ..catalog import SCHEMAS, load_table
 from ..functions import (
     davg,
     dsum,
+    fx,
     md5_u32,
     sql_dsum,
     sql_md5_u32,
@@ -516,7 +517,7 @@ def udtf_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalent exists as pure HOFs too — the UDTF form exists for
     logic that genuinely needs imperative Python per row.
     """
-    from pyspark.sql.functions import lit, udtf
+    from pyspark.sql.functions import udtf
 
     from ..session import ensure_package_on_workers
 
@@ -1404,9 +1405,8 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_package_on_workers(spark)
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * F.lit(100.0)).cast("bigint")
     hourly = (
-        ev.select("event_type", time_bucket("ts", 3600).alias("bucket"), cents.alias("c"))
+        ev.select("event_type", time_bucket("ts", 3600).alias("bucket"), fx("value").alias("c"))
         .groupBy("event_type", "bucket")
         .agg(F.sum("c").cast("double").alias("y"))
     )
@@ -1909,7 +1909,7 @@ def io_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.agg(
         F.count(F.lit(1)).cast("bigint").alias("rows"),
         F.sum("event_id").cast("bigint").alias("sum_event_id"),
-        F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
+        F.sum(fx("value"))
         .cast("bigint")
         .alias("sum_cents"),
     ).select(
@@ -1980,7 +1980,7 @@ def io_nested_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.groupBy(F.col("customer").alias("o_custkey")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         F.sum(
-            F.round(F.col("detail.price") * 100, 0).cast("bigint")
+            fx("detail.price")
         )
         .cast("bigint")
         .alias("cents_total"),
@@ -2352,7 +2352,7 @@ def io_csv_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return back.groupBy("p_brand").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.round(F.col("p_retailprice") * 100, 0).cast("bigint"))
+        F.sum(fx("p_retailprice"))
         .cast("bigint")
         .alias("cents_total"),
         F.sum(F.col("p_type").isNull().cast("int")).cast("bigint").alias(
@@ -2525,7 +2525,7 @@ def io_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.parquet(path)
     return back.groupBy(F.col("day").cast("string").alias("day")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
+        F.sum(fx("value"))
         .cast("bigint")
         .alias("cents_sum"),
     )

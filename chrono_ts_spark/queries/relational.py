@@ -21,6 +21,7 @@ from ..functions import (
     fx,
     fx_double,
     md5_u32,
+    moment_sums,
     sql_davg,
     sql_dsum,
     sql_md5_u32,
@@ -2226,7 +2227,7 @@ def rel_skyline_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * F.lit(100.0)).cast("bigint").alias("cents"),
+        fx("o_totalprice").alias("cents"),
         F.expr("unix_micros(o_orderdate) div 86400000000").cast("bigint").alias("d"),
     )
     b = o.withColumn("band", F.expr("cents div 1000000"))
@@ -2348,15 +2349,13 @@ def rel_ols_coefficients(spark: SparkSession, sf_dir: str) -> DataFrame:
     p the same partials feed a driver-side solve instead of Cramer.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    d38 = lambda c: c.cast("decimal(38,0)")
-    cents = lambda col: F.round(F.col(col) * F.lit(100.0)).cast("bigint")
     x = li.select(
-        d38(cents("l_quantity")).alias("q"),
-        d38(cents("l_discount")).alias("d"),
-        d38(cents("l_extendedprice")).alias("y"),
+        dec(fx("l_quantity"), 38, 0).alias("q"),
+        dec(fx("l_discount"), 38, 0).alias("d"),
+        dec(fx("l_extendedprice"), 38, 0).alias("y"),
     )
     m = x.agg(
-        d38(F.count(F.lit(1))).alias("n"),
+        dec(F.count(F.lit(1)), 38, 0).alias("n"),
         F.sum("q").alias("sq"),
         F.sum("d").alias("sd"),
         F.sum("y").alias("sy"),
@@ -2689,7 +2688,7 @@ def rel_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             (F.col("maxday") - F.max(day)).cast("bigint").alias("recency_days"),
             F.count(F.lit(1)).cast("bigint").alias("frequency"),
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
+            F.sum(fx("o_totalprice"))
             .cast("bigint")
             .alias("monetary_cents"),
         )
@@ -2771,7 +2770,7 @@ def rel_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.year("o_orderdate") * 12 + (F.month("o_orderdate") - 1))
         .cast("bigint")
         .alias("midx"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        fx("o_totalprice").alias("cents"),
     )
     cohort = o2.groupBy("o_custkey").agg(F.min("midx").alias("cohort_idx"))
     cell = (
@@ -3094,7 +3093,7 @@ def rel_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     c = li.select(
         "l_returnflag",
-        F.round(F.col("l_extendedprice") * 100, 0).cast("bigint").alias("cents"),
+        fx("l_extendedprice").alias("cents"),
         F.col("l_quantity").cast("bigint").alias("w"),
     )
     med = range_bucketed_weighted_median(c, ["l_returnflag"], "cents", "w")
@@ -3156,7 +3155,7 @@ def rel_growth_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.year("o_orderdate") * 12 + (F.month("o_orderdate") - 1))
             .cast("bigint")
             .alias("midx"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("c"),
+            fx("o_totalprice").alias("c"),
         )
         .groupBy("midx")
         .agg(
@@ -3268,7 +3267,7 @@ def rel_benford_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     # engines instead of exclusion (ADVICE r6)
     d = (
         o.select(
-            F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents")
+            fx("o_totalprice").alias("cents")
         )
         .filter(F.col("cents") >= 1)
         .select(
@@ -3437,7 +3436,7 @@ def rel_moving_annual_total(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.year("o_orderdate") * 12 + (F.month("o_orderdate") - 1))
             .cast("bigint")
             .alias("midx"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("c"),
+            fx("o_totalprice").alias("c"),
         )
         .groupBy("midx")
         .agg(F.sum("c").cast("bigint").alias("cents"))
@@ -3532,9 +3531,9 @@ def rel_clamped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderdate",
         F.when(
             F.col("o_orderstatus") == "F",
-            -F.round(F.col("o_totalprice") * 100, 0).cast("bigint"),
+            -fx("o_totalprice"),
         )
-        .otherwise(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
+        .otherwise(fx("o_totalprice"))
         .alias("delta"),
     )
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -3765,16 +3764,13 @@ def rel_mix_shift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     tm = obs.groupBy("midx").agg(F.sum("o_ms").cast("bigint").alias("t_m"))
     gs = obs.groupBy("s").agg(F.sum("o_ms").cast("bigint").alias("g_s"))
     nt = obs.agg(F.sum("o_ms").cast("bigint").alias("n"))
-    d38 = lambda c: c.cast("decimal(38,0)")
     j = (
         obs.join(tm, "midx")
         .join(F.broadcast(gs), "s")
         .join(F.broadcast(nt))
     )
-    num = d38(F.col("o_ms")) * d38(F.col("n")) - d38(F.col("t_m")) * d38(
-        F.col("g_s")
-    )
-    den = d38(F.col("n")) * d38(F.col("t_m")) * d38(F.col("g_s"))
+    num = dec("o_ms", 38, 0) * dec("n", 38, 0) - dec("t_m", 38, 0) * dec("g_s", 38, 0)
+    den = dec("n", 38, 0) * dec("t_m", 38, 0) * dec("g_s", 38, 0)
     D = lambda c: c.cast("double")
     term_fp = F.round(F.round(D(num * num) / D(den), 6) * F.lit(1e6), 0).cast(
         "bigint"
@@ -3841,7 +3837,7 @@ def rel_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.select(
             "o_custkey",
             F.year("o_orderdate").cast("bigint").alias("y"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("c"),
+            fx("o_totalprice").alias("c"),
         )
         .groupBy("o_custkey", "y")
         .agg(F.sum("c").cast("bigint").alias("cents"))
@@ -4019,7 +4015,6 @@ def rel_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
-    d38 = lambda x: x.cast("decimal(38,0)")
     nrev = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -4094,19 +4089,12 @@ def rel_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
-    d38 = lambda c: c.cast("decimal(38,0)")
     pts = li.join(F.broadcast(p), li.l_partkey == p.p_partkey).select(
         "p_brand",
         F.round(F.col("l_discount") * 100, 0).cast("decimal(38,0)").alias("x"),
         F.round(F.col("l_quantity"), 0).cast("decimal(38,0)").alias("y"),
     )
-    m = pts.groupBy("p_brand").agg(
-        d38(F.count(F.lit(1))).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
+    m = pts.groupBy("p_brand").agg(*moment_sums("x", "y"))
     D = lambda c: c.cast("double")
     var = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     slope = D(F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / D(var)
@@ -4188,7 +4176,7 @@ def rel_price_volume_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.round(F.col("l_quantity"), 0).cast("bigint"))
             .cast("bigint")
             .alias("qty"),
-            F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint"))
+            F.sum(fx("l_extendedprice"))
             .cast("bigint")
             .alias("rev_c"),
         )
@@ -4329,7 +4317,7 @@ def rel_loo_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
         "l_returnflag",
-        F.round(F.col("l_extendedprice") * 100, 0).cast("bigint").alias("cents"),
+        fx("l_extendedprice").alias("cents"),
     )
     g = c.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_g"),
@@ -4493,7 +4481,7 @@ def rel_duplicate_payments(spark: SparkSession, sf_dir: str) -> DataFrame:
     o2 = o.select(
         "o_orderkey",
         "o_custkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        fx("o_totalprice").alias("cents"),
         F.expr("unix_micros(o_orderdate) div 86400000000")
         .cast("bigint")
         .alias("d"),
@@ -4594,7 +4582,7 @@ def rel_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.year("o_orderdate") * 12 + (F.month("o_orderdate") - 1))
         .cast("bigint")
         .alias("midx"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        fx("o_totalprice").alias("cents"),
     )
     first_m = o2.groupBy("o_custkey").agg(F.min("midx").cast("bigint").alias("fm"))
     j = o2.join(first_m, "o_custkey")
@@ -4697,7 +4685,6 @@ def rel_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
-    d38 = lambda x: x.cast("decimal(38,0)")
     pm = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy(
@@ -4713,7 +4700,7 @@ def rel_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     var_m = pm.groupBy("l_partkey").agg(
-        d38(F.count(F.lit(1))).alias("n"),
+        dec(F.count(F.lit(1)), 38, 0).alias("n"),
         F.sum("q").alias("s1"),
         F.sum(F.col("q") * F.col("q")).alias("s2"),
     )
@@ -4805,14 +4792,13 @@ def rel_numeric_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
     series-corr contract applied column-wise instead of series-wise.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    d38 = lambda x: x.cast("decimal(38,0)")
     c = li.select(
         F.round(F.col("l_quantity"), 0).cast("decimal(38,0)").alias("q"),
         F.round(F.col("l_extendedprice") * 100, 0).cast("decimal(38,0)").alias("p"),
         F.round(F.col("l_discount") * 100, 0).cast("decimal(38,0)").alias("d"),
     )
     m = c.agg(
-        d38(F.count(F.lit(1))).alias("n"),
+        dec(F.count(F.lit(1)), 38, 0).alias("n"),
         F.sum("q").alias("sq"), F.sum("p").alias("sp"), F.sum("d").alias("sd"),
         F.sum(F.col("q") * F.col("q")).alias("sqq"),
         F.sum(F.col("p") * F.col("p")).alias("spp"),

@@ -21,7 +21,7 @@ from ..operators.dedup import (
     simhash_hamming_neighbors,
     tokenize,
 )
-from ..functions import eval_once, md5_u32, sql_md5_u32
+from ..functions import eval_once, fx, md5_u32, moment_sums, sql_md5_u32
 from ..operators.graph import connected_components
 from ..operators.textfns import (
     LANG_STOPWORDS,
@@ -3185,18 +3185,10 @@ def doc_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = within.join(F.broadcast(off), "band").select(
         "f", (F.col("offset") + F.col("rw")).alias("r")
     )
-    fp6 = lambda c: F.round(F.round(F.log(c.cast("double")), 6) * F.lit(1e6), 0).cast(
-        "long"
-    )
-    d38 = lambda c: c.cast("decimal(38,0)")
-    pts = ranked.select(fp6(F.col("r")).alias("x"), fp6(F.col("f")).alias("y"))
-    m = pts.agg(
-        d38(F.count(F.lit(1))).alias("n"),
-        F.sum(d38(F.col("x"))).alias("sx"),
-        F.sum(d38(F.col("y"))).alias("sy"),
-        F.sum(d38(F.col("x")) * d38(F.col("y"))).alias("sxy"),
-        F.sum(d38(F.col("x")) * d38(F.col("x"))).alias("sxx"),
-    )
+    m = ranked.select(
+        fx(F.round(F.log(F.col("r").cast("double")), 6), 6).alias("x"),
+        fx(F.round(F.log(F.col("f").cast("double")), 6), 6).alias("y"),
+    ).agg(*moment_sums("x", "y"))
     D = lambda c: c.cast("double")
     slope = D(F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / D(
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")

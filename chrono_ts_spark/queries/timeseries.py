@@ -8,7 +8,9 @@ integer epoch-µs arithmetic, timestamps rendered as strings.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from functools import partial
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -17,17 +19,18 @@ from ..functions import (
     HLL_WMOD,
     SQL_HLL_BITLEN,
     SQL_HLL_TERM,
-    davg,
     dec,
     dsum,
     favg,
     fsum,
+    fx,
     hll_estimate,
     hll_reg,
     hll_rho,
     hll_term,
     hll_w,
     md5_u32,
+    moment_sums,
     sql_davg,
     sql_dsum,
     sql_dsum_sq,
@@ -41,13 +44,42 @@ from ..functions import (
 from ..operators import asof_join, gapfill
 from ..operators.rangejoin import interval_join, range_join, range_join_count
 from ..operators.rate import rate
-from ..operators.changepoint import cusum
+from ..operators.changepoint import binseg_l2, cusum, pelt_l2
 from ..operators.scd import scd2
 from ..operators.sessionize import sessionize
 from ..operators.topk import top_k_per_group
 from . import query
 
 T0, T1 = "2024-01-01 00:00:00", "2024-02-01 00:00:00"
+
+
+def _hour() -> Column:
+    """Epoch hour index of ``ts``, the key of every hourly series
+    (oracle: ``CAST(epoch_us(ts) // 3600000000 AS BIGINT)``)."""
+    return F.expr("unix_micros(ts) div 3600000000").cast("bigint")
+
+
+def _hourly_cents(ev: DataFrame, *aggs: Column) -> DataFrame:
+    """The per-(event_type, h) hourly series: ``c`` is the exact bigint
+    sum of the value in cents (oracle: ``CAST(SUM(CAST(round(value *
+    100, 0) AS BIGINT)) AS BIGINT)``). ``aggs`` ride in the same
+    aggregate. Callers rename or cast ``c``."""
+    return (
+        ev.select("event_type", _hour().alias("h"), fx("value").alias("c0"))
+        .groupBy("event_type", "h")
+        .agg(F.sum("c0").cast("bigint").alias("c"), *aggs)
+    )
+
+
+def _bucket_cents(ev: DataFrame) -> DataFrame:
+    """The hourly series keyed by ``time_bucket`` start: (bucket,
+    event_type, v), v the exact bigint cents sum (the ``hourly`` CTE
+    of the correlation oracles)."""
+    return (
+        ev.select(time_bucket("ts", 3600).alias("bucket"), "event_type", fx("value").alias("c"))
+        .groupBy("bucket", "event_type")
+        .agg(F.sum("c").cast("bigint").alias("v"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1907,7 +1939,7 @@ def ts_qdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     hist_rows = (
         ev.groupBy(
-            F.round(F.col("value") * 100.0, 0).cast("bigint").alias("node")
+            fx("value").alias("node")
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
@@ -2252,12 +2284,11 @@ def ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead(F.unix_micros("ts")).over(w).alias("t_next"),
     ).filter(F.col("t_next").isNotNull())
     d = s.withColumn("dur", F.col("t_next") - F.col("t"))
-    cents = F.round(F.col("value") * F.lit(100.0)).cast("bigint")
     return d.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_intervals"),
         F.sum("dur").cast("bigint").alias("span_us"),
         (
-            F.sum((cents * F.col("dur")).cast("decimal(38,0)")).cast("double")
+            F.sum(dec(fx("value") * F.col("dur"), 38, 0)).cast("double")
             / F.sum("dur").cast("double")
             / F.lit(100.0)
         ).alias("twa"),
@@ -2317,29 +2348,16 @@ def ts_series_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     alignment via inner bucket join = "hours where both types active".
     """
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * F.lit(100.0)).cast("bigint")
-    hourly = (
-        ev.select(time_bucket("ts", 3600).alias("bucket"), "event_type", cents.alias("c"))
-        .groupBy("bucket", "event_type")
-        .agg(F.sum("c").cast("bigint").alias("v"))
-    )
+    hourly = _bucket_cents(ev)
     a = hourly.select("bucket", F.col("event_type").alias("type_a"), F.col("v").alias("x"))
     b = hourly.select("bucket", F.col("event_type").alias("type_b"), F.col("v").alias("y"))
-    d38 = lambda c: c.cast("decimal(38,0)")
     m = (
         a.join(b, "bucket")
         .filter(F.col("type_a") < F.col("type_b"))
         .groupBy("type_a", "type_b")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(d38(F.col("x"))).alias("sx"),
-            F.sum(d38(F.col("y"))).alias("sy"),
-            F.sum(d38(F.col("x")) * d38(F.col("y"))).alias("sxy"),
-            F.sum(d38(F.col("x")) * d38(F.col("x"))).alias("sxx"),
-            F.sum(d38(F.col("y")) * d38(F.col("y"))).alias("syy"),
-        )
+        .agg(*moment_sums("x", "y"))
     )
-    n = d38(F.col("n"))
+    n = F.col("n")
     num = (n * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
     denx_i = n * F.col("sxx") - F.col("sx") * F.col("sx")
     deny_i = n * F.col("syy") - F.col("sy") * F.col("sy")
@@ -2885,21 +2903,20 @@ def ts_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
     wp = Window.partitionBy("user_id")
     o = ev.select(
         "user_id",
-        F.round(F.col("value") * F.lit(100.0)).cast("bigint").alias("c"),
+        fx("value").alias("c"),
         (F.row_number().over(w) - 1).alias("rn"),
         F.count(F.lit(1)).over(wp).alias("n"),
     )
-    d38 = lambda c: c.cast("decimal(38,0)")
     seg = o.groupBy(
         "user_id", F.expr("(rn * 8) div n").alias("segment"), "n"
     ).agg(
-        F.sum(d38(F.col("c"))).alias("s1"),
+        F.sum(dec("c", 38, 0)).alias("s1"),
         F.count(F.lit(1)).cast("bigint").alias("n_pts"),
     )
     u = o.groupBy("user_id").agg(
-        d38(F.count(F.lit(1))).alias("un"),
-        F.sum(d38(F.col("c"))).alias("s"),
-        F.sum(d38(F.col("c")) * d38(F.col("c"))).alias("q"),
+        dec(F.count(F.lit(1)), 38, 0).alias("un"),
+        F.sum(dec("c", 38, 0)).alias("s"),
+        F.sum(dec("c", 38, 0) * dec("c", 38, 0)).alias("q"),
     )
     var_num = F.col("un") * F.col("q") - F.col("s") * F.col("s")
     zscore = F.round(
@@ -3160,12 +3177,7 @@ def ts_dtw_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_package_on_workers(spark)
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * F.lit(100.0)).cast("bigint")
-    hourly = (
-        ev.select(time_bucket("ts", 3600).alias("bucket"), "event_type", cents.alias("c"))
-        .groupBy("bucket", "event_type")
-        .agg(F.sum("c").cast("bigint").alias("v"))
-    )
+    hourly = _bucket_cents(ev)
     ta = hourly.select(F.col("event_type").alias("type_a")).distinct()
     tb = hourly.select(F.col("event_type").alias("type_b")).distinct()
     pairs = ta.join(tb, F.col("type_a") < F.col("type_b"))
@@ -3324,6 +3336,66 @@ LEFT JOIN pre p_lo0 ON p_lo0.user_id = s.user_id AND p_lo0.rn = s.lo
 """
 
 
+def _segment_per_user(ev: DataFrame, solve) -> DataFrame:
+    """One row per segment of each user's value series, split by
+    ``solve(cents, beta)`` (interior changepoint indices, ascending):
+    the runner of ts_pelt_segments, ts_pelt_bounded and
+    ts_binseg_segments, which differ only in the solver.
+
+    One shuffle on user_id into the sanctioned sequential boundary.
+    Rows sort by (ts, event_id); the penalty is beta = 2*var*ln n.
+    """
+    from ..session import ensure_package_on_workers
+
+    ensure_package_on_workers(ev.sparkSession)
+
+    def run(pdf):
+        import math
+
+        import numpy as np
+        import pandas as pd
+
+        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort").reset_index(
+            drop=True
+        )
+        # half-away-from-zero cents, NOT np.round: banker's rounding
+        # diverges from the oracle's SQL round() on exact half-cent
+        # doubles (0.125*100 = 12.5 -> np 12, SQL 13); floor(|v|+0.5)
+        # is SQL round's semantics and safe in this magnitude range
+        v100 = pdf["value"].to_numpy(dtype="float64") * 100.0
+        xs = np.sign(v100) * np.floor(np.abs(v100) + 0.5)
+        n = len(xs)
+        # exact-moment variance, NOT np.var: the pairwise-summed mean
+        # of squared deviations inside np.var is accumulation-order-
+        # dependent, while q - s^2/n over exact integer moments is a
+        # fixed correctly-rounded op chain the SQL oracle replays
+        s_tot = float(xs.sum())
+        q_tot = float((xs * xs).sum())
+        var = (q_tot - s_tot * s_tot / n) / n if n > 0 else 0.0
+        beta = 2.0 * var * math.log(n) if n > 1 and var > 0 else 1.0
+        bounds = [0] + solve(xs, beta) + [n]
+        rows = []
+        for i in range(len(bounds) - 1):
+            lo, hi = bounds[i], bounds[i + 1]
+            rows.append(
+                {
+                    "user_id": pdf["user_id"].iloc[0],
+                    "seg_idx": i,
+                    "start_ts_s": pdf["ts"].iloc[lo].strftime("%Y-%m-%d %H:%M:%S"),
+                    "end_ts_s": pdf["ts"].iloc[hi - 1].strftime("%Y-%m-%d %H:%M:%S"),
+                    "n_pts": hi - lo,
+                    "mean_cents": float(xs[lo:hi].sum() / (hi - lo)),
+                }
+            )
+        return pd.DataFrame(rows)
+
+    return ev.select("user_id", "event_id", "ts", "value").groupBy("user_id").applyInPandas(
+        run,
+        "user_id bigint, seg_idx int, start_ts_s string, end_ts_s string, "
+        "n_pts long, mean_cents double",
+    )
+
+
 @query(
     "ts_pelt_segments",
     oracle=_pelt_oracle(),
@@ -3350,58 +3422,7 @@ def ts_pelt_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     block comment above _pelt_oracle; pytest additionally pins exact
     equality with the unpruned O(n^2) DP on planted and random series.
     """
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    ev = load_table(spark, sf_dir, "events")
-
-    def run(pdf):
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        from chrono_ts_spark.operators.changepoint import pelt_l2
-
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort").reset_index(
-            drop=True
-        )
-        # half-away-from-zero cents, NOT np.round: banker's rounding
-        # diverges from the oracle's SQL round() on exact half-cent
-        # doubles (0.125*100 = 12.5 -> np 12, SQL 13); floor(|v|+0.5)
-        # is SQL round's semantics and safe in this magnitude range
-        v100 = pdf["value"].to_numpy(dtype="float64") * 100.0
-        xs = np.sign(v100) * np.floor(np.abs(v100) + 0.5)
-        n = len(xs)
-        # exact-moment variance, NOT np.var: the pairwise-summed mean
-        # of squared deviations inside np.var is accumulation-order-
-        # dependent, while q - s^2/n over exact integer moments is a
-        # fixed correctly-rounded op chain the SQL oracle replays
-        s_tot = float(xs.sum())
-        q_tot = float((xs * xs).sum())
-        var = (q_tot - s_tot * s_tot / n) / n if n > 0 else 0.0
-        beta = 2.0 * var * math.log(n) if n > 1 and var > 0 else 1.0
-        bounds = [0] + pelt_l2(xs, beta) + [n]
-        rows = []
-        for i in range(len(bounds) - 1):
-            lo, hi = bounds[i], bounds[i + 1]
-            rows.append(
-                {
-                    "user_id": pdf["user_id"].iloc[0],
-                    "seg_idx": i,
-                    "start_ts_s": pdf["ts"].iloc[lo].strftime("%Y-%m-%d %H:%M:%S"),
-                    "end_ts_s": pdf["ts"].iloc[hi - 1].strftime("%Y-%m-%d %H:%M:%S"),
-                    "n_pts": hi - lo,
-                    "mean_cents": float(xs[lo:hi].sum() / (hi - lo)),
-                }
-            )
-        return pd.DataFrame(rows)
-
-    return ev.select("user_id", "event_id", "ts", "value").groupBy("user_id").applyInPandas(
-        run,
-        "user_id bigint, seg_idx int, start_ts_s string, end_ts_s string, "
-        "n_pts long, mean_cents double",
-    )
+    return _segment_per_user(load_table(spark, sf_dir, "events"), pelt_l2)
 
 
 # W12 scale path (r7): bounded-lookback PELT — the named swap from the
@@ -3427,57 +3448,8 @@ def ts_pelt_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring, exactly where pelt_l2 applies it; the equals-exact-PELT
     pytest remains.
     """
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    ev = load_table(spark, sf_dir, "events")
-
-    def run(pdf):
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        from chrono_ts_spark.operators.changepoint import pelt_l2
-
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort").reset_index(
-            drop=True
-        )
-        # half-away-from-zero cents, NOT np.round: banker's rounding
-        # diverges from the oracle's SQL round() on exact half-cent
-        # doubles (0.125*100 = 12.5 -> np 12, SQL 13); floor(|v|+0.5)
-        # is SQL round's semantics and safe in this magnitude range
-        v100 = pdf["value"].to_numpy(dtype="float64") * 100.0
-        xs = np.sign(v100) * np.floor(np.abs(v100) + 0.5)
-        n = len(xs)
-        # exact-moment variance, NOT np.var: the pairwise-summed mean
-        # of squared deviations inside np.var is accumulation-order-
-        # dependent, while q - s^2/n over exact integer moments is a
-        # fixed correctly-rounded op chain the SQL oracle replays
-        s_tot = float(xs.sum())
-        q_tot = float((xs * xs).sum())
-        var = (q_tot - s_tot * s_tot / n) / n if n > 0 else 0.0
-        beta = 2.0 * var * math.log(n) if n > 1 and var > 0 else 1.0
-        bounds = [0] + pelt_l2(xs, beta, max_lookback=_PELT_L) + [n]
-        rows = []
-        for i in range(len(bounds) - 1):
-            lo, hi = bounds[i], bounds[i + 1]
-            rows.append(
-                {
-                    "user_id": pdf["user_id"].iloc[0],
-                    "seg_idx": i,
-                    "start_ts_s": pdf["ts"].iloc[lo].strftime("%Y-%m-%d %H:%M:%S"),
-                    "end_ts_s": pdf["ts"].iloc[hi - 1].strftime("%Y-%m-%d %H:%M:%S"),
-                    "n_pts": hi - lo,
-                    "mean_cents": float(xs[lo:hi].sum() / (hi - lo)),
-                }
-            )
-        return pd.DataFrame(rows)
-
-    return ev.select("user_id", "event_id", "ts", "value").groupBy("user_id").applyInPandas(
-        run,
-        "user_id bigint, seg_idx int, start_ts_s string, end_ts_s string, "
-        "n_pts long, mean_cents double",
+    return _segment_per_user(
+        load_table(spark, sf_dir, "events"), partial(pelt_l2, max_lookback=_PELT_L)
     )
 
 
@@ -3612,53 +3584,7 @@ def ts_binseg_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE — see _binseg_oracle. One shuffle on user_id into
     the sanctioned sequential boundary, same as ts_pelt_segments.
     """
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    ev = load_table(spark, sf_dir, "events")
-
-    def run(pdf):
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        from chrono_ts_spark.operators.changepoint import binseg_l2
-
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort").reset_index(
-            drop=True
-        )
-        # same determinism idioms as ts_pelt_segments: half-away cents
-        # (SQL round semantics) and exact-moment variance (a fixed
-        # correctly-rounded op chain, unlike np.var's pairwise sums)
-        v100 = pdf["value"].to_numpy(dtype="float64") * 100.0
-        xs = np.sign(v100) * np.floor(np.abs(v100) + 0.5)
-        n = len(xs)
-        s_tot = float(xs.sum())
-        q_tot = float((xs * xs).sum())
-        var = (q_tot - s_tot * s_tot / n) / n if n > 0 else 0.0
-        beta = 2.0 * var * math.log(n) if n > 1 and var > 0 else 1.0
-        bounds = [0] + binseg_l2(xs, beta) + [n]
-        rows = []
-        for i in range(len(bounds) - 1):
-            lo, hi = bounds[i], bounds[i + 1]
-            rows.append(
-                {
-                    "user_id": pdf["user_id"].iloc[0],
-                    "seg_idx": i,
-                    "start_ts_s": pdf["ts"].iloc[lo].strftime("%Y-%m-%d %H:%M:%S"),
-                    "end_ts_s": pdf["ts"].iloc[hi - 1].strftime("%Y-%m-%d %H:%M:%S"),
-                    "n_pts": hi - lo,
-                    "mean_cents": float(xs[lo:hi].sum() / (hi - lo)),
-                }
-            )
-        return pd.DataFrame(rows)
-
-    return ev.select("user_id", "event_id", "ts", "value").groupBy("user_id").applyInPandas(
-        run,
-        "user_id bigint, seg_idx int, start_ts_s string, end_ts_s string, "
-        "n_pts long, mean_cents double",
-    )
+    return _segment_per_user(load_table(spark, sf_dir, "events"), binseg_l2)
 
 
 # ---------------------------------------------------------------------------
@@ -3856,7 +3782,7 @@ def ts_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = ev.crossJoin(F.broadcast(span)).select(
         "event_type",
-        F.round(F.col("value") * F.lit(100.0)).cast("bigint").alias("c"),
+        fx("value").alias("c"),
         (F.unix_micros("ts") * 2 <= F.col("mn") + F.col("mx"))
         .cast("int")
         .alias("is_a"),
@@ -3875,14 +3801,13 @@ def ts_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_a").over(w).alias("ca"),
         F.sum(F.lit(1) - F.col("is_a")).over(w).alias("cb"),
     )
-    d38 = lambda c: c.cast("decimal(38,0)")
     d = (
         cum.join(n, "event_type")
         .select(
             "event_type",
             "na",
             "nb",
-            F.abs(d38(F.col("ca")) * d38(F.col("nb")) - d38(F.col("cb")) * d38(F.col("na"))).alias(
+            F.abs(dec("ca", 38, 0) * dec("nb", 38, 0) - dec("cb", 38, 0) * dec("na", 38, 0)).alias(
                 "gap"
             ),
         )
@@ -3947,10 +3872,8 @@ def ts_welch_t_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     join runs on the 5-row moments table — free.
     """
     ev = load_table(spark, sf_dir, "events")
-    d38 = lambda c: c.cast("decimal(38,0)")
-    cents = d38(F.round(F.col("value") * F.lit(100.0)).cast("bigint"))
-    m = ev.select("event_type", cents.alias("c")).groupBy("event_type").agg(
-        d38(F.count(F.lit(1))).alias("n"),
+    m = ev.select("event_type", dec(fx("value"), 38, 0).alias("c")).groupBy("event_type").agg(
+        dec(F.count(F.lit(1)), 38, 0).alias("n"),
         F.sum("c").alias("s"),
         F.sum(F.col("c") * F.col("c")).alias("q"),
     )
@@ -4189,7 +4112,7 @@ def ts_gorilla_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     t = F.expr("unix_micros(ts) div 1000000")
-    c = F.round(F.col("value") * F.lit(100.0)).cast("bigint")
+    c = fx("value")
     s = ev.select(
         "user_id",
         t.alias("t"),
@@ -4306,12 +4229,7 @@ def ts_xcorr_best_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically.
     """
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * F.lit(100.0)).cast("bigint")
-    hourly = (
-        ev.select(time_bucket("ts", 3600).alias("bucket"), "event_type", cents.alias("c"))
-        .groupBy("bucket", "event_type")
-        .agg(F.sum("c").cast("bigint").alias("v"))
-    )
+    hourly = _bucket_cents(ev)
     shifted = hourly.select(
         "event_type", "v", "bucket",
         F.explode(F.sequence(F.lit(-6), F.lit(6))).alias("l"),
@@ -4326,21 +4244,13 @@ def ts_xcorr_best_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = hourly.select(
         F.col("event_type").alias("type_a"), F.col("bucket").alias("k"), F.col("v").alias("x")
     )
-    d38 = lambda col: col.cast("decimal(38,0)")
     m = (
         a.join(shifted, "k")
         .filter(F.col("type_a") < F.col("type_b"))
         .groupBy("type_a", "type_b", "l")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(d38(F.col("x"))).alias("sx"),
-            F.sum(d38(F.col("y"))).alias("sy"),
-            F.sum(d38(F.col("x")) * d38(F.col("y"))).alias("sxy"),
-            F.sum(d38(F.col("x")) * d38(F.col("x"))).alias("sxx"),
-            F.sum(d38(F.col("y")) * d38(F.col("y"))).alias("syy"),
-        )
+        .agg(*moment_sums("x", "y"))
     )
-    n = d38(F.col("n"))
+    n = F.col("n")
     num = (n * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
     denx = n * F.col("sxx") - F.col("sx") * F.col("sx")
     deny = n * F.col("syy") - F.col("sy") * F.col("sy")
@@ -4739,15 +4649,8 @@ def ts_dominant_period(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_package_on_workers(spark)
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * F.lit(100.0)).cast("bigint")
-    hourly = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").alias("h"),
-            cents.alias("c"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.sum("c").cast("double").alias("y"))
+    hourly = _hourly_cents(ev).select(
+        "event_type", "h", F.col("c").cast("double").alias("y")
     )
 
     def run(pdf):
@@ -4916,7 +4819,7 @@ def ts_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = (
         ev.select(
             "event_type",
-            F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
+            _hour().alias("h"),
             (F.col("value") > 300.0).cast("int").alias("is_fail"),
         )
         .groupBy("event_type", "h")
@@ -5006,7 +4909,7 @@ def ts_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "ts",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        fx("value").alias("cents"),
     )
     win = (
         Window.partitionBy("user_id")
@@ -5182,18 +5085,9 @@ def ts_multi_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded inputs.
     """
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("c"),
-        )
-        .groupBy("event_type", "h")
-        .agg(
-            F.sum("c").cast("bigint").alias("cents"),
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-        )
-    )
+    hourly = _hourly_cents(
+        ev, F.count(F.lit(1)).cast("bigint").alias("n")
+    ).withColumnRenamed("c", "cents")
     # No persist: the three tier branches share the hourly agg's
     # identical Exchange subplan, so Spark reuses the shuffle
     # (ReusedExchange x2 in the physical plan — verified) and the raw
@@ -5276,15 +5170,7 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     averaging a shorter window.
     """
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("c"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.sum("c").cast("bigint").alias("cents"))
-    )
+    hourly = _hourly_cents(ev).withColumnRenamed("c", "cents")
     w = Window.partitionBy("event_type").orderBy("h").rangeBetween(-12, 12)
     tr = hourly.select(
         "event_type",
@@ -5365,7 +5251,7 @@ def ts_top_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select(
             "event_type",
             F.expr("unix_micros(ts) div 86400000000").cast("bigint").alias("d"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("c"),
+            fx("value").alias("c"),
         )
         .groupBy("event_type", "d")
         .agg(F.sum("c").cast("bigint").alias("cents"))
@@ -5633,7 +5519,7 @@ def ts_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.col("event_id").alias("p_id"),
         F.unix_micros("ts").alias("p_us"),
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        fx("value").alias("cents"),
     )
     c = ev.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),
@@ -5786,15 +5672,14 @@ def ts_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         (F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)).alias("gap"),
     ).filter(F.col("gap").isNotNull())
-    d38 = lambda c: c.cast("decimal(38,0)")
     m = g.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("gap").cast("bigint").alias("s1_b"),
-        F.sum(d38(F.col("gap")) * d38(F.col("gap"))).alias("s2"),
+        F.sum(dec("gap", 38, 0) * dec("gap", 38, 0)).alias("s2"),
     )
     m = m.filter(F.col("n") >= 2)
     D = lambda c: c.cast("double")
-    disc = d38(F.col("n")) * F.col("s2") - d38(F.col("s1_b")) * d38(F.col("s1_b"))
+    disc = dec("n", 38, 0) * F.col("s2") - dec("s1_b", 38, 0) * dec("s1_b", 38, 0)
     root = F.sqrt(D(disc))
     return m.select(
         "user_id",
@@ -6050,15 +5935,7 @@ def ts_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     on (type, h+lag) — calendar-bounded inputs, never raw events.
     """
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("c0"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.sum("c0").cast("bigint").alias("c"))
-    )
+    hourly = _hourly_cents(ev)
     lags = spark.range(1, 13).select(F.col("id").cast("bigint").alias("lag"))
     a = hourly.crossJoin(F.broadcast(lags))
     b = hourly.select(
@@ -6071,15 +5948,7 @@ def ts_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("et_b") == F.col("event_type"))
         & (F.col("h_b") == F.col("h") + F.col("lag")),
     ).select("event_type", "lag", F.col("c").alias("x"), "y")
-    d38 = lambda c: c.cast("decimal(38,0)")
-    m = pairs.groupBy("event_type", "lag").agg(
-        d38(F.count(F.lit(1))).alias("n"),
-        F.sum(d38(F.col("x"))).alias("sx"),
-        F.sum(d38(F.col("y"))).alias("sy"),
-        F.sum(d38(F.col("x")) * d38(F.col("y"))).alias("sxy"),
-        F.sum(d38(F.col("x")) * d38(F.col("x"))).alias("sxx"),
-        F.sum(d38(F.col("y")) * d38(F.col("y"))).alias("syy"),
-    )
+    m = pairs.groupBy("event_type", "lag").agg(*moment_sums("x", "y"))
     D = lambda c: c.cast("double")
     vx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     vy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
@@ -6151,15 +6020,7 @@ def ts_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly table, fanned out by a 4-row broadcast.
     """
     ev = load_table(spark, sf_dir, "events")
-    base = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("c0"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.sum("c0").cast("bigint").alias("c"))
-    )
+    base = _hourly_cents(ev)
     h0 = base.groupBy(F.col("event_type").alias("et0")).agg(
         F.min("h").alias("hmin")
     )
@@ -6174,10 +6035,9 @@ def ts_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     coeff = j.groupBy(
         "event_type", "k", F.expr("i div (2 * halfw)").alias("parent")
     ).agg(F.sum(F.col("c") * sign).cast("bigint").alias("d"))
-    d38 = lambda c: c.cast("decimal(38,0)")
     return coeff.groupBy("event_type", F.col("k").cast("bigint").alias("level")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_coeffs"),
-        (F.sum(d38(F.col("d")) * d38(F.col("d"))).cast("double") / F.lit(1e8)).alias(
+        (F.sum(dec("d", 38, 0) * dec("d", 38, 0)).cast("double") / F.lit(1e8)).alias(
             "energy"
         ),
     )
@@ -6252,15 +6112,7 @@ def ts_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     clamps the floor-division bias at the boundary.
     """
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("c0"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.sum("c0").cast("bigint").alias("cents"))
-    )
+    hourly = _hourly_cents(ev).withColumnRenamed("c", "cents")
     w = Window.partitionBy("event_type").orderBy("h").rangeBetween(-12, 12)
     tr = hourly.select(
         "event_type",
@@ -6274,17 +6126,16 @@ def ts_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("h") % 24).alias("hod"),
         (F.lit(25) * F.col("cents") - F.col("trend_x25")).alias("d_x25"),
     )
-    d38 = lambda c: c.cast("decimal(38,0)")
     seas = det.groupBy("event_type", "hod").agg(
-        F.sum(d38(F.col("d_x25"))).alias("s_sum"),
-        d38(F.count(F.lit(1))).alias("s_n"),
+        F.sum(dec("d_x25", 38, 0)).alias("s_sum"),
+        dec(F.count(F.lit(1)), 38, 0).alias("s_n"),
     )
     j = det.join(F.broadcast(seas), ["event_type", "hod"])
-    resid_num = d38(F.col("d_x25")) * F.col("s_n") - F.col("s_sum")
+    resid_num = dec("d_x25", 38, 0) * F.col("s_n") - F.col("s_sum")
     parts = j.groupBy("event_type").agg(
-        d38(F.count(F.lit(1))).alias("n"),
-        F.sum(d38(F.col("d_x25")) * d38(F.col("d_x25"))).alias("ss_det"),
-        F.sum(d38(F.col("d_x25"))).alias("s_det"),
+        dec(F.count(F.lit(1)), 38, 0).alias("n"),
+        F.sum(dec("d_x25", 38, 0) * dec("d_x25", 38, 0)).alias("ss_det"),
+        F.sum(dec("d_x25", 38, 0)).alias("s_det"),
         F.sum(
             F.expr(
                 "CAST((CAST(d_x25 AS DECIMAL(38,0)) * s_n - s_sum)"
@@ -6363,15 +6214,7 @@ def ts_parkinson_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant is the 6dp-rounded double on both engines.
     """
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("c0"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.sum("c0").cast("bigint").alias("cents"))
-    )
+    hourly = _hourly_cents(ev).withColumnRenamed("c", "cents")
     daily = hourly.groupBy(
         "event_type", F.expr("h div 24").alias("d")
     ).agg(
@@ -6447,15 +6290,7 @@ def ts_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     end.
     """
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("c0"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.sum("c0").cast("bigint").alias("c"))
-    )
+    hourly = _hourly_cents(ev)
     w = Window.partitionBy("event_type").orderBy("h")
     nb = hourly.select(
         "event_type",
@@ -6663,7 +6498,7 @@ def ts_missing_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     hourly = ev.select(
         "event_type",
-        F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
+        _hour().alias("h"),
     ).distinct()
     w = Window.partitionBy("event_type").orderBy("h")
     g = hourly.select(
@@ -6732,7 +6567,7 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     nser = (
         ev.select(
             "event_type",
-            F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
+            _hour().alias("h"),
         )
         .distinct()
         .groupBy("event_type")
@@ -6821,13 +6656,12 @@ def ts_anova_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     final mirrored expressions.
     """
     ev = load_table(spark, sf_dir, "events")
-    d38 = lambda c: c.cast("decimal(38,0)")
     c = ev.select(
         "event_type",
         F.round(F.col("value") * 100, 0).cast("decimal(38,0)").alias("x"),
     )
     g = c.groupBy("event_type").agg(
-        d38(F.count(F.lit(1))).alias("n_g"),
+        dec(F.count(F.lit(1)), 38, 0).alias("n_g"),
         F.sum("x").alias("s_g"),
         F.sum(F.col("x") * F.col("x")).alias("ss_g"),
     )
@@ -6835,7 +6669,7 @@ def ts_anova_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_g").alias("n"),
         F.sum("s_g").alias("s"),
         F.sum("ss_g").alias("ss"),
-        d38(F.count(F.lit(1))).alias("k"),
+        dec(F.count(F.lit(1)), 38, 0).alias("k"),
         F.sum(F.expr("CAST((s_g * s_g) div n_g AS DECIMAL(38,0))")).alias(
             "sq_over_n"
         ),
@@ -6961,12 +6795,11 @@ def ts_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(u32 < _PB_CUTS[4], 4)
         .otherwise(5)
     )
-    d38 = lambda c: c.cast("decimal(38,0)")
     w = ev.crossJoin(F.broadcast(b)).select(
         "event_type",
         "b",
         F.round(F.col("value") * 100, 0).cast("decimal(38,0)").alias("x"),
-        d38(wt).alias("wt"),
+        dec(wt, 38, 0).alias("wt"),
     )
     rep = (
         w.groupBy("event_type", "b")
@@ -7066,7 +6899,7 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "ts",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        fx("value").alias("cents"),
     )
     w = (
         Window.partitionBy("user_id")
@@ -7197,14 +7030,8 @@ def ts_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_package_on_workers(spark)
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("c0"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.sum("c0").cast("double").alias("y"))
+    hourly = _hourly_cents(ev).select(
+        "event_type", "h", F.col("c").cast("double").alias("y")
     )
 
     def run(pdf):
@@ -7380,7 +7207,7 @@ def ts_quantile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = (
         ev.select(
             "event_type",
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+            fx("value").alias("cents"),
         )
         .groupBy("event_type", "cents")
         .agg(F.count(F.lit(1)).cast("bigint").alias("k"))
@@ -7481,15 +7308,7 @@ def ts_stl_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides with the sign reported separately.
     """
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("c0"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.sum("c0").cast("bigint").alias("cents"))
-    )
+    hourly = _hourly_cents(ev).withColumnRenamed("c", "cents")
     w = Window.partitionBy("event_type").orderBy("h").rangeBetween(-12, 12)
     tr = hourly.select(
         "event_type",
@@ -7504,10 +7323,9 @@ def ts_stl_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("h") % 24).alias("hod"),
         (F.lit(25) * F.col("cents") - F.col("trend_x25")).alias("d_x25"),
     )
-    d38 = lambda c: c.cast("decimal(38,0)")
     seas = det.groupBy("event_type", "hod").agg(
-        F.sum(d38(F.col("d_x25"))).alias("s_sum"),
-        d38(F.count(F.lit(1))).alias("s_n"),
+        F.sum(dec("d_x25", 38, 0)).alias("s_sum"),
+        dec(F.count(F.lit(1)), 38, 0).alias("s_n"),
     )
     resid = det.join(F.broadcast(seas), ["event_type", "hod"]).select(
         "event_type",
@@ -7518,7 +7336,7 @@ def ts_stl_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("r"),
     )
     mom = resid.groupBy("event_type").agg(
-        d38(F.count(F.lit(1))).alias("n"),
+        dec(F.count(F.lit(1)), 38, 0).alias("n"),
         F.sum("r").alias("s1"),
         F.sum(F.col("r") * F.col("r")).alias("s2"),
     )
@@ -7575,7 +7393,7 @@ def ts_rle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = fx("value")
     s = ev.select(
         "user_id",
         cents.alias("cents"),
@@ -7667,13 +7485,12 @@ def ts_value_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     every moment statistic in this repo uses).
     """
     ev = load_table(spark, sf_dir, "events")
-    d38 = lambda c: c.cast("decimal(38,0)")
     c = ev.select(
         "event_type",
         F.round(F.col("value") * 100, 0).cast("decimal(38,0)").alias("x"),
     )
     m = c.groupBy("event_type").agg(
-        d38(F.count(F.lit(1))).alias("n"),
+        dec(F.count(F.lit(1)), 38, 0).alias("n"),
         F.sum("x").alias("s1"),
         F.sum(F.col("x") * F.col("x")).alias("s2"),
         F.sum(F.col("x") * F.col("x") * F.col("x")).alias("s3"),
@@ -7768,7 +7585,7 @@ def ts_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "user_id",
             F.expr("unix_micros(ts) div 86400000000").cast("bigint").alias("day"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("c"),
+            fx("value").alias("c"),
         )
         .groupBy("user_id", "day")
         .agg(F.sum("c").cast("double").alias("q"))
@@ -7878,7 +7695,7 @@ def ts_expected_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     c = ev.select(
         "event_type",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        fx("value").alias("cents"),
     )
     hist = c.groupBy("event_type", "cents").agg(
         F.count(F.lit(1)).cast("bigint").alias("k")
@@ -7961,15 +7778,7 @@ def ts_naive_baselines(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded hourly table.
     """
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("c0"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.sum("c0").cast("bigint").alias("c"))
-    )
+    hourly = _hourly_cents(ev)
     prev = hourly.select(
         "event_type", (F.col("h") + 1).alias("h"), F.col("c").alias("prev_c")
     )
@@ -8058,12 +7867,11 @@ def ts_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     c = ev.filter(F.col("event_type").isin("error", "click")).select(
         (F.col("event_type") == "error").cast("int").alias("grp"),
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        fx("value").alias("cents"),
     )
-    d38 = lambda x: x.cast("decimal(38,0)")
     hist = c.groupBy("cents").agg(
-        d38(F.count(F.lit(1))).alias("ct"),
-        d38(F.sum("grp")).alias("c1"),
+        dec(F.count(F.lit(1)), 38, 0).alias("ct"),
+        dec(F.sum("grp"), 38, 0).alias("c1"),
     )
     # K_before via broadcast theta join over the bounded histogram
     other = hist.select(
@@ -8138,7 +7946,7 @@ def ts_record_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     expectation is display-only.
     """
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = fx("value")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -8224,19 +8032,10 @@ def ts_spearman_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly table.
     """
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("c0"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.sum("c0").cast("bigint").alias("c"))
-    )
-    d38 = lambda x: x.cast("decimal(38,0)")
+    hourly = _hourly_cents(ev)
     # per-series value histogram -> midrank x2 per value
     hist = hourly.groupBy("event_type", "c").agg(
-        d38(F.count(F.lit(1))).alias("ct")
+        dec(F.count(F.lit(1)), 38, 0).alias("ct")
     )
     other = hist.select(
         F.col("event_type").alias("o_et"),
@@ -8270,7 +8069,7 @@ def ts_spearman_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = x.join(y, "h").filter(F.col("type_a") < F.col("type_b"))
     m = pairs.groupBy("type_a", "type_b").agg(
-        d38(F.count(F.lit(1))).alias("n"),
+        dec(F.count(F.lit(1)), 38, 0).alias("n"),
         F.sum("rx").alias("sx"),
         F.sum("ry").alias("sy"),
         F.sum(F.col("rx") * F.col("ry")).alias("sxy"),
@@ -8351,17 +8150,15 @@ def ts_time_of_day_circular(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(unix_micros(ts) % 86400000000 AS DOUBLE)")
         * (2.0 * 3.141592653589793 / 86400000000.0)
     )
-    fp9 = lambda c: F.round(F.round(c, 9) * F.lit(1e9), 0).cast("bigint")
     t = ev.select(
         "event_type",
-        fp9(F.sin(theta)).alias("s_fp"),
-        fp9(F.cos(theta)).alias("c_fp"),
+        fx(F.round(F.sin(theta), 9), 9).alias("s_fp"),
+        fx(F.round(F.cos(theta), 9), 9).alias("c_fp"),
     )
-    d38 = lambda x: x.cast("decimal(38,0)")
     m = t.groupBy("event_type").agg(
-        d38(F.count(F.lit(1))).alias("n"),
-        F.sum(d38(F.col("s_fp"))).alias("ss"),
-        F.sum(d38(F.col("c_fp"))).alias("sc"),
+        dec(F.count(F.lit(1)), 38, 0).alias("n"),
+        F.sum(dec("s_fp", 38, 0)).alias("ss"),
+        F.sum(dec("c_fp", 38, 0)).alias("sc"),
     )
     D = lambda x: x.cast("double")
     ang = F.atan2(D(F.col("ss")), D(F.col("sc")))
@@ -8441,16 +8238,7 @@ def ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrored double expression.
     """
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("c0"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.sum("c0").cast("bigint").alias("c"))
-    )
-    d38 = lambda x: x.cast("decimal(38,0)")
+    hourly = _hourly_cents(ev)
 
     def diffs(k: int):
         b = hourly.select(
@@ -8458,10 +8246,10 @@ def ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return (
             hourly.join(b, ["event_type", "h"])
-            .select("event_type", d38(F.col("c2") - F.col("c")).alias("x"))
+            .select("event_type", dec(F.col("c2") - F.col("c"), 38, 0).alias("x"))
             .groupBy("event_type")
             .agg(
-                d38(F.count(F.lit(1))).alias("n"),
+                dec(F.count(F.lit(1)), 38, 0).alias("n"),
                 F.sum("x").alias("s1"),
                 F.sum(F.col("x") * F.col("x")).alias("s2"),
             )
@@ -8618,7 +8406,7 @@ def ts_effective_sample_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     nser = (
         ev.select(
             "event_type",
-            F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
+            _hour().alias("h"),
         )
         .distinct()
         .groupBy("event_type")
@@ -8693,15 +8481,7 @@ def ts_channel_breakouts(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the current row (1 PRECEDING); exact integer compares.
     """
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").cast("bigint").alias("h"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("c0"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.sum("c0").cast("bigint").alias("c"))
-    )
+    hourly = _hourly_cents(ev)
     w = Window.partitionBy("event_type").orderBy("h").rangeBetween(-24, -1)
     ch = hourly.select(
         "event_type",

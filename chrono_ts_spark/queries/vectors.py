@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions import davg, vec_cosine, vec_double, vec_norm_sq
+from ..functions import davg, dec, fx, vec_cosine, vec_double, vec_norm_sq
 from ..operators.similarity import brute_force_topk, lsh_bucket_topk
 from ..operators.topk import top_k_per_group
 from . import query
@@ -995,7 +995,6 @@ def emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Measured: 500k x 64 vectors in 43 s end to end pre-rewrite; the
     hierarchical path probes within the same envelope (BASELINE.md r7).
     """
-    from ..operators.clustering import hierarchical_kmeans_assign
     from ..session import ensure_package_on_workers
 
     ensure_package_on_workers(spark)
@@ -1562,15 +1561,14 @@ def emb_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("d_fp"),
     )
-    d38 = lambda c: c.cast("decimal(38,0)")
     mom = dfp.groupBy("label").agg(
-        d38(F.count(F.lit(1))).alias("n"),
-        F.sum(d38(F.col("d_fp"))).alias("s1"),
-        F.sum(d38(F.col("d_fp")) * d38(F.col("d_fp"))).alias("s2"),
+        dec(F.count(F.lit(1)), 38, 0).alias("n"),
+        F.sum(dec("d_fp", 38, 0)).alias("s1"),
+        F.sum(dec("d_fp", 38, 0) * dec("d_fp", 38, 0)).alias("s2"),
         F.max("d_fp").cast("bigint").alias("max_fp"),
     )
     j = dfp.join(F.broadcast(mom), "label")
-    lhs = F.col("n") * d38(F.col("d_fp")) - F.col("s1")
+    lhs = F.col("n") * dec("d_fp", 38, 0) - F.col("s1")
     is_out = (
         (lhs > 0)
         & (lhs * lhs > 4 * (F.col("n") * F.col("s2") - F.col("s1") * F.col("s1")))
@@ -1764,9 +1762,8 @@ def emb_label_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = exploded.groupBy("label", "pos").agg(
         F.round(davg("val", 18, 9), 6).alias("c")
     )
-    fp9 = lambda c: F.round(F.round(c, 9) * F.lit(1e9), 0).cast("bigint")
     norm = cent.groupBy("label").agg(
-        F.sum(fp9(F.col("c") * F.col("c"))).cast("bigint").alias("n_fp")
+        F.sum(fx(F.round(F.col("c") * F.col("c"), 9), 9)).cast("bigint").alias("n_fp")
     )
     a = cent.select(F.col("label").alias("label_a"), "pos", F.col("c").alias("ca"))
     b = cent.select(F.col("label").alias("label_b"), "pos", F.col("c").alias("cb"))
@@ -1774,7 +1771,7 @@ def emb_label_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, "pos")
         .filter(F.col("label_a") < F.col("label_b"))
         .groupBy("label_a", "label_b")
-        .agg(F.sum(fp9(F.col("ca") * F.col("cb"))).cast("bigint").alias("d_fp"))
+        .agg(F.sum(fx(F.round(F.col("ca") * F.col("cb"), 9), 9)).cast("bigint").alias("d_fp"))
     )
     na = norm.select(F.col("label").alias("label_a"), F.col("n_fp").alias("na_fp"))
     nb = norm.select(F.col("label").alias("label_b"), F.col("n_fp").alias("nb_fp"))
@@ -2270,12 +2267,12 @@ def emb_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = cent.filter(F.col("half") == "cur").select(
         "label", "pos", F.col("c").alias("cq")
     )
-    fp9 = lambda c: F.round(F.round(c, 9) * F.lit(1e9), 0).cast("bigint")
+    d = F.col("cr") - F.col("cq")
     diff = (
         r.join(q, ["label", "pos"])
         .groupBy("label")
         .agg(
-            F.sum(fp9((F.col("cr") - F.col("cq")) * (F.col("cr") - F.col("cq"))))
+            F.sum(fx(F.round(d * d, 9), 9))
             .cast("bigint")
             .alias("d2_fp")
         )
@@ -2558,9 +2555,8 @@ def emb_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("u_fp"),
         )
     )
-    d38 = lambda c: c.cast("decimal(38,0)")
     s = unit.groupBy("label", "pos").agg(
-        F.sum(d38(F.col("u_fp"))).alias("s_fp"),
+        F.sum(dec("u_fp", 38, 0)).alias("s_fp"),
         F.count(F.lit(1)).cast("bigint").alias("n64"),
     )
     D = lambda c: c.cast("double")

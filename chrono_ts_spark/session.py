@@ -5,8 +5,8 @@ Two contexts use this module:
 1. Our own tests / bench build a session via :func:`get_spark`.
 2. The verification driver hands us *its* session; we can only apply
    runtime-settable confs there — :func:`apply_runtime_confs` holds
-   exactly that subset and is called by every loader/query entry point
-   (idempotent, cheap).
+   exactly that subset and is called by every loader/query entry point;
+   it sets them once per session, so a caller's own later setting holds.
 """
 
 from __future__ import annotations
@@ -68,10 +68,16 @@ RUNTIME_CONFS: dict[str, str] = {
 # spark.sql.shuffle.partitions (same marker idiom as
 # ensure_package_on_workers).
 _SHUFFLE_SET_MARKER = "_chrono_shuffle_partitions_set"
+# SparkSession attribute: the confs below were applied to this session.
+_CONFS_SET_MARKER = "_chrono_runtime_confs_set"
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs; safe on a driver-owned session."""
+    """Apply runtime-settable confs once per session; safe on a
+    driver-owned session. Later calls return at once, so a value the
+    caller sets afterwards with ``spark.conf.set`` holds."""
+    if getattr(spark, _CONFS_SET_MARKER, False):
+        return spark
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -105,6 +111,7 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
             spark.conf.set("spark.sql.shuffle.partitions", "64")
     except Exception:
         pass
+    setattr(spark, _CONFS_SET_MARKER, True)
     return spark
 
 

@@ -32,72 +32,43 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from ..functions import time_bucket, ts_str
+from ..functions import ts_str
 from ..session import apply_runtime_confs
 
-def _observed_events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    """Footer-only batch read to learn how this fixture generation
-    encodes ``ts`` (the driver has rotated it: ns-as-bigint in early
-    rounds, naive µs → TIMESTAMP_NTZ since; see docs/determinism.md).
-    readStream requires a declared schema, so we declare whatever the
-    footer actually says and normalize afterwards — the same rule
-    ``catalog.load_table`` applies on the batch path (shared per-path
-    cache, so repeat replays skip the inference job)."""
-    from ..catalog import observed_schema
-
-    return observed_schema(spark, f"{sf_dir.rstrip('/')}/events.parquet")
-
-
 def _replay_source(spark: SparkSession, sf_dir: str) -> tuple[str, T.StructType]:
-    """The replayed files' glob (SPARK_GRAFT_REPLAY_GLOB, default
-    ``events.parquet``) and their observed schema."""
+    """The replayed files' glob (``catalog.events_files``: the one-file
+    fixture, else the time slices) and their observed schema.
+    readStream requires a declared schema, so the footer's own encoding
+    of ``ts`` is declared and normalized afterwards."""
+    from ..catalog import events_files, observed_schema
+
     apply_runtime_confs(spark)
-    glob_pat = os.environ.get("SPARK_GRAFT_REPLAY_GLOB", "events.parquet")
-    if glob_pat == "events.parquet":
-        return glob_pat, _observed_events_schema(spark, sf_dir)
-    import glob as _glob
-
-    from ..catalog import observed_schema
-
-    base = sf_dir.rstrip("/")
-    matches = sorted(_glob.glob(os.path.join(base, glob_pat)))
-    if not matches:
-        raise FileNotFoundError(
-            f"SPARK_GRAFT_REPLAY_GLOB={glob_pat!r} matches nothing "
-            f"under {base}"
-        )
-    return glob_pat, observed_schema(spark, matches[0])
+    pattern, schema_file = events_files(sf_dir)
+    return pattern, observed_schema(spark, schema_file)
 
 
 def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming DataFrame replaying <sf_dir>/events.parquet, with
-    ``ts`` normalized to TIMESTAMP regardless of the fixture encoding.
+    """Streaming DataFrame replaying the events of ``sf_dir``, with
+    ``ts`` normalized to TIMESTAMP as ``catalog.load_table`` does.
 
-    SPARK_GRAFT_REPLAY_GLOB (default ``events.parquet``) selects the
-    source files: the default replays the one-file fixture as a single
-    micro-batch (the premise the upsert/alert oracles assert via
-    ``assert_single_file_replay``); production posture sets it to a
-    multi-file pattern (e.g. ``slice_*.parquet`` over a time-sliced,
-    mtime-ordered layout) so maxFilesPerTrigger=1 replays one slice
-    per micro-batch and the watermark actually advances — the
+    The one-file fixture replays as a single micro-batch (the premise
+    the upsert/alert oracles assert via ``assert_single_file_replay``).
+    A time-sliced, mtime-ordered layout (``slice_*.parquet``, no
+    ``events.parquet``) replays one slice per micro-batch through
+    maxFilesPerTrigger=1, so the watermark actually advances: the
     bounded-state deployment shape the r12/r13 60M probes measure
     (docs/scale.md stream-stream join state retention)."""
-    base = sf_dir.rstrip("/")
+    from ..catalog import normalize_timestamps
+
     glob_pat, raw_schema = _replay_source(spark, sf_dir)
     raw = (
         spark.readStream.format("parquet")
         .schema(raw_schema)
         .option("pathGlobFilter", glob_pat)
         .option("maxFilesPerTrigger", "1")
-        .load(base)
+        .load(sf_dir.rstrip("/"))
     )
-    ts_type = dict((f.name, f.dataType.simpleString()) for f in raw_schema.fields)["ts"]
-    if ts_type == "bigint":
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if ts_type == "timestamp_ntz":
-        # Session TZ pinned UTC → value-identical cast (docs/determinism.md).
-        return raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return raw
+    return normalize_timestamps(raw, "events")
 
 
 def assert_single_file_replay(sf_dir: str) -> None:
@@ -114,21 +85,6 @@ def assert_single_file_replay(sf_dir: str) -> None:
     Local-path check only: the driver fixtures are local; remote URIs
     (no such fixture exists today) pass through un-checked.
     """
-    glob_env = os.environ.get("SPARK_GRAFT_REPLAY_GLOB", "events.parquet")
-    if glob_env != "events.parquet":
-        # The env var reroutes replay to sliced part files (multi-batch
-        # posture, e.g. after probing a sliced corpus in the same
-        # shell) — the single-micro-batch premise is gone even when
-        # events.parquet itself is a single regular file, so the
-        # watermark could drop rows. Surface it HERE as the loud error
-        # this guard exists for, not as an oracle hash mismatch
-        # downstream (ADVICE r13).
-        raise AssertionError(
-            "single-micro-batch replay premise violated: "
-            f"SPARK_GRAFT_REPLAY_GLOB={glob_env!r} is set — the upsert/"
-            "alert oracles require the default single-file replay; "
-            "unset it before running these queries"
-        )
     base = sf_dir.rstrip("/")
     if "://" in base:  # non-local URI — not a driver fixture layout
         return

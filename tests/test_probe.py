@@ -2,7 +2,8 @@
 (a temporary worktree) and this checkout, traced, over a registry
 query, a plan-heavy text query and a sink_dir streaming runner; and a
 SIGTERM to the harness stopping its worker and removing the worktree;
-and the per-operator commit split summed from canned progress."""
+and the per-operator commit split and the median batch time computed
+from canned progress."""
 
 from __future__ import annotations
 
@@ -55,6 +56,7 @@ def test_probe_pair_head_vs_checkout():
                 assert key in r, (r["arm"], r["query"], key)
         stream = [r for r in records if r["query"] == "run_sessionized_stream"]
         assert all(r["rows"] > 0 and r["streaming.batches"] >= 1 for r in stream)
+        assert all(r["streaming.batch_p50_s"] > 0 for r in stream)
         # the session window is one stateful operator; its layout is recorded
         assert all(len(r["numShufflePartitions"]) == 1 for r in stream)
         assert all(r["numStateStoreInstances"] == r["numShufflePartitions"] for r in stream)
@@ -155,3 +157,16 @@ def test_state_operators_sum_the_commit_split():
     assert probe.state_operators([{"batchId": 0}]) == {
         key: [] for key in got
     }
+
+
+def test_batch_p50_is_the_median_trigger_execution():
+    sys.path.insert(0, str(ROOT / "tools"))
+    import probe
+
+    progress = [
+        {"batchId": b, "durationMs": {"triggerExecution": ms, "addBatch": ms // 2}}
+        for b, ms in enumerate([900, 150, 500, 250])
+    ]
+    assert probe.batch_p50_s(progress) == 0.375
+    assert probe.batch_p50_s(progress[:3]) == 0.5
+    assert probe.batch_p50_s([]) == 0.0

@@ -198,18 +198,6 @@ class TestSingleFileReplayGuard:
         with pytest.raises(AssertionError, match="single-micro-batch"):
             assert_single_file_replay(str(tmp_path))
 
-    def test_replay_glob_env_fails_loudly(self, monkeypatch):
-        # SPARK_GRAFT_REPLAY_GLOB reroutes replay to sliced part files
-        # (multi-batch posture) even when events.parquet is a single
-        # regular file — a leaked env var (e.g. after probing a sliced
-        # corpus in the same shell) must trip THIS guard, not
-        # surface as an oracle hash mismatch (ADVICE r13).
-        from chrono_ts_spark.streaming.replay import assert_single_file_replay
-
-        monkeypatch.setenv("SPARK_GRAFT_REPLAY_GLOB", "events_slice_*.parquet")
-        with pytest.raises(AssertionError, match="SPARK_GRAFT_REPLAY_GLOB"):
-            assert_single_file_replay("/root/testdata/sf0.001")
-
 
 class TestCountTableQuantiles:
     def test_matches_percentile_aggregate(self, spark):

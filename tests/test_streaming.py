@@ -481,16 +481,15 @@ def test_cusum_stream_state_crosses_batches(spark, tmp_path, monkeypatch):
     # mu=10, sigma=2 -> slack=1, h=4 (h_sigma=2). Values of 13 add 2 per
     # step to s_plus; the alarm needs 3 steps, which only happens if
     # state survives the file boundary after 2 steps.
-    write_file("events.parquet", [(1, t(0), 5, "c", 13.0, "{}"),
-                                  (2, t(1), 5, "c", 13.0, "{}")])
-    write_file("events2.parquet", [(3, t(2), 5, "c", 13.0, "{}")])
+    write_file("slice_00000.parquet", [(1, t(0), 5, "c", 13.0, "{}"),
+                                       (2, t(1), 5, "c", 13.0, "{}")])
+    write_file("slice_00001.parquet", [(3, t(2), 5, "c", 13.0, "{}")])
 
     started = []
     start = replay.start_bounded
     monkeypatch.setattr(
         replay, "start_bounded", lambda w, s: started.append(start(w, s)) or started[-1]
     )
-    monkeypatch.setenv("SPARK_GRAFT_REPLAY_GLOB", "events*.parquet")
     out = run_cusum_stream(spark, str(src), mu=10.0, sigma=2.0, h_sigma=2.0)
     rows = {r.event_id: r for r in out.collect()}
     fed = [p["numInputRows"] for p in started[0].recentProgress if p["numInputRows"]]
@@ -563,13 +562,13 @@ def test_kalman_stream_equals_batch(spark, shared_buckets):
     assert s_rows == b_rows
 
 
-def test_replay_glob_sliced_equals_single_file(spark, tmp_path, monkeypatch):
-    """SPARK_GRAFT_REPLAY_GLOB (r13, production posture): replaying the
-    fixture as N time-sliced, mtime-ordered files — one micro-batch per
-    slice, so the watermark actually advances between batches — must
-    produce exactly the single-micro-batch output. Pins the knob that
-    the 60M state-retention probes (sliced corpora, docs/scale.md
-    "Re-measuring") run production posture through."""
+def test_replay_glob_sliced_equals_single_file(spark, tmp_path):
+    """Production posture (r13): replaying the fixture as N
+    time-sliced, mtime-ordered files (a layout with no events.parquet)
+    — one micro-batch per slice, so the watermark actually advances
+    between batches — must produce exactly the single-micro-batch
+    output. Pins the layout that the 60M state-retention probes
+    (sliced corpora, docs/scale.md "Re-measuring") run through."""
     from chrono_ts_spark.streaming.stateful import run_ema_stream
     from tools.probe import build_sliced_events
 
@@ -581,17 +580,17 @@ def test_replay_glob_sliced_equals_single_file(spark, tmp_path, monkeypatch):
     single = as_sorted_rows(
         run_ema_stream(spark, SF_SMOKE), ["event_id", "user_id", "ema"]
     )
-    monkeypatch.setenv("SPARK_GRAFT_REPLAY_GLOB", "slice_*.parquet")
     sliced = as_sorted_rows(
         run_ema_stream(spark, sliced_dir), ["event_id", "user_id", "ema"]
     )
     assert sliced == single
 
 
-def test_static_enrich_sliced_equals_single_file(spark, tmp_path, monkeypatch):
+def test_static_enrich_sliced_equals_single_file(spark, tmp_path):
     """The stream-static enrichment's static side reads the files the
-    replay glob selects, so a sliced layout (no events.parquet) runs
-    and enriches exactly like the single-file fixture."""
+    replay selects, so a sliced layout (no events.parquet) runs and
+    enriches exactly like the single-file fixture; ``load_table`` reads
+    the same slices as the events table."""
     from chrono_ts_spark.streaming.replay import run_stream_static_enrich
     from tools.probe import build_sliced_events
 
@@ -601,9 +600,12 @@ def test_static_enrich_sliced_equals_single_file(spark, tmp_path, monkeypatch):
     )
     cols = ["event_id", "user_id", "tier", "ts_s"]
     single = as_sorted_rows(run_stream_static_enrich(spark, SF_SMOKE), cols)
-    monkeypatch.setenv("SPARK_GRAFT_REPLAY_GLOB", "slice_*.parquet")
     sliced = as_sorted_rows(run_stream_static_enrich(spark, sliced_dir), cols)
     assert sliced == single and single
+    ev_cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
+    assert as_sorted_rows(load_table(spark, sliced_dir, "events"), ev_cols) == as_sorted_rows(
+        load_table(spark, SF_SMOKE, "events"), ev_cols
+    )
 
 
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
@@ -742,6 +744,32 @@ def test_bounded_stream_commits_a_changelog(spark, tmp_path, monkeypatch, runner
         assert "rocksdbChangeLogWriterCommitLatencyMs" in metrics, o["operatorName"]
         assert metrics.get("rocksdbFilesCopied", 0) == 0, o["operatorName"]
     assert spark.conf.get(CHANGELOG) == "true"
+
+
+def test_caller_setting_after_first_load_holds(spark, monkeypatch):
+    """The package sets its runtime confs once per session, so a value
+    the caller sets after the first load holds: with changelog commits
+    switched off, the replay commits RocksDB snapshots."""
+    from chrono_ts_spark.catalog import load_table
+    from chrono_ts_spark.streaming import replay
+
+    started = []
+    start = replay.start_bounded
+    monkeypatch.setattr(
+        replay, "start_bounded", lambda w, s: started.append(start(w, s)) or started[-1]
+    )
+    load_table(spark, SF_SMOKE, "events")
+    before = spark.conf.get(CHANGELOG)
+    spark.conf.set(CHANGELOG, "false")
+    try:
+        replay.run_stateful_dedup_stream(spark, SF_SMOKE)
+        assert spark.conf.get(CHANGELOG) == "false"
+    finally:
+        spark.conf.set(CHANGELOG, before)
+    ops = started[0].lastProgress["stateOperators"]
+    assert ops and any(o["numRowsTotal"] > 0 for o in ops), ops
+    for o in ops:  # each commit zipped a snapshot into the checkpoint
+        assert o["customMetrics"]["rocksdbZipFileBytesUncompressed"] > 0, o["operatorName"]
 
 
 def _failing(df, col):

@@ -14,8 +14,10 @@ removed: its output grows with the input and is never collected.
 
 ``--data DIR`` reads an existing corpus; ``--corpus key=N,...`` builds
 one (keys in CORPUS_KEYS) in a fresh JVM, cached under
-``.probe/corpus/``. A corpus with ``slice_*.parquet`` files replays one
-slice per micro-batch (``SPARK_GRAFT_REPLAY_GLOB``).
+``.probe/corpus/``. With ``slices`` its events are only time-range files
+``slice_*.parquet``: streaming runners replay one slice per micro-batch
+and batch queries read the slices as the events table
+(``catalog.events_files``).
 
 ``--arms`` (default ``.``): ``.`` is this checkout as it stands; any
 other git ref is checked out into a temporary worktree under
@@ -38,7 +40,8 @@ over its progress reports: ``commitTimeMs`` and the RocksDB
 (``COMMIT_SPLIT``). An exception fails that query in
 that arm; the run goes on. ``--trace`` turns on Spark's event log
 through the launch configuration, tags build and exec phases with
-``setJobGroup`` and adds the layer metrics of ``benchmark/tracing.py``.
+``setJobGroup`` and adds the layer metrics of ``benchmark/tracing.py``;
+a runner's record also gets ``streaming.batch_p50_s``.
 
 ``.probe/runs/<stamp>/`` gets ``runs.jsonl`` (one line per arm, pair
 and query), ``plans/<arm>/<query>.txt`` (EXPLAIN FORMATTED; for a
@@ -79,7 +82,6 @@ CORPUS_KEYS = {
     "events": 0, "users": 0, "docs": 0, "vocab": 100,
     "vectors": 0, "tpch": 0, "slices": 0,
 }
-SLICE_GLOB = "slice_*.parquet"
 
 
 # --- corpus builders (Spark-side: every row is generated on the executors)
@@ -294,6 +296,7 @@ def build_corpus(spec_json: str, out: str) -> None:
         build_events(spark, out, spec["events"], spec["users"])
         if spec["slices"]:
             build_sliced_events(spark, f"{out}/events.parquet", out, spec["slices"])
+            os.remove(f"{out}/events.parquet")
     if spec["docs"]:
         build_documents(spark, out, spec["docs"], spec["vocab"])
     if spec["vectors"]:
@@ -394,6 +397,14 @@ def state_operators(progress: list[dict]) -> dict:
             for i, o in enumerate(r[: len(ops)]):
                 out[key][i] += o.get(key, o.get("customMetrics", {}).get(key, 0))
     return out
+
+
+def batch_p50_s(progress: list[dict]) -> float:
+    """The median micro-batch time (``triggerExecution``) of a run's
+    progress reports in seconds, as ``benchmark/run.py`` computes
+    ``streaming.batch_p50_s``; 0.0 for a run with no report."""
+    times = [p["durationMs"]["triggerExecution"] / 1e3 for p in progress]
+    return statistics.median(times) if times else 0.0
 
 
 class Worker:
@@ -501,6 +512,7 @@ class Worker:
                 rec["queries.build_jobs"] = log.layer([f"build|{rec['query']}"])["spark.jobs"]
                 if progress is not None:
                     rec.update(tracing.streaming_layer(progress))
+                    rec["streaming.batch_p50_s"] = batch_p50_s(progress)
             self.save([d[0] for d in done])
 
     def save(self, records: list[dict]) -> None:
@@ -586,7 +598,7 @@ def checkouts(refs: set[str], stamp: str):
 
 
 def run_arm(arm: tuple, tree: Path, pair: int, targets: list[str], data: str,
-            env: dict, run_dir: Path, trace: bool) -> list[dict]:
+            run_dir: Path, trace: bool) -> list[dict]:
     label, _, arm_env = arm
     slug = re.sub(r"[^\w=-]", "_", label).strip("_") or "checkout"
     work = run_dir / f"work-{slug}-{pair}"
@@ -606,7 +618,7 @@ def run_arm(arm: tuple, tree: Path, pair: int, targets: list[str], data: str,
             "spark.eventLog.rolling.enabled": "false",
         }
     (work / "cfg.json").write_text(json.dumps(cfg))
-    rc = spawn(tree, "worker", [str(work / "cfg.json")], {**env, **arm_env}, confs)
+    rc = spawn(tree, "worker", [str(work / "cfg.json")], arm_env, confs)
     out = Path(cfg["out"])
     records = [json.loads(line) for line in out.read_text().splitlines()] if out.is_file() else []
     ran = {r["query"] for r in records}
@@ -674,7 +686,6 @@ def main(argv=None) -> int:
     data = Path(args.data).resolve() if args.data else ensure_corpus(parse_corpus(args.corpus))
     if not data.is_dir():
         raise SystemExit(f"--data: {data} is not a directory")
-    env = {"SPARK_GRAFT_REPLAY_GLOB": SLICE_GLOB} if any(data.glob(SLICE_GLOB)) else {}
     stamp = time.strftime("%Y%m%d-%H%M%S") + f"-{os.getpid()}"
     run_dir = PROBE / "runs" / stamp
     run_dir.mkdir(parents=True)
@@ -682,8 +693,8 @@ def main(argv=None) -> int:
     with checkouts({ref for _, ref, _ in arms}, stamp) as trees:
         for pair in range(args.pairs):
             for arm in arms if pair % 2 == 0 else arms[::-1]:
-                records += run_arm(arm, trees[arm[1]], pair, targets, str(data), env,
-                                   run_dir, args.trace)
+                records += run_arm(arm, trees[arm[1]], pair, targets, str(data), run_dir,
+                                   args.trace)
     (run_dir / "runs.jsonl").write_text("".join(json.dumps(r) + "\n" for r in records))
     summary = {"dir": str(run_dir), "data": str(data),
                **summarize(records, [a[0] for a in arms], targets, args.pairs)}
